@@ -11,6 +11,15 @@ import org.apache.spark.sql.functions._
   * explode → hash-aggregate pipelines with map-side partial aggregation;
   * candidate generation is always via equi-join on shingle/band keys —
   * never an all-pairs cross join.
+  *
+  * Lambda rule: a higher-order-function lambda (`transform`, `aggregate`,
+  * ...) reads only attributes and its own lambda variables. Spark runs
+  * lambda bodies interpretively, once per element, and subexpression
+  * elimination does not reach into them, so a row-invariant input such
+  * as `split(text, " ")` written inside the lambda is recomputed for
+  * every element: O(n²) per row. Project row-invariant work to a column
+  * first ([[tokenized]]). `PlanAuditSpec` checks this on every query's
+  * optimized plan.
   */
 object HashFns {
 
@@ -18,39 +27,34 @@ object HashFns {
     * filter docs with fewer than 3 tokens first (sequence() needs a
     * non-negative range).
     */
-  def shingles3(toks: Column): Column =
-    array_distinct(
-      transform(
-        sequence(lit(0), size(toks) - 3),
-        i => concat_ws(" ",
-          element_at(toks, i + 1),
-          element_at(toks, i + 2),
-          element_at(toks, i + 3))))
+  def shingles3(toks: Column): Column = array_distinct(ngrams(toks, 3))
 
   /** Exploded (doc_id, shingle) pairs for docs with >= 3 tokens. */
-  def explodedShingles(documents: DataFrame): DataFrame = {
-    val toks = TextFns.tokens(col("text"))
-    documents
-      .filter(size(toks) >= 3)
-      .select(col("doc_id"), explode(shingles3(toks)).as("s"))
-  }
+  def explodedShingles(documents: DataFrame): DataFrame =
+    explodedNgrams(documents, 3)
 
   /** Word n-grams in order, duplicates kept (for repetition counting).
     * Caller must ensure size(toks) >= n (sequence() needs a non-negative
-    * range).
+    * range), and pass `toks` as a projected column (see [[tokenized]]):
+    * the lambda reads it once per n-gram element.
     */
   def ngrams(toks: Column, n: Int): Column =
     transform(
       sequence(lit(0), size(toks) - n),
       i => concat_ws(" ", (1 to n).map(k => element_at(toks, i + k)): _*))
 
-  /** Exploded distinct (doc_id, n-gram) pairs for docs with >= n tokens. */
-  def explodedNgrams(documents: DataFrame, n: Int): DataFrame = {
-    val toks = TextFns.tokens(col("text"))
+  /** (doc_id, toks) for docs with >= `minTokens` tokens: the token array
+    * projected once per row, for the [[ngrams]] lambda to read.
+    */
+  def tokenized(documents: DataFrame, minTokens: Int): DataFrame =
     documents
-      .filter(size(toks) >= n)
-      .select(col("doc_id"), explode(array_distinct(ngrams(toks, n))).as("s"))
-  }
+      .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= minTokens)
+
+  /** Exploded distinct (doc_id, n-gram) pairs for docs with >= n tokens. */
+  def explodedNgrams(documents: DataFrame, n: Int): DataFrame =
+    tokenized(documents, n)
+      .select(col("doc_id"), explode(array_distinct(ngrams(col("toks"), n))).as("s"))
 
   /** MinHash signatures: one row per doc, long columns h0..h<k-1> (k <= 8).
     *

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Embedding-vector column functions: dot product, norm, cosine similarity
@@ -25,6 +25,21 @@ object VecFns {
 
   /** Squared L2 norm. */
   def norm2(a: Column): Column = dot(a, a)
+
+  /** `df` projected to (`key`, `out`), where `out` is `vec` as
+    * array<double> scaled to unit L2 norm. Zero vectors stay zero: no
+    * direction, they score 0 against everything. The norm is projected
+    * once per row first, so the scaling lambda reads only columns and
+    * its element (an inline `x / sqrt(norm2(d))` recomputes the norm
+    * per element: O(dim²) per vector).
+    */
+  def unitNormalized(df: DataFrame, key: Column, vec: Column, out: String): DataFrame = {
+    val (d, n) = (col("__d"), col("__n"))
+    df.select(key, asDouble(vec).as("__d"))
+      .withColumn("__n", sqrt(norm2(d)))
+      .withColumn(out, when(n > 0, transform(d, x => x / n)).otherwise(d))
+      .drop("__d", "__n")
+  }
 
   /** Cosine similarity in double precision. Backed by the fused
     * [[CosineSim]] expression: one array pass with three accumulators

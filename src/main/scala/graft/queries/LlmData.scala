@@ -767,9 +767,8 @@ object LlmData {
         .select(col("doc_id"), explode(toks).as("t"))
         .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
         .groupBy("doc_id").agg(max("c").as("t_max"), sum("c").as("t_tot"))
-      val bgTop = docs(s, dir)
-        .filter(size(toks) >= 2)
-        .select(col("doc_id"), explode(HashFns.ngrams(toks, 2)).as("b"))
+      val bgTop = HashFns.tokenized(docs(s, dir), 2)
+        .select(col("doc_id"), explode(HashFns.ngrams(col("toks"), 2)).as("b"))
         .groupBy("doc_id", "b").agg(count(lit(1)).as("c"))
         .groupBy("doc_id").agg(max("c").as("b_max"), sum("c").as("b_tot"))
       val dr = col("n_dist").cast("double") / col("n_tok")

@@ -52,11 +52,8 @@ object IvfAnn {
           (target.toDouble / n * 1000000L).ceil.toLong + 1L)
         nz.filter(pmod(xxhash64(col("vec_id"), lit(seed)), lit(1000000L)) < gate)
       }
-    val norm = {
-      val d = VecFns.asDouble(col("embedding"))
-      transform(d, x => x / sqrt(VecFns.norm2(d)))
-    }
-    val pts = sampled.select(col("vec_id"), norm.as("__nv"))
+    // nz holds only non-zero vectors, so the zero guard never fires here
+    val pts = VecFns.unitNormalized(sampled, col("vec_id"), col("embedding"), "__nv")
       .orderBy("vec_id") // stable order => deterministic fit
       .collect()
       .map(_.getSeq[Double](1).toArray)

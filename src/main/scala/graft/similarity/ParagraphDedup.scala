@@ -35,13 +35,21 @@ object ParagraphDedup {
     */
   def paragraphs(documents: DataFrame, paraSize: Int): DataFrame = {
     require(paraSize >= 3, "a paragraph must fit at least one 3-shingle")
-    val toks = TextFns.tokens(col("text"))
+    chunks(documents, paraSize).filter(size(col("ptoks")) >= 3)
+  }
+
+  /** Every fixed-size token chunk, the short tail included. The token
+    * array is projected once per document, so the slicing lambda reads
+    * only that column and its chunk index.
+    */
+  private def chunks(documents: DataFrame, paraSize: Int): DataFrame = {
+    val toks = col("toks")
     val nP = floor((size(toks) + lit(paraSize - 1)) / lit(paraSize)).cast("int")
     documents
+      .select(col("doc_id"), TextFns.tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         posexplode(transform(sequence(lit(0), nP - 1),
           i => slice(toks, i * paraSize + 1, lit(paraSize)))))
-      .filter(size(col("col")) >= 3)
       .select(col("doc_id"), col("pos").cast("long").as("para_idx"),
         col("col").as("ptoks"))
   }
@@ -128,16 +136,9 @@ object ParagraphDedup {
       minDocs: Int = 2): DataFrame = {
     require(minDocs >= 2,
       "minDocs < 2 would drop every signature-bearing chunk")
-    val toks = TextFns.tokens(col("text"))
-    val nP = floor((size(toks) + lit(paraSize - 1)) / lit(paraSize)).cast("int")
     // ALL chunks, including the signature-less tail paragraphs() drops —
     // removal must reassemble the full document, not just the scored part
-    val chunks = documents
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), nP - 1),
-          i => slice(toks, i * paraSize + 1, lit(paraSize)))))
-      .select(col("doc_id"), col("pos").cast("long").as("para_idx"),
-        col("col").as("ptoks"))
+    val all = chunks(documents, paraSize)
     val sigs = graft.CacheRegistry.track(
       signatures(documents, paraSize).cache())
     val hot = sigs
@@ -145,7 +146,7 @@ object ParagraphDedup {
       .agg(countDistinct("doc_id").as("__nd"))
       .filter(col("__nd") >= minDocs)
       .select(col("sig"), lit(true).as("__hot"))
-    val marked = chunks
+    val marked = all
       .join(sigs, Seq("doc_id", "para_idx"), "left")
       .join(hot, Seq("sig"), "left")
       .withColumn("__drop", coalesce(col("__hot"), lit(false)))

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.VecFns
@@ -30,19 +30,10 @@ import graft.plans.TopKPerKey
   */
 object PqAnn {
 
-  /** Unit-L2-normalize (zero vectors stay zero: no direction, they
-    * score 0 against everything, same as cosine's convention here).
-    */
-  private def normalize(v: Column): Column = {
-    val d = VecFns.asDouble(v)
-    val n = sqrt(VecFns.norm2(d))
-    when(n > 0, transform(d, x => x / n)).otherwise(d)
-  }
-
   /** (id → m subvectors) decomposition: one row per (idCol, sub_id, sv). */
   private def subvectors(df: DataFrame, idCol: String, vecCol: String,
                          m: Int, dsub: Int): DataFrame =
-    df.select(col(idCol), normalize(col(vecCol)).as("__nv"))
+    VecFns.unitNormalized(df, col(idCol), col(vecCol), "__nv")
       .select(col(idCol),
         posexplode(transform(sequence(lit(0), lit(m - 1)),
           s => slice(col("__nv"), s * dsub + 1, lit(dsub)))))
@@ -95,11 +86,11 @@ object PqAnn {
         embeddings.filter(
           pmod(xxhash64(col("vec_id"), lit(seed)), lit(1000000L)) < gate)
       }
-    val pts: Array[Array[Double]] = sampled
-      .select(col("vec_id"), normalize(col("embedding")).as("__nv"))
-      .orderBy("vec_id") // stable order => deterministic fit
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
+    val pts: Array[Array[Double]] =
+      VecFns.unitNormalized(sampled, col("vec_id"), col("embedding"), "__nv")
+        .orderBy("vec_id") // stable order => deterministic fit
+        .collect()
+        .map(_.getSeq[Double](1).toArray)
     require(pts.nonEmpty, "trainCodebooks: empty corpus")
     val rows = (0 until m).flatMap { s =>
       val sub = pts.map(p => java.util.Arrays.copyOfRange(p, s * dsub, (s + 1) * dsub))
@@ -210,11 +201,11 @@ object PqAnn {
     */
   private[similarity] def rerank(queries: DataFrame, corpus: DataFrame,
                                  shortlist: DataFrame, k: Int): DataFrame = {
-    val cand = corpus
-      .select(col("vec_id").as("c_id"), normalize(col("embedding")).as("cv"))
-      .join(broadcast(shortlist), Seq("c_id"))
+    val cand =
+      VecFns.unitNormalized(corpus, col("vec_id").as("c_id"), col("embedding"), "cv")
+        .join(broadcast(shortlist), Seq("c_id"))
     val exact = cand
-      .join(broadcast(queries.select(col("q_id"), normalize(col("qe")).as("qv"))),
+      .join(broadcast(VecFns.unitNormalized(queries, col("q_id"), col("qe"), "qv")),
         Seq("q_id"))
       .select(col("q_id"), col("c_id"), VecFns.dot(col("cv"), col("qv")).as("cos"))
     TopKPerKey.withRank(exact, Seq(col("q_id")),

@@ -1767,10 +1767,12 @@ object TxLog {
           new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
         val slices = math.min(spark.sparkContext.defaultParallelism * 4,
           math.max(1, absFiles.size / 16))
-        spark.sparkContext.parallelize(absFiles.zip(rels), slices)
-          .map { case (abs, rel) =>
-            footerOfFile(confBc.value.value, abs, rel, skippable, zone) }
-          .collect().toSeq
+        try {
+          spark.sparkContext.parallelize(absFiles.zip(rels), slices)
+            .map { case (abs, rel) =>
+              footerOfFile(confBc.value.value, abs, rel, skippable, zone) }
+            .collect().toSeq
+        } finally confBc.destroy()
       }
     if (perFile.exists(_.isEmpty)) None else Some(perFile.map(_.get))
   }
@@ -4710,7 +4712,7 @@ object TxLog {
   }
 
   /** The data files + stats of one not-yet-published commit attempt. */
-  private final case class Written(dataRel: String, fresh: Seq[String],
+  private[sources] final case class Written(dataRel: String, fresh: Seq[String],
       stats: Seq[FileEntry], schemaJson: String,
       partitionBy: Seq[String] = Seq.empty)
 
@@ -4810,7 +4812,7 @@ object TxLog {
     * CDF file that lands first can never be mistaken for data. With no
     * change feed this is exactly the old sequential path.
     */
-  private def overlapCdf(spark: SparkSession, table: String,
+  private[sources] def overlapCdf(spark: SparkSession, table: String,
       changes: Option[DataFrame])(write: Option[String] => Written)
       : (Written, Seq[String]) =
     changes match {
@@ -4825,7 +4827,7 @@ object TxLog {
           catch { case e: Throwable =>
             // let the CDF job drain before propagating, so abandon/retry
             // never races a write into the dir it is about to delete
-            try fut.get() catch { case _: Throwable => () }
+            drain(fut)
             throw e
           }
         val cdf =
@@ -4834,6 +4836,23 @@ object TxLog {
             throw e.getCause }
         (w, cdf)
     }
+
+  /** Wait for `fut` to finish, ignoring its outcome. An interrupt that
+    * arrives meanwhile does not cut the wait short; it is re-asserted on
+    * the thread afterwards, so the caller still sees it.
+    */
+  private def drain(fut: java.util.concurrent.Future[_]): Unit = {
+    var interrupted = false
+    var done = false
+    while (!done) {
+      try { fut.get(); done = true }
+      catch {
+        case _: InterruptedException => interrupted = true
+        case _: Throwable => done = true
+      }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+  }
 
   /** Dir-name sentinel Spark's writer uses for a NULL (or empty-string)
     * partition value.

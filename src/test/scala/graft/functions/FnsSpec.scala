@@ -1,9 +1,10 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
-import graft.similarity.LshAnn
+import graft.{SparkSpec, Tables}
+import graft.similarity.{LshAnn, PqAnn}
 
 class FnsSpec extends SparkSpec {
   import spark.implicits._
@@ -135,5 +136,69 @@ class FnsSpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(out(0) == out(1))
     assert(out(0) >= 0 && out(0) < 64)
+  }
+
+  // --- lambda kernels: projected inputs vs the inline formulation ------
+
+  /** The n-gram stream as written before its tokens were projected: the
+    * lambda re-splits `text` for every element.
+    */
+  private def inlineNgrams(documents: DataFrame, n: Int): DataFrame = {
+    val toks = split(col("text"), " ")
+    documents
+      .filter(size(toks) >= n)
+      .select(col("doc_id"), explode(array_distinct(transform(
+        sequence(lit(0), size(toks) - n),
+        i => concat_ws(" ", (1 to n).map(k => element_at(toks, i + k)): _*)))).as("s"))
+  }
+
+  test("explodedShingles and explodedNgrams(8) equal the inline formulation on edge cases") {
+    val docs = Seq[(Long, String)](
+      (1L, "a b"),                                  // fewer than 3 tokens
+      (2L, "a b c"),                                // exactly 3
+      (3L, "a b c d e f g"),                        // fewer than 8
+      (4L, "a b c d e f g h"),                      // exactly 8
+      (5L, "x y z x y z x y z x y z"),              // repeated n-grams
+      (6L, "a  b c  d e f g h i"),                  // double spaces: empty tokens
+      (7L, ""),
+      (8L, null)).toDF("doc_id", "text")
+    def rows(df: DataFrame) = df.as[(Long, String)].collect().toSeq.sorted
+    val shingles = rows(HashFns.explodedShingles(docs))
+    assert(shingles == rows(inlineNgrams(docs, 3)))
+    assert(shingles.filter(_._1 == 2L).map(_._2) == Seq("a b c"))
+    assert(shingles.filter(_._1 == 5L).map(_._2) == Seq("x y z", "y z x", "z x y"))
+    assert(shingles.filter(_._1 == 6L).map(_._2).contains("a  b"))
+    assert(!shingles.exists(r => Set(1L, 7L, 8L)(r._1)))
+    val eights = rows(HashFns.explodedNgrams(docs, 8))
+    assert(eights == rows(inlineNgrams(docs, 8)))
+    assert(eights.map(_._1).distinct == Seq(4L, 5L, 6L))
+  }
+
+  test("unitNormalized is bit-identical to the per-element norm formulation") {
+    val vecs = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
+      .union(Seq[(Long, Seq[Float])]((-1L, Seq.fill(64)(0.0f)), (-2L, null))
+        .toDF("vec_id", "embedding"))
+    val inline: Column = {
+      val d = VecFns.asDouble(col("embedding"))
+      val n = sqrt(VecFns.norm2(d))
+      when(n > 0, transform(d, x => x / n)).otherwise(d)
+    }
+    def bits(df: DataFrame) = df.as[(Long, Option[Seq[Double]])].collect()
+      .map { case (id, v) => id -> v.map(_.map(java.lang.Double.doubleToLongBits)) }.toMap
+    val got = bits(VecFns.unitNormalized(vecs, col("vec_id"), col("embedding"), "nv"))
+    assert(got.size == vecs.count())
+    assert(got == bits(vecs.select(col("vec_id"), inline.as("nv"))))
+  }
+
+  test("PqAnn codes on the test embeddings are unchanged") {
+    val corpus = Tables.embeddings(spark, sfDir)
+    val cb = PqAnn.codebooksFor(corpus, sfDir, dim = 64, m = 8, ksub = 16)
+    val codes = PqAnn.encode(corpus, cb, dim = 64, m = 8)
+      .as[(Long, Int, Int)].collect().sorted
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(codes.mkString(";").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    // digest of the code table built with the per-element norm formulation
+    assert(codes.length == 4000)
+    assert(md5 == "38c89fbcc328b4498421c9df4ca00cb5")
   }
 }

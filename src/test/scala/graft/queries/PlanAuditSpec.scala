@@ -1,5 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, LambdaFunction, Literal, NamedLambdaVariable}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
 import graft.{SparkEntry, SparkSpec}
 
 /** Plan-shape audit over the entire query surface — the scale guards
@@ -38,7 +42,7 @@ class PlanAuditSpec extends SparkSpec {
     "t12_perplexity_filter", // broadcast 1-row corpus-total + 1-row terciles
     "d28_knn_classify")     // broadcast labeled-seed set (50 rows) × corpus
 
-  private def nodeNames(name: String): Seq[String] = {
+  private def build(name: String) = {
     // cache hygiene is part of the AUDIT's integrity, not just memory:
     // a query's .cache() registers its plan with the CacheManager at
     // construction time, and any LATER query matching that fragment
@@ -48,8 +52,33 @@ class PlanAuditSpec extends SparkSpec {
     // visible regardless of suite execution order.
     graft.CacheRegistry.releaseAll()
     spark.catalog.clearCache()
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    df.queryExecution.sparkPlan.collect { case p => p.nodeName }
+    SparkEntry.queries(name)(spark, sfDir).queryExecution
+  }
+
+  private def nodeNames(name: String): Seq[String] =
+    build(name).sparkPlan.collect { case p => p.nodeName }
+
+  /** Every node of `p` and of its subqueries, including the optimized
+    * plan behind each cached fragment a query reads.
+    */
+  private def allNodes(p: LogicalPlan): Seq[LogicalPlan] = {
+    val cached = p match {
+      case r: InMemoryRelation => Seq(r.cacheBuilder.logicalPlan)
+      case _ => Nil
+    }
+    p +: (p.children ++ p.subqueries ++ cached).flatMap(allNodes)
+  }
+
+  /** The maximal subexpressions of a lambda body that read no lambda
+    * variable and are not an attribute, a literal or foldable: work that
+    * is the same for every element, yet runs once per element, because
+    * subexpression elimination does not reach into lambda bodies.
+    */
+  private def rowInvariant(e: Expression): Seq[Expression] = e match {
+    case _: Attribute | _: Literal => Nil
+    case _ if e.foldable => Nil
+    case _ if !e.exists(_.isInstanceOf[NamedLambdaVariable]) => Seq(e)
+    case _ => e.children.flatMap(rowInvariant)
   }
 
   test("no CartesianProduct in any query plan; BroadcastNestedLoopJoin only where allowlisted") {
@@ -63,6 +92,21 @@ class PlanAuditSpec extends SparkSpec {
       cart ++ bnlj
     }
     assert(violations.isEmpty, s"plan-shape violations:\n${violations.mkString("\n")}")
+  }
+
+  test("lambda bodies read only attributes and lambda variables (optimized plan)") {
+    // audited after optimization: CollapseProject may inline a projected
+    // column back into the lambda that reads it
+    val violations = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
+      allNodes(build(name).optimizedPlan)
+        .flatMap(_.expressions)
+        .flatMap(_.collect { case l: LambdaFunction => l })
+        .flatMap(l => rowInvariant(l.function))
+        .map(e => s"$name: ${e.sql.take(160)}")
+        .distinct
+    }
+    assert(violations.isEmpty,
+      s"row-invariant work inside lambda bodies:\n${violations.mkString("\n")}")
   }
 
   test("allowlist has no stale entries") {

@@ -109,6 +109,18 @@ class FooterStatsSpec extends SparkSpec {
     } finally sys.props.remove("graft.txlog.footerDriverMaxFiles")
   }
 
+  test("distributed footer path releases its Hadoop-conf broadcast") {
+    def confBroadcasts() = org.apache.spark.graftprobe.BroadcastProbe
+      .live(_.isInstanceOf[SerializableHadoopConf])
+    sys.props("graft.txlog.footerDriverMaxFiles") = "0"
+    try {
+      val before = confBroadcasts()
+      TxLog.overwrite(spark.range(0, 100, 1, 3).toDF("id"), tmp("fstats-bc"))
+      val leaked = confBroadcasts() -- before
+      assert(leaked.isEmpty, s"conf broadcasts left on the block manager: $leaked")
+    } finally sys.props.remove("graft.txlog.footerDriverMaxFiles")
+  }
+
   test("convert with absent columns: all-null stats match the scan") {
     import spark.implicits._
     def convertStats(dir: String): Seq[(Long, Map[String, TxLog.ColStats])] = {

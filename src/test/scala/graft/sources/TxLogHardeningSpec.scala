@@ -2,7 +2,9 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.{col, lit}
+import java.util.concurrent.CountDownLatch
+
+import org.apache.spark.sql.functions.{col, lit, udf}
 
 import graft.SparkSpec
 
@@ -155,4 +157,43 @@ class TxLogHardeningSpec extends SparkSpec {
     assert(TxLog.read(spark, src).count() == 19L,
       "vacuuming the clone reaped the source's data files")
   }
+
+  // --- interrupts during a change-feed commit --------------------------
+
+  test("change-feed DELETE: an interrupt while a failed data write drains the CDF job is kept") {
+    // the CDF job blocks on a latch, the data write fails at once, so the
+    // caller waits in overlapCdf's drain when the interrupt arrives
+    val gate = udf { (i: Long) => CdfGate.started.countDown(); CdfGate.release.await(); i }
+    val changes = spark.range(0, 1, 1, 1)
+      .select(gate(col("id")).as("id"), lit("delete").as("_change_type"))
+    @volatile var failure: Throwable = null
+    @volatile var interrupted = false
+    val caller = new Thread(() => {
+      try TxLog.overlapCdf(spark, tmpTable(), Some(changes)) { _ =>
+        throw new IllegalStateException("data write failed")
+      }
+      catch { case e: Throwable => failure = e }
+      interrupted = Thread.currentThread().isInterrupted
+    })
+    try {
+      caller.start()
+      CdfGate.started.await()
+      while (caller.isAlive && caller.getState != Thread.State.WAITING) Thread.sleep(10)
+      caller.interrupt()
+      caller.join(500)
+      assert(caller.isAlive, "the drain must outlast the interrupt while the CDF job runs")
+    } finally CdfGate.release.countDown()
+    caller.join(60000)
+    assert(!caller.isAlive)
+    assert(failure.getMessage == "data write failed")
+    assert(interrupted, "the interrupt delivered during the drain was lost")
+  }
+}
+
+/** Latches the CDF job of the interrupt spec waits on (executor tasks run
+  * in this JVM under local mode).
+  */
+private object CdfGate {
+  val started = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
 }
