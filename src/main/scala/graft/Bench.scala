@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 object Bench {
 
   /** Materialize EVERY output column, not .count(): count(1) lets Catalyst
@@ -40,7 +41,6 @@ object Bench {
     // later median would be GC-thrash noise published as a plausible
     // number — so fatal errors abort the whole bench instead of being
     // recorded as one query's "error"
-    import scala.util.control.NonFatal
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // Warmup pass (untimed): JIT + codegen + parquet footers per query, and
     // the up-front failure screen — a query that can't even warm up never
@@ -96,20 +96,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // config-side so injectParser applies (maintenance SQL statements)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(GraftExtensions.envCpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.setup(spark)
     // Warm up the session (JIT, codegen, parquet footer reads) so the
     // first timed query doesn't absorb one-time JVM startup cost.
-    try materialize(SparkEntry.entry(spark)) catch { case _: Throwable => () }
+    try materialize(SparkEntry.entry(spark)) catch { case NonFatal(_) => () }
     val (timed, failed) = run(spark, sfDir, SparkEntry.queries.toSeq)
     val total = timed.map(_._2._1).sum
     // The sf dir name carries the scale factor; a silent 0 fallback would
@@ -132,7 +123,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (detailed + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     println(detailed)
     println(short)
     spark.stop()

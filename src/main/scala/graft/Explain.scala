@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Plan-audit helper: print the formatted physical plan of one or more
   * `SparkEntry.queries` keys (all keys when none given). Usage:
@@ -10,17 +10,12 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val keys = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { k =>
       println(s"===== $k =====")
       try SparkEntry.queries(k)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"error: ${e.getMessage}") }
+      catch { case NonFatal(e) => println(s"error: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -27,15 +27,19 @@ object FileCountProbe {
     val commits = args.headOption.map(_.toInt).getOrElse(110)
     val filesPer = if (args.length > 1) args(1).toInt else 100
     val interval = if (args.length > 2) args(2).toInt else 10
-    sys.props("graft.txlog.checkpointInterval") = interval.toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(GraftExtensions.envCpus(8)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val savedInterval = TxLog.checkpointInterval
+    TxLog.checkpointInterval = interval
+    try probe(spark, commits, filesPer, interval)
+    finally {
+      TxLog.checkpointInterval = savedInterval
+      spark.stop()
+    }
+  }
+
+  private def probe(spark: SparkSession, commits: Int, filesPer: Int,
+      interval: Int): Unit = {
     import spark.implicits._
 
     val root = java.nio.file.Files.createTempDirectory("graft-filecount")
@@ -89,6 +93,5 @@ object FileCountProbe {
       "prune_ms" -> pruneMs, "pruned_rows" -> prunedCount)
     println(out.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}"))
-    spark.stop()
   }
 }

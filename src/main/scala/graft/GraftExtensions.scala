@@ -5,20 +5,22 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.{CosineSim, DotProduct, HeavyHitters}
-import org.apache.spark.sql.graftshim.Shim
 
-/** Session extension entry point: registers graft's native expressions as
-  * SQL functions. Wire it at session build —
+/** Session extension entry point: injects graft's SQL functions, table
+  * functions, parser, planner strategies and optimizer rules. It is
+  * installed at session build, the only point where Spark accepts a
+  * parser:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
+  * GraftExtensions.builder(cpus).getOrCreate()
+  * // or, on any builder:
+  * SparkSession.builder().config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
-  * — or call [[GraftExtensions.register]] on a live session. Either way,
-  * `SELECT graft_dot(a, b)` / `graft_cosine(a, b)` become available to
-  * pure-SQL users with the same codegen'd implementation the DataFrame
-  * API uses.
+  * `SELECT graft_dot(a, b)` / `graft_cosine(a, b)` then reach pure-SQL
+  * users with the same codegen'd implementation the DataFrame API uses.
+  * [[GraftExtensions.requireInstalled]] rejects a session built without
+  * it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -41,10 +43,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // maintenance + schema DDL statements Spark's grammar lacks
     // (OPTIMIZE / VACUUM / RESTORE / DESCRIBE HISTORY|DETAIL /
     // ALTER TABLE DROP|RENAME COLUMN on graft tables); everything else
-    // delegates to Spark's parser untouched. Parser injection only
-    // works config-side (`spark.sql.extensions=graft.GraftExtensions`)
-    // — the session's parser is fixed at sessionState build, so the
-    // imperative register() below cannot retrofit it.
+    // delegates to Spark's parser untouched
     ext.injectParser((session, delegate) =>
       new graft.plans.GraftSqlParser(session, delegate))
     // count/min/max over a graft-txlog relation answer from the manifest
@@ -432,31 +431,34 @@ object GraftExtensions {
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
     (FunctionIdentifier("graft_tx_files"), txFilesInfo, txFilesBuilder)
 
-  /** Imperative registration on an existing session. */
-  def register(spark: SparkSession): Unit = {
-    Shim.registerFunction(spark, "graft_dot", dotInfo,
-      exprs => DotProduct(toDoubleArray(exprs(0)), toDoubleArray(exprs(1))))
-    Shim.registerFunction(spark, "graft_cosine", cosineInfo,
-      exprs => CosineSim(toDoubleArray(exprs(0)), toDoubleArray(exprs(1))))
-    Shim.registerFunction(spark, "graft_heavy_hitters", hhInfo, hhBuilder)
-    Shim.registerFunction(spark, "graft_bloom_agg", bloomAggInfo, bloomAggBuilder)
-    Shim.registerFunction(spark, "graft_might_contain", mightContainInfo,
-      mightContainBuilder)
-    Shim.registerTableFunction(spark, "graft_asof_join", asofJoinInfo,
-      asofJoinBuilder)
-    Shim.registerTableFunction(spark, "graft_point_in_interval",
-      pointInIntervalInfo, pointInIntervalBuilder)
-    Shim.registerTableFunction(spark, "graft_tx_read", txReadInfo,
-      txReadBuilder)
-    Shim.registerTableFunction(spark, "graft_tx_cdf", txCdfInfo,
-      txCdfBuilder)
-    Shim.registerTableFunction(spark, "graft_tx_partitions",
-      txPartitionsInfo, txPartitionsBuilder)
-    Shim.registerTableFunction(spark, "graft_tx_files",
-      txFilesInfo, txFilesBuilder)
-    Shim.registerTableFunction(spark, "graft_tx_properties",
-      txPropertiesInfo, txPropertiesBuilder)
-    Shim.registerTableFunction(spark, "graft_tx_history",
-      txHistoryInfo, txHistoryBuilder)
-  }
+  /** The one way graft builds a session: `local[cpus]`, `cpus` shuffle
+    * partitions, UTC session time, no UI, and this extension. Callers
+    * add only what differs (app name, warehouse dir).
+    */
+  def builder(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+
+  /** `SPARK_GRAFT_CPUS`, or `default` when it is unset. */
+  def envCpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt)
+
+  /** Whether `spark` was built with this extension. */
+  private[graft] def installed(spark: SparkSession): Boolean =
+    spark.sessionState.planner.strategies.contains(graft.plans.TopKPerKeyStrategy)
+
+  /** Fails fast on a session built without this extension: its plans
+    * would lack the parser, the top-k and DML strategies and the
+    * optimizer rules, and nothing can add them after the build.
+    */
+  def requireInstalled(spark: SparkSession): Unit =
+    if (!installed(spark))
+      throw new IllegalStateException(
+        "this session lacks graft's extension: build it with " +
+          s"spark.sql.extensions=${classOf[GraftExtensions].getName} " +
+          "(GraftExtensions.builder sets it)")
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
 
 /** Optimization-round measurement helper (guide §1): run one or more
   * `SparkEntry.queries` keys under a SparkListener that records every job's
@@ -87,17 +88,9 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val keys = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(GraftExtensions.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.setup(spark)
-    try materialize(SparkEntry.entry(spark)) catch { case _: Throwable => () }
+    try materialize(SparkEntry.entry(spark)) catch { case NonFatal(_) => () }
     val rec = new Recorder
     spark.sparkContext.addSparkListener(rec)
     // Catalyst phase attribution (parsing/analysis/optimization/planning)

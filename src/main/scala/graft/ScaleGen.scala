@@ -165,13 +165,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft-scale/sf1")
     val sf = if (args.length > 1) args(1).toDouble else 1.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(GraftExtensions.envCpus(8)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, out, sf)
     println(s"""{"generated":"$out","sf":$sf}""")

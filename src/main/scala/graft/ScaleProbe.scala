@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling probe (SURVEY §15 / VERDICT r7 #2): time the HEAVY query
   * shapes at two scale factors and report per-query seconds, so the
   * sf1/sf0.1 ratio exposes any superlinear shape the flat sf0.1 bench
@@ -43,18 +41,8 @@ object ScaleProbe {
       if (args.length > 2 && args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 2) args(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
       else heavy
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // build-time, like Bench/Verify: the maintenance-SQL queries
-      // (q126+) need the injected PARSER, which setup() cannot add
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(GraftExtensions.envCpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.setup(spark)
     val qs = names.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
     def clear(): Unit = { CacheRegistry.releaseAll(); spark.catalog.clearCache() }
     // warmup pass (skipped in the full-surface sweep: one timed pass

@@ -13,28 +13,18 @@ import graft.queries.{Core, Lakehouse, LlmData}
   */
 object SparkEntry {
 
-  /** One-time session setup for any session that runs `queries`:
-    * registers the SQL function surface and installs the WindowTopKRewrite
-    * optimizer rule + planner strategy (the imperative counterpart to
-    * building the session with `spark.sql.extensions=graft.GraftExtensions`).
-    * Idempotent. Installing here — not inside a query def — keeps every
-    * query's plan independent of execution order: q58 and any user-written
-    * window-top-k get the bounded-heap plan deterministically.
+  /** Checks that `spark` can run `queries`: it must have been built
+    * with `spark.sql.extensions=graft.GraftExtensions` (as
+    * [[GraftExtensions.builder]] does), which installs graft's SQL
+    * functions, parser, strategies and optimizer rules at build time.
+    * Does nothing on such a session; throws `IllegalStateException`
+    * otherwise.
     */
-  def setup(spark: SparkSession): Unit = {
-    GraftExtensions.register(spark)
-    graft.plans.TopKPerKey.installRewrite(spark)
-    // SQL DELETE/UPDATE/MERGE on graft-txlog tables plan through the
-    // transactional layer instead of the v1-unsupported error
-    org.apache.spark.sql.graftshim.Shim.addStrategy(
-      spark, graft.plans.TxSqlDmlStrategy)
-  }
+  def setup(spark: SparkSession): Unit = GraftExtensions.requireInstalled(spark)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame = {
-    setup(spark)
+  def entry(spark: SparkSession): DataFrame =
     Core.defs("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
-  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench over a SUBSET of keys — same session config, same warmup + 3
   * interleaved timed passes, same median/min statistics as [[Bench]],
   * for fast optimization iteration without the full 196-key run. Usage:
@@ -12,16 +10,8 @@ object SubBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SubBench <key> [key ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(GraftExtensions.envCpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.setup(spark)
     val all = SparkEntry.queries
     val picked = args.toSeq.map(k => k -> all(k))
     val (timed, failed) = Bench.run(spark, sfDir, picked)

@@ -6,9 +6,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` Spark internals needed to expose a
   * custom Catalyst expression as a user-facing `Column` (the same
-  * mechanism `org.apache.spark.sql.functions` uses internally). Kept to
-  * two one-line forwarders so the dependency surface on internals stays
-  * auditable.
+  * mechanism `org.apache.spark.sql.functions` uses internally), plus the
+  * few other `private[sql]` entry points graft needs, each a short
+  * forwarder so the dependency surface on internals stays auditable.
   */
 object Shim {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -22,34 +22,6 @@ object Shim {
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 
-  /** Register a SQL function on a live session (the imperative
-    * counterpart to wiring `spark.sql.extensions` at session build).
-    */
-  def registerFunction(
-      spark: org.apache.spark.sql.SparkSession, name: String,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
-
-  /** Register a SQL TABLE function on a live session (the imperative
-    * counterpart to `injectTableFunction` at session build): the builder
-    * turns the call-site argument expressions into a logical plan, which
-    * is how `SELECT * FROM graft_asof_join(...)` reaches a whole-operator
-    * implementation from pure SQL.
-    */
-  def registerTableFunction(
-      spark: org.apache.spark.sql.SparkSession, name: String,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[Expression] =>
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.tableFunctionRegistry
-      .registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
-
   /** Wrap a logical plan as a DataFrame (`Dataset.ofRows` is
     * `private[sql]`) — needed to hand a custom LogicalPlan node back to
     * the user-facing API.
@@ -59,61 +31,6 @@ object Shim {
       org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Idempotently add a planner strategy to a live session (the
-    * imperative counterpart to `injectPlannerStrategy` at session build).
-    *
-    * The check-then-append is guarded by a lock on the session's
-    * `experimental` holder: `extraStrategies` is a plain mutable field, so
-    * two threads planning concurrently could otherwise drop or double-add
-    * the strategy. The membership check runs against the PLANNER's full
-    * strategy list, which includes both `extraStrategies` and anything
-    * injected via `SparkSessionExtensions` — so a session built with
-    * `GraftExtensions` is not double-registered here.
-    */
-  def addStrategy(spark: org.apache.spark.sql.SparkSession,
-                  strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val exp = cs.experimental
-    exp.synchronized {
-      if (!cs.sessionState.planner.strategies.contains(strategy))
-        exp.extraStrategies = exp.extraStrategies :+ strategy
-    }
-  }
-
-  /** Idempotently add an optimizer rule to a live session via
-    * `experimental.extraOptimizations` (the imperative counterpart to
-    * `injectPreCBORule` at session build). Same locking rationale as
-    * [[addStrategy]]. Unlike strategies there is no planner-wide rule
-    * list to consult, so a session built with `GraftExtensions` AND
-    * registered here runs the rule twice — graft's rules are idempotent
-    * by construction, so this is only wasted matching, not wrong plans.
-    */
-  def addOptimization(
-      spark: org.apache.spark.sql.SparkSession,
-      rule: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val exp = cs.experimental
-    exp.synchronized {
-      if (!exp.extraOptimizations.contains(rule))
-        exp.extraOptimizations = exp.extraOptimizations :+ rule
-    }
-  }
-
-  /** Expose what a `SparkSessionExtensions` instance would contribute to
-    * a session (the build* methods are `private[sql]`) — lets specs
-    * verify the extension-point wiring (pre-CBO rules, planner
-    * strategies) without tearing down the shared test session to build a
-    * fresh one with `spark.sql.extensions` set.
-    */
-  def extensionContributions(
-      ext: org.apache.spark.sql.SparkSessionExtensions,
-      spark: org.apache.spark.sql.SparkSession):
-      (Seq[org.apache.spark.sql.catalyst.rules.Rule[
-         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]],
-       Seq[org.apache.spark.sql.execution.SparkStrategy]) =
-    (ext.buildPreCBORules(spark), ext.buildPlannerStrategies(spark))
 
   /** A spill-capable row sorter over `output` rows under `sortOrder` —
     * the exact construction `SortExec.createSorter` uses (radix/prefix
@@ -180,12 +97,6 @@ object Shim {
       isStreaming = false)
   }
 
-  /** The RDD a `localCheckpoint(eager = true)` Dataset actually persisted
-    * (its analyzed plan is a `LogicalRDD` over that RDD). Needed to free
-    * checkpoint storage explicitly: `Dataset.queryExecution.toRdd` builds
-    * a fresh wrapper RDD, so unpersisting it is a no-op, and checkpoint
-    * persists are RDD-level — `spark.catalog.clearCache()` can't see them.
-    */
   /** Render a Catalyst-internal value to EXACTLY the string
     * `CAST(v AS STRING)` produces under the session's conf and zone —
     * driver-side expression eval, no job. Used by the footer-statistics
@@ -200,6 +111,12 @@ object Shim {
     Option(cast.eval(null)).map(_.toString).orNull
   }
 
+  /** The RDD a `localCheckpoint(eager = true)` Dataset actually persisted
+    * (its analyzed plan is a `LogicalRDD` over that RDD). Needed to free
+    * checkpoint storage explicitly: `Dataset.queryExecution.toRdd` builds
+    * a fresh wrapper RDD, so unpersisting it is a no-op, and checkpoint
+    * persists are RDD-level — `spark.catalog.clearCache()` can't see them.
+    */
   def checkpointedRdd(df: org.apache.spark.sql.DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)

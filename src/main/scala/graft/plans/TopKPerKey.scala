@@ -210,21 +210,9 @@ object TopKPerKeyStrategy extends SparkStrategy {
 
 object TopKPerKey {
 
-  /** Install the [[WindowTopKRewrite]] optimizer rule (plus the planner
-    * strategy it depends on) on a live session, so the standard
-    * `row_number().over(...) <= k` window pattern plans as the
-    * bounded-heap operator — the imperative counterpart to building the
-    * session with `spark.sql.extensions=graft.GraftExtensions`.
-    */
-  def installRewrite(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Shim.addStrategy(spark, TopKPerKeyStrategy)
-    Shim.addOptimization(spark, WindowTopKRewrite)
-    Shim.addOptimization(spark, TxMetadataAgg)
-  }
-
   /** Top `k` rows per key under `orderBy` (first-k in that sort order;
-    * use `.desc` columns for largest-first). Registers the planner
-    * strategy on the session idempotently.
+    * use `.desc` columns for largest-first). The session must carry
+    * graft's extension, whose strategy plans the node.
     *
     * Column resolution: Spark 4's column-node wrappers stay unresolved
     * inside arbitrary custom nodes, so the keys and ordering are pushed
@@ -234,7 +222,7 @@ object TopKPerKey {
     */
   def apply(df: DataFrame, keys: Seq[Column], orderBy: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    Shim.addStrategy(spark, TopKPerKeyStrategy)
+    graft.GraftExtensions.requireInstalled(spark)
     val analyzed = df.repartition(keys: _*).sortWithinPartitions(orderBy: _*)
       .queryExecution.analyzed
     analyzed match {

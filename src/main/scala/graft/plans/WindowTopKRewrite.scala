@@ -24,8 +24,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * partition — to stream off the first k per key. The heap operator needs
   * no sort at all (O(n log k) comparisons, O(keys × k) state, spill-safe
   * fallback), so this rule REPLACES an inferred `WindowGroupLimit` child
-  * when it sees one. Both run late (this rule registers as a pre-CBO /
-  * `extraOptimizations` rule, after the default batches), so the matcher
+  * when it sees one. `GraftExtensions` injects this rule as a pre-CBO
+  * rule, which runs after `InferWindowGroupLimit`, so the matcher
   * handles both the raw `Filter(Window(child))` shape and the
   * already-inferred `Filter(Window(WindowGroupLimit(child)))` shape.
   *
@@ -76,10 +76,10 @@ object WindowTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
       if (limits.isEmpty || limits.min < 1 || limits.min > maxK) f
       else {
         val k = limits.min
-        // The TopKPerKeyNode guard makes the rule idempotent under the
-        // fixed-point extraOptimizations batch (the rewritten plan matches
-        // this case again). An already-inferred WindowGroupLimit is
-        // stripped ONLY when it is the exact shape this rule subsumes —
+        // The TopKPerKeyNode guard makes the rule idempotent (the
+        // rewritten plan matches this case again), as Spark requires of a
+        // rule in a run-once batch such as the pre-CBO one. An
+        // already-inferred WindowGroupLimit is stripped ONLY when it is the exact shape this rule subsumes —
         // row_number semantics keeping at least k rows per key; a stricter
         // or rank-like group limit prunes a different row set, so any other
         // WindowGroupLimit disables the rewrite rather than being dropped.

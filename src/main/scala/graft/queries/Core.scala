@@ -639,11 +639,9 @@ object Core {
       // bounded-heap operator (plan spec-asserted in
       // WindowTopKRewriteSpec), while the result stays the exact window
       // answer the oracle checks, rank column included. The rule is
-      // installed once at session setup (SparkEntry.setup /
-      // GraftExtensions), NOT here: a session-global install inside a
-      // query def would make other window-top-k queries' plans depend on
-      // whether this query ran first. Specs that need the PLAIN window
-      // plan as a reference disable it via spark.graft.topk.rewriteMaxK=0.
+      // installed at session build (GraftExtensions). Specs that need the
+      // PLAIN window plan as a reference disable it via
+      // spark.graft.topk.rewriteMaxK=0.
       val w = Window.partitionBy("user_id")
         .orderBy(col("value").desc, col("event_id"))
       ev(s, dir)

@@ -24,13 +24,8 @@ import org.apache.spark.sql.SparkSession
 object CensusProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(1000000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-census-probe").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftExtensions.builder(graft.GraftExtensions.envCpus(32))
+      .appName("graft-census-probe").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try probe(spark, n) finally spark.stop()
   }

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 import graft.GraftExtensions
@@ -14,12 +13,7 @@ import graft.GraftExtensions
   */
 object IngestDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val in = Files.createTempDirectory("ingest-demo-in")
@@ -49,7 +43,6 @@ object IngestDemo {
     val unnested = Ingest.explodeStructArray(filings, "filings", "filing")
     println(s"unnested filings: ${unnested.count()} cols=${unnested.columns.mkString(",")}")
 
-    GraftExtensions.register(spark)
     val d = spark.sql("SELECT graft_dot(array(1.0d,2.0d), array(3.0d,4.0d)) AS d")
       .head().getDouble(0)
     println(s"graft_dot: $d")

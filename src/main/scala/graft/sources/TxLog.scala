@@ -225,11 +225,10 @@ object TxLog {
 
   /** A full snapshot is forced every this-many versions so a reader's
     * delta-replay tail stays short and vacuum always has a nearby
-    * checkpoint to anchor the kept range. Overridable for tests via
-    * `-Dgraft.txlog.checkpointInterval=`.
+    * checkpoint to anchor the kept range. Var, not val: specs and
+    * `FileCountProbe` change it to pin a log shape.
     */
-  private[graft] def checkpointInterval: Int =
-    sys.props.get("graft.txlog.checkpointInterval").map(_.toInt).getOrElse(10)
+  private[graft] var checkpointInterval: Int = 10
 
   private val manifestName = raw"(\d{20})\.json".r
   private def logDir(table: Path) = new Path(table, "_txlog")
@@ -1696,12 +1695,9 @@ object TxLog {
     * below this many files the footers are read on the driver's pool;
     * above it one distributed metadata job reads them on the executors
     * (a giant commit must not serialize that many footer opens on the
-    * driver). Overridable for tests via
-    * `-Dgraft.txlog.footerDriverMaxFiles=`.
+    * driver). Var, not val: specs lower it to pin the distributed path.
     */
-  private[graft] def footerStatsMaxFiles: Int =
-    sys.props.get("graft.txlog.footerDriverMaxFiles").map(_.toInt)
-      .getOrElse(1000)
+  private[graft] var footerStatsMaxFiles: Int = 1000
 
   /** Per-file stats from PARQUET FOOTERS — the metadata-only collector
     * (guide §6: stats the writer already persisted should not cost a
@@ -3733,7 +3729,7 @@ object TxLog {
         new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
       val tq = f.makeQualified(t).toString
       import spark.implicits._
-      spark.createDataset(entries)
+      try spark.createDataset(entries)
         .repartition(math.max(1, math.min(
           spark.sparkContext.defaultParallelism, entries.size / 100)))
         .foreachPartition { (it: Iterator[(String, Seq[String])]) =>
@@ -3741,6 +3737,7 @@ object TxLog {
           val fx = base.getFileSystem(confBc.value.value)
           it.foreach { case (rel, lines) => write(fx, base, rel, lines) }
         }
+      finally confBc.destroy()
     }
     entries.map(_._1)
   }
@@ -4247,7 +4244,7 @@ object TxLog {
     val confBc = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
     val tqStr = tq.toString
-    val perFile: Array[(String, String, Long)] = matchedKeyed
+    val perFile: Array[(String, String, Long)] = try matchedKeyed
       .groupBy(col("__dv_k"))
       .agg(collect_list(col("__dv_i")).as("__ps"))
       .as[(String, Seq[Long])]
@@ -4290,6 +4287,7 @@ object TxLog {
         }
       }
       .collect() // ONE row per touched FILE — the only driver structure
+    finally confBc.destroy()
     lastDvFindCollected.set(perFile.length.toLong)
     val goneSet = perFile.collect { case (rel, "", _) => rel }.toSet
     val newEntries = perFile.toSeq.collect { case (rel, dv, n) if dv.nonEmpty =>
@@ -4990,11 +4988,12 @@ object TxLog {
     * orphaned `data/<uuid>/` dir — the same abandonment unit as before,
     * reaped by vacuum/abandon. Scoped per write via options: census
     * writes (whose reader checks `_SUCCESS`) and any non-TxLog write
-    * keep the stock protocol. Honest sizing (interleaved WriteProbe
-    * A/B): ~5% of a small commit's cost on the local filesystem, where
-    * rename is cheap — the knob is kept because on object storage the
-    * per-file job-commit rename IS the dominant commit cost, and the
-    * manifest gate is precisely what makes skipping it safe.
+    * keep the stock protocol. Honest sizing (an interleaved A/B of
+    * these write options): ~5% of a small commit's cost on the local
+    * filesystem, where rename is cheap — the knob is kept because on
+    * object storage the per-file job-commit rename IS the dominant
+    * commit cost, and the manifest gate is precisely what makes
+    * skipping it safe.
     */
   private def txWriter(
       w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row])
@@ -5430,7 +5429,7 @@ object TxLog {
         new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
       val tq = f.makeQualified(t).toString
       import spark.implicits._
-      spark.createDataset(dataDoomed)
+      try spark.createDataset(dataDoomed)
         .repartition(math.max(1, math.min(
           spark.sparkContext.defaultParallelism, dataDoomed.size / 100)))
         .foreachPartition { (it: Iterator[String]) =>
@@ -5441,6 +5440,7 @@ object TxLog {
             fx.delete(new Path(base, s"_bloom/$rel"), true)
           }
         }
+      finally confBc.destroy()
     }
     // Chain integrity under the checkpointed log: the oldest KEPT
     // version may be a delta record chaining through versions about to
@@ -5620,7 +5620,7 @@ object TxLog {
         new SerializableHadoopConf(conf))
       val dq = droot.toString
       import spark.implicits._
-      spark.createDataset(pairs)
+      try spark.createDataset(pairs)
         .repartition(math.max(1, math.min(
           spark.sparkContext.defaultParallelism, pairs.size / 64)))
         .foreachPartition { (it: Iterator[(String, String)]) =>
@@ -5655,6 +5655,7 @@ object TxLog {
             }
           }
         }
+      finally confBc.destroy()
     }
     val mapped = relMap.toMap
     val att = Attempt("deep_clone", m.files.map(mapped),
@@ -5880,7 +5881,7 @@ object TxLog {
       val byKeyBc = spark.sparkContext.broadcast(byKey)
       val tqStr = f.makeQualified(t).toString
       val presentL = present.toIndexedSeq
-      grouped.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+      try grouped.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
         if (it.hasNext) {
           val base = new Path(tqStr)
           val fx = base.getFileSystem(confBc.value.value)
@@ -5912,6 +5913,10 @@ object TxLog {
             }
           }
         }
+      }
+      finally {
+        confBc.destroy()
+        byKeyBc.destroy()
       }
     }
   }

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
+import graft.{GraftExtensions, Tables}
 
 /** Runnable demo of the streaming surface: replays a testdata events table
   * through a file stream, runs the watermarked tumbling aggregation and the
@@ -16,12 +15,7 @@ import graft.Tables
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftExtensions.builder(4).getOrCreate()
     import spark.implicits._
     spark.sparkContext.setLogLevel("WARN")
 

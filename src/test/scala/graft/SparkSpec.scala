@@ -7,25 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * suites in one JVM; Test/fork gives the JVM the add-opens flags).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+  /** The session Verify/Bench build, so specs audit the plans users get. */
+  lazy val spark: SparkSession =
+    GraftExtensions.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // config-side so injectParser applies (maintenance SQL statements)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       // fresh warehouse per test JVM: managed-table specs (bucketing) must
       // not trip over locations orphaned by a previous run
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
-    // same session posture as Verify/Bench: rewrite rule + SQL functions
-    // installed up front, so specs audit the plans users actually get
-    SparkEntry.setup(s)
-    s
-  }
 
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -75,7 +75,6 @@ class FnsSpec extends SparkSpec {
   }
 
   test("graft_cosine SQL function registers and coerces float arrays like the DataFrame path") {
-    graft.GraftExtensions.register(spark)
     val df = Seq((Seq(1.0f, 2.0f), Seq(2.0f, 1.0f))).toDF("a", "b")
     df.createOrReplaceTempView("cos_in")
     // no hand-cast: the registration builder coerces array<float> itself

@@ -72,7 +72,6 @@ class HeavyHittersSpec extends SparkSpec {
   }
 
   test("graft_heavy_hitters is callable from SQL") {
-    graft.GraftExtensions.register(spark)
     Seq("a", "a", "a", "b", "b", "c").toDF("t").createOrReplaceTempView("hh_v")
     val out = spark.sql(
       "SELECT explode(graft_heavy_hitters(t, 4, 2)) AS h FROM hh_v")

@@ -34,8 +34,6 @@ class WindowTopKRewriteSpec extends SparkSpec {
     try body finally spark.conf.unset("spark.graft.topk.rewriteMaxK")
   }
 
-  TopKPerKey.installRewrite(spark)
-
   test("rewrite fires on the row_number <= k pattern and matches the window result") {
     val df = randomDf
     val q = windowTopK(df, 4)
@@ -135,13 +133,9 @@ class WindowTopKRewriteSpec extends SparkSpec {
   }
 
   test("GraftExtensions wires the preCBO rule and planner strategy at session build") {
-    // the spark.sql.extensions path can't be exercised on the shared
-    // session (extensions apply only at session creation), so assert the
-    // contributions directly
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.GraftExtensions()(ext)
-    val (rules, strategies) =
-      org.apache.spark.sql.graftshim.Shim.extensionContributions(ext, spark)
+    // the shared session is built with spark.sql.extensions set
+    val rules = spark.sessionState.optimizer.preCBORules
+    val strategies = spark.sessionState.planner.strategies
     assert(rules.contains(WindowTopKRewrite), rules.map(_.ruleName))
     assert(strategies.contains(TopKPerKeyStrategy), strategies)
   }

@@ -90,7 +90,8 @@ class FooterStatsSpec extends SparkSpec {
     // >1000-files shape) and re-prove byte-equality against the
     // aggregate scan on the adversarial value battery
     import spark.implicits._
-    sys.props("graft.txlog.footerDriverMaxFiles") = "0"
+    val saved = TxLog.footerStatsMaxFiles
+    TxLog.footerStatsMaxFiles = 0
     try {
       assert(TxLog.footerStatsMaxFiles == 0)
       val df = spark.range(0, 1000, 1, 3).select(
@@ -106,19 +107,20 @@ class FooterStatsSpec extends SparkSpec {
       // fallback shapes must still fall back whole-batch, distributed too
       assertSame(Seq((1L, Double.NaN), (2L, 1.5)).toDF("id", "d"))
       assertSame(Seq((1L, "a" * 5000), (2L, "c")).toDF("id", "s"))
-    } finally sys.props.remove("graft.txlog.footerDriverMaxFiles")
+    } finally TxLog.footerStatsMaxFiles = saved
   }
 
   test("distributed footer path releases its Hadoop-conf broadcast") {
     def confBroadcasts() = org.apache.spark.graftprobe.BroadcastProbe
       .live(_.isInstanceOf[SerializableHadoopConf])
-    sys.props("graft.txlog.footerDriverMaxFiles") = "0"
+    val saved = TxLog.footerStatsMaxFiles
+    TxLog.footerStatsMaxFiles = 0
     try {
       val before = confBroadcasts()
       TxLog.overwrite(spark.range(0, 100, 1, 3).toDF("id"), tmp("fstats-bc"))
       val leaked = confBroadcasts() -- before
       assert(leaked.isEmpty, s"conf broadcasts left on the block manager: $leaked")
-    } finally sys.props.remove("graft.txlog.footerDriverMaxFiles")
+    } finally TxLog.footerStatsMaxFiles = saved
   }
 
   test("convert with absent columns: all-null stats match the scan") {

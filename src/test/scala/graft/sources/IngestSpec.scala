@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.SparkSpec
 
 class IngestSpec extends SparkSpec {
   import spark.implicits._
@@ -134,7 +134,6 @@ class IngestSpec extends SparkSpec {
   }
 
   test("graft_dot is callable from SQL after registration") {
-    GraftExtensions.register(spark)
     val out = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .as[Double].head()

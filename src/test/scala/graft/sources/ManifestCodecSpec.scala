@@ -2,7 +2,6 @@ package graft.sources
 
 import org.json4s.NoTypeHints
 import org.json4s.jackson.Serialization
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.TxLog.{ColStats, DeltaRec, DvEntry, FileEntry, IdentitySpec, Manifest}
 
@@ -11,7 +10,7 @@ import graft.sources.TxLog.{ColStats, DeltaRec, DvEntry, FileEntry, IdentitySpec
   * return the IDENTICAL case class the json4s reader would — the
   * decoder may only ever be faster, never different.
   */
-class ManifestCodecSpec extends AnyFunSuite {
+class ManifestCodecSpec extends graft.SparkSpec {
 
   private implicit val fmts: org.json4s.Formats =
     Serialization.formats(NoTypeHints)
@@ -93,8 +92,6 @@ class ManifestCodecSpec extends AnyFunSuite {
 
   test("every record in a REAL mixed-DML log decodes identically") {
     // belt over the synthetic braces: the actual writer's bytes
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val t = java.nio.file.Files.createTempDirectory("codec").resolve("t").toString

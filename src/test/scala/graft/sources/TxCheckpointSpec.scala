@@ -23,13 +23,9 @@ class TxCheckpointSpec extends SparkSpec {
     Files.createTempDirectory("graft-ckpt").resolve("t").toString
 
   private def withInterval[A](n: Int)(body: => A): A = {
-    val prev = sys.props.get("graft.txlog.checkpointInterval")
-    sys.props("graft.txlog.checkpointInterval") = n.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.txlog.checkpointInterval") = v
-      case None => sys.props -= "graft.txlog.checkpointInterval"
-    }
+    val prev = TxLog.checkpointInterval
+    TxLog.checkpointInterval = n
+    try body finally TxLog.checkpointInterval = prev
   }
 
   private def manifestBytes(t: String, v: Long): Long =
