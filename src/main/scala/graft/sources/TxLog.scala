@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, collect_list, count, input_file_name, lit, max, min, row_number, substring_index, sum, when}
+import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, collect_list, count, explode, input_file_name, lit, max, min, row_number, struct, substring_index, sum, when}
 import org.apache.spark.sql.types._
 import org.json4s.NoTypeHints
 import org.json4s.jackson.Serialization
@@ -839,13 +839,15 @@ object TxLog {
         // matches however the scan reports the path (raw vs URI-encoded)
         val pairs: Seq[(String, String)] =
           dvs.flatMap(e => scanKeys(e.path, t).map(k => (k, e.dv)))
-        val confBc = spark.sparkContext.broadcast(
-          new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
+        // the conf rides in the task closure, not a broadcast: the
+        // returned frame is lazy and outlives this call, so nothing here
+        // could destroy a broadcast, and each read would leave one behind
+        val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
         val tqStr = fs(spark, t).makeQualified(t).toString
         val pos = spark.createDataset(pairs)
           .flatMap { (kd: (String, String)) =>
             val base = new Path(tqStr)
-            val fx = base.getFileSystem(confBc.value.value)
+            val fx = base.getFileSystem(conf.value)
             readDvFileFs(fx, base, kd._2).map(i => (kd._1, i))
           }
           .toDF("__dv_k", "__dv_i")
@@ -3196,8 +3198,14 @@ object TxLog {
           matched.zipWithIndex.collect { case (MergeDelete(_), i) => s"m$i" } ++
           notMatchedBySource.zipWithIndex.collect { case (MergeDelete(_), b) => s"b$b" } :+
           "drop"
-        def outColsOf(df: DataFrame, fields: Seq[StructField]): DataFrame =
-          df.select(fields.map { f =>
+        // a field's target-side value; an evolution-added column has
+        // none, so it reads NULL, not a (non-existent) t.<name>
+        def targetValue(f: StructField): Column =
+          if (extraNames(f.name)) lit(null).cast(f.dataType)
+          else col("t." + quoted(f.name)).cast(f.dataType)
+        // each field's post-clause value over `acted`'s columns
+        def outExprs(fields: Seq[StructField]): Seq[Column] =
+          fields.map { f =>
             val branches: Seq[(String, Column)] =
               matched.zipWithIndex.collect {
                 case (MergeUpdate(set, _), i) if set.contains(f.name) =>
@@ -3207,29 +3215,14 @@ object TxLog {
               notMatchedBySource.zipWithIndex.collect {
                 case (MergeUpdate(set, _), b) if set.contains(f.name) =>
                   s"b$b" -> set(f.name) }
-            // an evolution-added column has no target-side value: its
-            // default is NULL, not a (non-existent) t.<name> reference
-            val base =
-              if (extraNames(f.name)) lit(null).cast(f.dataType)
-              else col("t." + quoted(f.name)).cast(f.dataType)
-            branches.foldLeft(base) {
+            branches.foldLeft(targetValue(f)) {
               case (acc, (tag, v)) =>
                 when(col("__act") === tag, v.cast(f.dataType)).otherwise(acc)
             }.as(f.name)
-          }: _*)
+          }
         def outCols(df: DataFrame): DataFrame =
-          outColsOf(df, schema.fields.toSeq)
+          df.select(outExprs(schema.fields.toSeq): _*)
 
-        // CDF for the general merge (the shape readChangeFeed folds):
-        // acted-on target rows' pre-images (update_preimage / delete),
-        // update post-images, and inserts. The feed reads `acted`, not
-        // the CoW path's collapsed `actedCow` — they agree for every
-        // CDF-visible tag because the collapse only discards NON-acting
-        // sibling pairs (tag "keep"/"drop", outside updTags/delTags/
-        // insTags; the ≥2-firing-pairs case already errored), so the
-        // feed can never disagree with the committed rows. An edit that
-        // lets a firing pair be collapsed away must switch cdfOf to the
-        // collapsed frame.
         val updTags: Seq[String] =
           matched.zipWithIndex.collect { case (MergeUpdate(_, _), i) => s"m$i" } ++
           notMatchedBySource.zipWithIndex.collect {
@@ -3247,35 +3240,41 @@ object TxLog {
         // Identity-assigned insert rows, built ONCE and reused by the
         // data write and the CDF write so both see the same ids (same
         // lineage; zipWithIndex over reused shuffle output is stable
-        // across the actions, the appendWithIdentity stance). The extra
-        // count() for the mark advance is change-sized.
+        // across the actions, the appendWithIdentity stance — its count
+        // job materializes the shuffle before either write starts). The
+        // extra count() for the mark advance is change-sized.
         val insAssigned: Option[DataFrame] =
           if (idMap.isEmpty || notMatched.isEmpty) None
           else Some(assignIdentity(
-            outColsOf(acted.filter(col("__act").isin(insTags: _*)), idFreeFields),
+            acted.filter(col("__act").isin(insTags: _*)).select(outExprs(idFreeFields): _*),
             idMap, schema))
         val insertedForIds: Long =
           if (insAssigned.isEmpty) 0L
           else acted.filter(col("__act").isin(insTags: _*)).count()
-        def cdfOf(w: Written): Seq[String] =
-          if (!changeFeed) Seq.empty
+        // CDF for the general merge (the shape readChangeFeed folds): the
+        // acted-on target rows' pre-images (update_preimage / delete),
+        // update post-images, and inserts, as ONE projection of `acted`
+        // ([[mergeFeed]]). It reads only the parent snapshot and the
+        // source, never the fresh files, so [[overlapCdf]] writes it
+        // concurrently with the data. The feed reads `acted`, not the
+        // CoW path's collapsed `actedCow` — they agree for every
+        // CDF-visible tag because the collapse only discards NON-acting
+        // sibling pairs (tag "keep"/"drop", outside updTags/delTags/
+        // insTags; the ≥2-firing-pairs case already errored), so the
+        // feed can never disagree with the committed rows. An edit that
+        // lets a firing pair be collapsed away must switch the feed to
+        // the collapsed frame. `acted` is deliberately not persisted: a
+        // cached join output fragments the data write (several files
+        // per merge instead of one), which compaction then pays for.
+        val feed: Option[DataFrame] =
+          if (!changeFeed) None
           else {
-            val tcols = schema.fields.toSeq.map(f =>
-              (if (extraNames(f.name)) lit(null).cast(f.dataType)
-               else col("t." + quoted(f.name)).cast(f.dataType)).as(f.name))
-            val pre = acted
-              .filter(col("__act").isin((updTags ++ delTags): _*))
-              .select(tcols :+ col("__act"): _*)
-              .withColumn("_change_type",
-                when(col("__act").isin(updTags: _*), lit("update_preimage"))
-                  .otherwise(lit("delete")))
-              .drop("__act")
-            val post = outCols(acted.filter(col("__act").isin(updTags: _*)))
-              .withColumn("_change_type", lit("update_postimage"))
-            val ins = insAssigned
-              .getOrElse(outCols(acted.filter(col("__act").isin(insTags: _*))))
-              .withColumn("_change_type", lit("insert"))
-            writeCdf(spark, table, w.dataRel, pre.unionByName(post).unionByName(ins))
+            val in = MergeFeedInputs(acted,
+              preImage = schema.fields.toSeq.map(f => targetValue(f).as(f.name)),
+              postImage = outExprs(schema.fields.toSeq),
+              updTags, delTags, insTags, insAssigned)
+            mergeFeedHook(in)
+            Some(mergeFeed(in))
           }
 
         if (!deletionVectors) {
@@ -3316,9 +3315,10 @@ object TxLog {
               !col("__act").isin((deadTags ++ insTags): _*))).unionByName(ins)
           }
           val goneSet = working.toSet
-          val w = writeData(enforcing(regen(rows), cons), table,
-            m.partitionBy.getOrElse(Seq.empty))
-          val cdfFiles = cdfOf(w)
+          val (w, cdfFiles) = overlapCdf(spark, table, feed) { relOpt =>
+            writeData(enforcing(regen(rows), cons), table,
+              m.partitionBy.getOrElse(Seq.empty), relOpt)
+          }
           val committed = publish(spark, table, w, parent =>
             if (parent.map(_.version).contains(base))
               Some(Attempt("merge",
@@ -3355,9 +3355,10 @@ object TxLog {
             case Some(ins) => outCols(acted.filter(col("__act").isin(
               liveTags.filterNot(insTags.contains): _*))).unionByName(ins)
           }
-          val w = writeData(enforcing(regen(rows), cons), table,
-            m.partitionBy.getOrElse(Seq.empty), dataRelOpt = Some(dataRel))
-          val cdfFiles = cdfOf(w)
+          val (w, cdfFiles) = overlapCdf(spark, table, feed, Some(dataRel)) { relOpt =>
+            writeData(enforcing(regen(rows), cons), table,
+              m.partitionBy.getOrElse(Seq.empty), relOpt)
+          }
           val committed = publish(spark, table, w, parent =>
             if (parent.map(_.version).contains(base))
               Some(Attempt("merge",
@@ -3376,6 +3377,59 @@ object TxLog {
     }
     mergeRaceError(table, maxAttempts)
   }
+
+  /** The inputs of a general MERGE's change feed: `acted` (the target ⟗
+    * source join, each row tagged `__act` with the clause that fired on
+    * it — `m<i>` matched, `i<j>` not matched, `b<k>` not matched by
+    * source — or "keep"/"drop"), a row's pre-image (its target columns)
+    * and post-image (the clause outputs) in table order, the tags of the
+    * update, delete and insert clauses, and, on an identity table, the
+    * id-assigned insert rows the data write also uses.
+    */
+  private[sources] final case class MergeFeedInputs(acted: DataFrame,
+      preImage: Seq[Column], postImage: Seq[Column], updTags: Seq[String],
+      delTags: Seq[String], insTags: Seq[String], inserts: Option[DataFrame])
+
+  /** A general MERGE's change feed as ONE projection of `acted`: the rows
+    * an update, delete or insert clause fired on are filtered once, and
+    * each explodes into its images — an update into its pre-image and
+    * post-image, a delete into its pre-image, an insert into its
+    * post-image. The filter also states, one join side at a time, what
+    * the tags imply (matched and by-source rows have a target side,
+    * matched and insert rows a source side), so Catalyst weakens the
+    * full-outer join to inner, left- or right-outer as the clauses
+    * allow. The feed plans the join once, where a union of per-image
+    * branches planned it once per branch. With `inserts`, the insert
+    * images are those rows, so the feed carries the data's ids.
+    */
+  private[sources] def mergeFeed(in: MergeFeedInputs): DataFrame = {
+    val act = col("__act")
+    val isUpd = act.isin(in.updTags: _*)
+    val imgTags = in.updTags ++ in.delTags ++
+      (if (in.inserts.isEmpty) in.insTags else Seq.empty)
+    val guards =
+      (if (imgTags.exists(_.startsWith("i"))) Seq.empty
+       else Seq(col("t.__dv_k").isNotNull)) ++
+      (if (imgTags.exists(_.startsWith("b"))) Seq.empty
+       else Seq(col("__s_m").isNotNull))
+    val pre = struct(in.preImage :+ when(isUpd, lit("update_preimage"))
+      .otherwise(lit("delete")).as("_change_type"): _*)
+    val post = struct(in.postImage :+ when(isUpd, lit("update_postimage"))
+      .otherwise(lit("insert")).as("_change_type"): _*)
+    val images = when(isUpd, array(pre, post))
+      .when(act.isin(in.delTags: _*), array(pre))
+      .otherwise(array(post))
+    val projected = in.acted.filter(guards.foldLeft(act.isin(imgTags: _*))(_ && _))
+      .select(explode(images).as("__img")).select("__img.*")
+    in.inserts.fold(projected)(ins =>
+      projected.unionByName(ins.withColumn("_change_type", lit("insert"))))
+  }
+
+  /** Test-only interposition point: sees the inputs of every general
+    * MERGE change feed, so specs can check [[mergeFeed]] against a
+    * reference built from the same `acted` join.
+    */
+  private[sources] var mergeFeedHook: MergeFeedInputs => Unit = _ => ()
 
   /** Compaction (the public OPTIMIZE bin-packing recipe): rewrite the
     * referenced files smaller than `smallFileBytes` into
@@ -4436,14 +4490,17 @@ object TxLog {
       val matchedDf = readLive(spark, t, m, plan.touched)
         .filter(hit)
       val cons = m.constraints.getOrElse(Map.empty)
-      val w = writeData(enforcing(applySet(matchedDf), cons), table,
-        m.partitionBy.getOrElse(Seq.empty), dataRelOpt = Some(dataRel))
-      val cdfFiles =
-        if (!changeFeed) Seq.empty
-        else writeCdf(spark, table, w.dataRel,
-          matchedDf.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(applySet(matchedDf)
-              .withColumn("_change_type", lit("update_postimage"))))
+      // CDF pre/post pairs read the same snapshot rows as the post-image
+      // write, so both land concurrently under the commit's dir
+      val cdfChanges =
+        if (!changeFeed) None
+        else Some(matchedDf.withColumn("_change_type", lit("update_preimage"))
+          .unionByName(applySet(matchedDf)
+            .withColumn("_change_type", lit("update_postimage"))))
+      val (w, cdfFiles) = overlapCdf(spark, table, cdfChanges, Some(dataRel)) { relOpt =>
+        writeData(enforcing(applySet(matchedDf), cons), table,
+          m.partitionBy.getOrElse(Seq.empty), relOpt)
+      }
       val touchedSet = plan.touched.toSet
       casRaceHook()
       // lost CAS: rebase onto a winner that left our touched files and
@@ -4789,7 +4846,10 @@ object TxLog {
   }
 
   /** Daemon pool for the CDF side of [[overlapCdf]] — one extra Spark
-    * action in flight at a time is all a single commit ever needs.
+    * action in flight at a time is all a single commit ever needs. Its
+    * threads are shared by every caller, so each callable runs with its
+    * caller's thread-locals (see [[overlapCdf]]), never the ones a
+    * thread inherited from whoever first created it.
     */
   private lazy val cdfPool = java.util.concurrent.Executors.newFixedThreadPool(
     2,
@@ -4800,26 +4860,40 @@ object TxLog {
     })
 
   /** Run one commit's DATA write and CDF write as CONCURRENT Spark
-    * actions (guide §2.6 — overlap independent jobs): the change-data
-    * frame reads only the parent snapshot's files, never the fresh
-    * write's output, so the two jobs are independent, and each carries
-    * ~0.2 s of fixed write-command cost that otherwise serializes on
-    * the driver. The commit-private `data/<uuid>/` dir is chosen UP
-    * FRONT so the CDF lands under it (same abandonment unit); the data
+    * actions, overlapping two independent jobs: the change-data
+    * frame reads only the parent snapshot's files (and a MERGE's
+    * source), never the fresh write's output, so the two jobs are
+    * independent, and each carries ~0.2 s of fixed write-command cost
+    * that otherwise serializes on the driver. Callers: copy-on-write
+    * [[delete]] and [[update]], `updateDv`, and both branches of the
+    * general [[mergeInto]]. Writers whose feed reads the fresh files
+    * (insert-only MERGE, `replaceWhere`, `overwritePartitions`) stay
+    * sequential and do not come here.
+    *
+    * The commit-private `data/<uuid>/` dir is shared so the CDF lands
+    * under it (same abandonment unit): `dataRel` is one the caller
+    * already chose (the DV writers pick it before their find pass, for
+    * the sidecars), or a fresh one. `write` gets `Some(dir)` whenever
+    * the dir may already hold files, and appends into it. The data
     * write's fresh-file listing excludes the `_cdf`/`_dv` subdirs, so a
     * CDF file that lands first can never be mistaken for data. With no
-    * change feed this is exactly the old sequential path.
+    * change feed, only `write` runs, given `dataRel` as is.
+    *
+    * The CDF job runs on [[cdfPool]] with the caller's thread-locals
+    * captured and restored around it (`SQLExecution
+    * .withThreadLocalCaptured`: local properties, active session): it
+    * carries the caller's job group, so `cancelJobGroup` reaches it.
     */
   private[sources] def overlapCdf(spark: SparkSession, table: String,
-      changes: Option[DataFrame])(write: Option[String] => Written)
-      : (Written, Seq[String]) =
+      changes: Option[DataFrame], dataRel: Option[String] = None)(
+      write: Option[String] => Written): (Written, Seq[String]) =
     changes match {
-      case None => (write(None), Seq.empty)
+      case None => (write(dataRel), Seq.empty)
       case Some(ch) =>
-        val rel = newDataRel()
-        val fut = cdfPool.submit(
-          (() => writeCdf(spark, table, rel, ch)):
-            java.util.concurrent.Callable[Seq[String]])
+        val rel = dataRel.getOrElse(newDataRel())
+        val fut = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], cdfPool)(
+          writeCdf(spark, table, rel, ch))
         val w =
           try write(Some(rel))
           catch { case e: Throwable =>

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.functions.col
+import org.scalatest.concurrent.Eventually.{eventually, interval, timeout}
+import org.scalatest.time.{Millis, Seconds, Span}
 
 import graft.SparkSpec
 
@@ -8,7 +10,9 @@ import graft.SparkSpec
   * broadcast; each must destroy it once its job is done, or every
   * vacuum, DV delete, clone, bloom build and symlink-manifest write
   * leaves one more conf copy on the driver's block manager. The
-  * distribution threshold is lowered to 0 so every path fans out.
+  * distribution threshold is lowered to 0 so every path fans out. The
+  * deletion-vector read path returns a lazy frame no `finally` could
+  * release a broadcast from, so it ships the conf in its task closure.
   */
 class ConfBroadcastSpec extends SparkSpec {
   import spark.implicits._
@@ -29,8 +33,12 @@ class ConfBroadcastSpec extends SparkSpec {
     try {
       val before = confBroadcasts()
       body
-      val leaked = confBroadcasts() -- before
-      assert(leaked.isEmpty, s"conf broadcasts left on the block manager: $leaked")
+      // `Broadcast.destroy()` drops the driver's copy asynchronously, so a
+      // released broadcast can stay listed for a moment after the call
+      eventually(timeout(Span(5, Seconds)), interval(Span(20, Millis))) {
+        val leaked = confBroadcasts() -- before
+        assert(leaked.isEmpty, s"conf broadcasts left on the block manager: $leaked")
+      }
     } finally TxLog.vacuumDistributeThreshold = saved
   }
 
@@ -68,5 +76,20 @@ class ConfBroadcastSpec extends SparkSpec {
       assert(TxLog.deepClone(spark, t, dst) == 1L)
       assert(TxLog.generateSymlinkManifest(spark, t).size == 4)
     }
+  }
+
+  test("reads of a deletion-vector table leave no conf broadcast") {
+    val t = table()
+    TxLog.delete(spark, t, col("k") < 3L, deletionVectors = true)
+    // the frames stay reachable through the check, so a broadcast they
+    // held cannot have been dropped by garbage collection meanwhile
+    val reads = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
+    assertReleases {
+      (1 to 3).foreach { _ =>
+        reads += TxLog.read(spark, t)
+        assert(reads.last.count() == 37L)
+      }
+    }
+    assert(reads.size == 3)
   }
 }

@@ -2,14 +2,22 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.functions.{col, expr, lit, when}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
 /** General MERGE INTO (q123): conditional WHEN MATCHED UPDATE/DELETE,
   * WHEN NOT MATCHED INSERT, WHEN NOT MATCHED BY SOURCE, clause order,
-  * multi-match rejection, and cost-shape guarantees (insert-only appends
-  * without rewriting; the DV path rewrites nothing).
+  * multi-match rejection, cost-shape guarantees (insert-only appends
+  * without rewriting; the DV path rewrites nothing), and the change feed:
+  * one projection of the acted join, equal to the three-way union it
+  * replaced and planned with a single join.
   */
 class MergeIntoSpec extends SparkSpec {
   import spark.implicits._
@@ -595,5 +603,209 @@ class MergeIntoSpec extends SparkSpec {
     assert(freshRows == 1L, s"DV merge rewrote data: $freshRows fresh rows")
     val got = TxLog.read(spark, t).as[(Long, String, Int)].collect().toSet
     assert(got == Set((1L, "x", 10), (2L, "b", 20)))
+  }
+
+  // --- the change feed: one projection of `acted` ---------------------
+
+  /** The general MERGE's change feed as it was first built: a union of
+    * three branches over `acted` (pre-images, update post-images,
+    * inserts), each its own filter of the join. The reference that
+    * [[TxLog.mergeFeed]] must equal.
+    */
+  private def unionFeed(in: TxLog.MergeFeedInputs): DataFrame = {
+    val act = col("__act")
+    val pre = in.acted.filter(act.isin((in.updTags ++ in.delTags): _*))
+      .select(in.preImage :+ when(act.isin(in.updTags: _*), lit("update_preimage"))
+        .otherwise(lit("delete")).as("_change_type"): _*)
+    val post = in.acted.filter(act.isin(in.updTags: _*))
+      .select(in.postImage :+ lit("update_postimage").as("_change_type"): _*)
+    val ins = in.inserts
+      .getOrElse(in.acted.filter(act.isin(in.insTags: _*)).select(in.postImage: _*))
+      .withColumn("_change_type", lit("insert"))
+    pre.unionByName(post).unionByName(ins)
+  }
+
+  /** `df`'s rows over `cols`, as sorted strings (an order-free compare). */
+  private def rowsOf(df: DataFrame, cols: Seq[String]): Seq[String] =
+    df.select(cols.map(c => col(s"`$c`")): _*).collect().map(_.toString).toSeq.sorted
+
+  /** Runs `merge` (a change-feed merge into `t` returning its version) and
+    * checks that the feed it committed, [[TxLog.mergeFeed]] and the
+    * reference union agree row for row; returns the committed rows.
+    */
+  private def feedAgrees(t: String)(merge: => Long): Seq[String] = {
+    var seen = Option.empty[TxLog.MergeFeedInputs]
+    TxLog.mergeFeedHook = in => seen = Some(in)
+    val v = try merge finally TxLog.mergeFeedHook = _ => ()
+    val in = seen.getOrElse(fail("the merge built no general change feed"))
+    val ref = unionFeed(in)
+    val cols = ref.columns.toSeq
+    val want = rowsOf(ref, cols)
+    assert(want.nonEmpty)
+    assert(rowsOf(TxLog.mergeFeed(in), cols) == want, "one-projection feed")
+    val committed = rowsOf(TxLog.readChangeFeed(spark, t, v - 1, Some(v)), cols)
+    assert(committed == want, "committed feed")
+    committed
+  }
+
+  test("change feed equals the three-way union: conditional matched update/delete + insert") {
+    for (dv <- Seq(false, true)) {
+      val t = tmpTable(); seed(t)
+      val got = feedAgrees(t)(TxLog.mergeInto(spark, t, src.toDF("k", "sv", "op"),
+        on = expr("t.k = s.k"),
+        matched = Seq(
+          MergeDelete(cond = Some(expr("s.op = 'del'"))),
+          MergeUpdate(Map("v" -> expr("s.sv"), "n" -> expr("t.n + 1")),
+            cond = Some(expr("s.op = 'upd'")))),
+        notMatched = Seq(
+          MergeInsert(Map("k" -> expr("s.k"), "v" -> expr("s.sv")),
+            cond = Some(expr("s.op = 'ins'")))),
+        deletionVectors = dv, changeFeed = true))
+      assert(got.size == 4, s"dv=$dv: $got")
+    }
+  }
+
+  test("change feed equals the three-way union: by-source update and delete") {
+    for (dv <- Seq(false, true)) {
+      val t = tmpTable(); seed(t)
+      val got = feedAgrees(t)(TxLog.mergeInto(spark, t,
+        Seq((1L, "x"), (2L, "y")).toDF("k", "sv"),
+        on = expr("t.k = s.k"),
+        matched = Seq(MergeUpdate(Map("v" -> expr("s.sv")))),
+        notMatchedBySource = Seq(
+          MergeDelete(cond = Some(expr("t.n >= 40"))),
+          MergeUpdate(Map("v" -> lit("stale")))),
+        deletionVectors = dv, changeFeed = true))
+      // two matched updates, one by-source update (pre + post each), one delete
+      assert(got.size == 7, s"dv=$dv: $got")
+    }
+  }
+
+  test("change feed equals the three-way union: unconditional update + insert") {
+    val t = tmpTable(); seed(t)
+    val got = feedAgrees(t)(TxLog.mergeInto(spark, t,
+      Seq((2L, "B"), (7L, "G"), (8L, "H")).toDF("k", "sv"),
+      on = expr("t.k = s.k"),
+      matched = Seq(MergeUpdate(Map("v" -> expr("s.sv")))),
+      notMatched = Seq(MergeInsert(Map("k" -> expr("s.k"), "v" -> expr("s.sv"),
+        "n" -> lit(0)))),
+      changeFeed = true))
+    assert(got.size == 4, got)
+  }
+
+  test("change feed equals the three-way union: no insert clause") {
+    val t = tmpTable(); seed(t)
+    val got = feedAgrees(t)(TxLog.mergeInto(spark, t, src.toDF("k", "sv", "op"),
+      on = expr("t.k = s.k"),
+      matched = Seq(
+        MergeUpdate(Map("v" -> expr("s.sv")), cond = Some(expr("s.op = 'upd'"))),
+        MergeDelete(cond = Some(expr("s.op = 'del'")))),
+      changeFeed = true))
+    assert(got.size == 3, got)
+  }
+
+  test("change feed equals the three-way union: multi-pair copy-on-write") {
+    val t = tmpTable(); seed(t)
+    val got = feedAgrees(t)(TxLog.mergeInto(spark, t,
+      Seq((2L, "B1"), (2L, "B2"), (3L, "C1"), (3L, "C2")).toDF("k", "sv"),
+      on = expr("t.k = s.k"),
+      matched = Seq(
+        MergeUpdate(Map("v" -> expr("s.sv")), cond = Some(expr("s.sv = 'B1'"))),
+        MergeDelete(cond = Some(expr("s.sv = 'C2'")))),
+      changeFeed = true))
+    assert(got.size == 3, got)
+    assert(TxLog.read(spark, t).as[(Long, String, Int)].collect().toSet ==
+      Set((1L, "a", 10), (2L, "B1", 20), (4L, "d", 40)))
+  }
+
+  test("change feed equals the three-way union: schema evolution") {
+    for (dv <- Seq(false, true)) {
+      val t = tmpTable(); seed(t)
+      val got = feedAgrees(t)(TxLog.mergeInto(spark, t,
+        Seq((2L, "B", "x2"), (9L, "I", "x9")).toDF("sk", "sv", "extra"),
+        on = expr("t.k = s.sk"),
+        matched = Seq(MergeUpdate(Map("v" -> expr("s.sv"),
+          "extra" -> expr("s.extra")))),
+        notMatched = Seq(MergeInsert(Map("k" -> expr("s.sk"),
+          "v" -> expr("s.sv"), "extra" -> expr("s.extra")))),
+        deletionVectors = dv, changeFeed = true, evolveSchema = true))
+      assert(got.size == 3, s"dv=$dv: $got")
+    }
+  }
+
+  test("change feed equals the three-way union: renamed columns") {
+    val t = tmpTable(); seed(t)
+    TxLog.renameColumn(spark, t, "v", "val")
+    val got = feedAgrees(t)(TxLog.mergeInto(spark, t, Seq((2L, "B"), (6L, "F")).toDF("k", "sv"),
+      on = expr("t.k = s.k"),
+      matched = Seq(MergeUpdate(Map("val" -> expr("s.sv")))),
+      notMatched = Seq(MergeInsert(Map("k" -> expr("s.k"), "val" -> expr("s.sv")))),
+      notMatchedBySource = Seq(
+        MergeUpdate(Map("val" -> lit("old")), cond = Some(expr("t.k = 4")))),
+      changeFeed = true))
+    assert(got.size == 5, got)
+    assert(got.exists(_.contains("old")), got)
+  }
+
+  test("identity table: the change feed's inserts carry the data's ids") {
+    for (dv <- Seq(false, true)) {
+      val t = tmpTable()
+      TxLog.overwrite(Seq((0L, 1L, "a"), (0L, 2L, "b")).toDF("id", "k", "v"), t)
+      TxLog.setIdentityColumn(spark, t, "id", start = 100L)
+      val since = TxLog.latestVersion(spark, t).get
+      feedAgrees(t)(TxLog.mergeInto(spark, t,
+        Seq((2L, "B"), (9L, "I"), (10L, "J"), (11L, "K")).toDF("sk", "sv"),
+        on = expr("t.k = s.sk"),
+        matched = Seq(MergeUpdate(Map("v" -> expr("s.sv")))),
+        notMatched = Seq(MergeInsert(Map("k" -> expr("s.sk"), "v" -> expr("s.sv")))),
+        deletionVectors = dv, changeFeed = true))
+      val feedIds = TxLog.readChangeFeed(spark, t, since)
+        .where(expr("_change_type = 'insert'"))
+        .select("k", "id").as[(Long, Long)].collect().toSet
+      val tableIds = TxLog.read(spark, t).where(expr("k >= 9"))
+        .select("k", "id").as[(Long, Long)].collect().toSet
+      assert(feedIds == tableIds && tableIds.map(_._2) == Set(100L, 101L, 102L),
+        s"dv=$dv: feed $feedIds must equal table $tableIds")
+    }
+  }
+
+  /** The logical joins in the query of every CDF write `body` commits. */
+  private def cdfWriteJoins(body: => Unit): Seq[Seq[JoinType]] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.optimizedPlan match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if w.outputPath.getName == "_cdf" => plans.add(w.query)
+          case _ => ()
+        }
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graftprobe.ListenerBusProbe.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.map(_.collect { case j: Join => j.joinType })
+  }
+
+  test("a change-feed merge's CDF write plans one join, weakened from full outer") {
+    def joinsOf(matched: Seq[TxLog.MergeMatchedClause],
+        notMatched: Seq[MergeInsert]): Seq[JoinType] = {
+      val t = tmpTable(); seed(t)
+      val writes = cdfWriteJoins(TxLog.mergeInto(spark, t, src.toDF("k", "sv", "op"),
+        on = expr("t.k = s.k"), matched = matched, notMatched = notMatched,
+        changeFeed = true))
+      assert(writes.size == 1, s"expected one CDF write, saw ${writes.size}")
+      writes.head
+    }
+    val update = MergeUpdate(Map("v" -> expr("s.sv")), cond = Some(expr("s.op = 'upd'")))
+    val insert = MergeInsert(Map("k" -> expr("s.k"), "v" -> expr("s.sv")))
+    // updates and inserts need the source side only
+    assert(joinsOf(Seq(update), Seq(insert)) == Seq(RightOuter))
+    // updates and deletes need both sides
+    assert(joinsOf(Seq(update, MergeDelete()), Seq.empty) == Seq(Inner))
+    assert(!joinsOf(Seq(MergeDelete()), Seq(insert)).contains(FullOuter))
   }
 }

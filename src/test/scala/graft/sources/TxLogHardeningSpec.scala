@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import java.util.concurrent.CountDownLatch
 
-import org.apache.spark.sql.functions.{col, lit, udf}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, expr, lit, udf}
 
 import graft.SparkSpec
 
@@ -187,6 +188,53 @@ class TxLogHardeningSpec extends SparkSpec {
     assert(!caller.isAlive)
     assert(failure.getMessage == "data write failed")
     assert(interrupted, "the interrupt delivered during the drain was lost")
+  }
+
+  test("change-feed DELETE and MERGE run every job under the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    /** The job groups of the jobs `body` ran under `group`. */
+    def jobGroups(group: String)(body: => Unit): Seq[String] = {
+      org.apache.spark.graftprobe.ListenerBusProbe.drain(sc)
+      groups.clear()
+      sc.setJobGroup(group, s"spec: $group")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.graftprobe.ListenerBusProbe.drain(sc)
+      import scala.jdk.CollectionConverters._
+      groups.asScala.toSeq
+    }
+    val t = tmpTable()
+    TxLog.overwrite((0L until 40L).map(i => (i, s"v$i")).toDF("k", "v")
+      .repartition(4, col("k")), t)
+    val since = TxLog.latestVersion(spark, t).get
+    sc.addSparkListener(listener)
+    try {
+      // more change-feed commits than the pool has threads, each under its
+      // own group: a thread that kept the group it was created under shows
+      // up as a foreign group on a later commit
+      (1 to 2).foreach { round =>
+        val del = jobGroups(s"cdf-delete-$round") {
+          TxLog.delete(spark, t, col("k") === round.toLong, changeFeed = true)
+        }
+        assert(del.nonEmpty && del.forall(_ == s"cdf-delete-$round"), del)
+        val mrg = jobGroups(s"cdf-merge-$round") {
+          TxLog.mergeInto(spark, t,
+            Seq((10L + round, "u"), (100L + round, "i")).toDF("k", "sv"),
+            on = expr("t.k = s.k"),
+            matched = Seq(TxLog.MergeUpdate(Map("v" -> expr("s.sv")))),
+            notMatched = Seq(TxLog.MergeInsert(Map("k" -> expr("s.k"),
+              "v" -> expr("s.sv")))),
+            changeFeed = true)
+        }
+        assert(mrg.nonEmpty && mrg.forall(_ == s"cdf-merge-$round"), mrg)
+      }
+      assert(TxLog.readChangeFeed(spark, t, since).count() == 2L * (1 + 2 + 1))
+    } finally sc.removeSparkListener(listener)
   }
 }
 
