@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{array, broadcast, coalesce, col, collect_list, count, explode, input_file_name, lit, max, min, row_number, struct, substring_index, sum, when}
 import org.apache.spark.sql.types._
@@ -2946,6 +2946,9 @@ object TxLog {
     *   - '''by-source clauses''': act on rows that DON'T match, which
     *     can live anywhere — the whole table is the working set (use
     *     vectors, or a partition-scoped `on`, for big tables).
+    * Both non-insert-only shapes read `source` ONCE: it is cached for
+    * the merge and released when it returns or throws (see the comment
+    * at the top of the body).
     *
     * `evolveSchema = true` (the Delta `WITH SCHEMA EVOLUTION` knob):
     * source columns the clauses assign but the target lacks become new
@@ -2987,395 +2990,427 @@ object TxLog {
       require(!source.columns.contains(c),
         s"mergeInto source must not contain reserved column '$c'"))
     val t = new Path(table)
-    val srcM = source.withColumn("__s_m", lit(1)).alias("s")
+    // `__s_m` marks a source-side row; its value is unique to this merge
+    // so that no other plan shares the cache entry below (a string
+    // literal is codegen'd as a reference, so it leaves the generated
+    // code, and its cache, unchanged)
+    val srcM = source.withColumn("__s_m", lit(java.util.UUID.randomUUID().toString))
+      .alias("s")
     def hold(c: Option[Column]): Column =
       c.map(x => coalesce(x, lit(false))).getOrElse(lit(true))
-    (1 to maxAttempts).foreach { _ =>
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"table $table has no committed versions to merge into"))
-      val m = manifestAt(spark, table, base)
-      // already-applied batch: commit NOTHING (the CAS on base makes
-      // this check race-safe — a same-app commit landing after it bumps
-      // the version, voiding this attempt)
-      if (txnAppId.exists(id =>
-          m.txn.getOrElse(Map.empty).get(id).exists(_ >= txnBatchId)))
-        return m.version
-      val txnDelta: Map[String, Long] =
-        txnAppId.map(_ -> txnBatchId).toMap
-      // WITH SCHEMA EVOLUTION (the Delta mergeSchema-for-merge knob):
-      // source columns the clauses actually ASSIGN but the target lacks
-      // widen the schema as new NULLABLE fields inside the SAME merge
-      // commit — the committed manifest's schemaJson comes from the
-      // written frame, which carries them; untouched files simply lack
-      // the columns and null-fill on read (the addColumns semantics,
-      // fused into the merge). Only assignment keys evolve — the Delta
-      // stance: star-expansion (done by the SQL layer) or an explicit
-      // assignment, never a source column every clause ignores. A name
-      // retired by dropColumn (or still present physically under a
-      // rename) cannot be resurrected — fail loudly.
-      val extraFields: Seq[StructField] =
-        if (!evolveSchema) Seq.empty
-        else {
-          val logicalNames = logicalSchema(m).fieldNames.map(_.toLowerCase).toSet
-          val physNames = DataType.fromJson(m.schemaJson)
-            .asInstanceOf[StructType].fieldNames.map(_.toLowerCase).toSet
-          val dead = m.dropped.getOrElse(Seq.empty).map(_.toLowerCase).toSet
-          val assigned: Set[String] = ((matched ++ notMatchedBySource).flatMap {
-            case MergeUpdate(set, _) => set.keys
-            case _ => Seq.empty
-          } ++ notMatched.flatMap(_.values.keys))
-            .map(_.toLowerCase).toSet -- logicalNames
-          val fields = source.schema.fields.toSeq
-            .filter(f => assigned(f.name.toLowerCase))
-          val orphans = assigned -- fields.map(_.name.toLowerCase)
-          require(orphans.isEmpty,
-            s"mergeInto schema evolution: assigned column(s) " +
-              s"${orphans.mkString(", ")} exist in neither the target nor " +
-              s"the source of $table - cannot infer a type for them")
-          fields.map { f =>
-            require(!dead(f.name.toLowerCase) && !physNames(f.name.toLowerCase),
-              s"mergeInto schema evolution cannot add '${f.name}' to " +
-                s"$table: the name was previously dropped or renamed " +
-                "away - old files may still hold its pre-drop values")
-            f.copy(dataType = asNullable(f.dataType), nullable = true,
-              metadata = Metadata.empty)
-          }
-        }
-      val extraNames = extraFields.map(_.name).toSet
-      val schema = StructType(logicalSchema(m).fields ++ extraFields)
-      val gen = m.generated.getOrElse(Map.empty)
-      val cons = m.constraints.getOrElse(Map.empty)
-      // identity columns: NOT MATCHED inserts receive fresh ids from the
-      // snapshot's high-water marks inside THIS commit (the same
-      // zipWithIndex + CAS recipe as appendWithIdentity — the version
-      // CAS below subsumes the marks CAS, since marks only move with
-      // versions); updated/kept rows keep their existing ids, and no
-      // clause may assign one (GENERATED ALWAYS semantics)
-      val idMap = m.identity.getOrElse(Map.empty)
-      def checkAssign(cols: Iterable[String], what: String): Unit =
-        cols.foreach { c =>
-          require(schema.fieldNames.contains(c),
-            s"mergeInto $what references no such column '$c' of $table " +
-              s"(schema: ${schema.fieldNames.mkString(", ")})")
-          require(!gen.contains(c),
-            s"mergeInto cannot assign generated column '$c' of $table — " +
-              s"it derives from (${gen.getOrElse(c, "")})")
-          require(!idMap.contains(c),
-            s"mergeInto cannot assign identity column '$c' of $table — " +
-              "it is GENERATED ALWAYS AS IDENTITY")
-        }
-      def advancedIds(inserted: Long): Option[Map[String, IdentitySpec]] =
-        if (idMap.isEmpty) None
-        else Some(idMap.map { case (c, sp) =>
-          c -> sp.copy(next = sp.next + sp.step * inserted) })
-      val idFreeFields = schema.fields.toSeq.filterNot(f => idMap.contains(f.name))
-      (matched ++ notMatchedBySource).foreach {
-        case MergeUpdate(set, _) => checkAssign(set.keys, "UPDATE SET")
-        case _ => ()
+    // The general path reads the source in its find pass, its data write
+    // and its change feed, on every CAS attempt. Materialize it ONCE
+    // (Delta's materializeSource): all of them then see the same rows —
+    // a non-deterministic or concurrently changing source can no longer
+    // make the find pass and the write disagree, which would turn a
+    // matched row into a duplicate insert — and the cached frame's exact
+    // size lets the planner broadcast a small source instead of the
+    // target. `srcM` is merge-private: no user plan and no concurrent
+    // merge of the same `source` can share its cache entry (a user's own
+    // cache of `source` is untouched), and it is released in the
+    // `finally` below on every exit: success, no-op, the ambiguity
+    // error, a failed write, and exhausted retries. The insert-only path
+    // reads the source once anyway and does not materialize.
+    val materialize = matched.nonEmpty || notMatchedBySource.nonEmpty
+    try {
+      if (materialize) {
+        srcM.persist()
+        srcM.write.format("noop").mode("overwrite").save()
       }
-      notMatched.foreach(cl => checkAssign(cl.values.keys, "INSERT"))
-
-      // re-derive generated columns AFTER clause assignments (mirrors
-      // update), so inbound validation can never trip on a stale value
-      def regen(df: DataFrame): DataFrame =
-        gen.toSeq.sortBy(_._1).foldLeft(df) { case (acc, (c, sql)) =>
-          acc.withColumn(c, org.apache.spark.sql.functions.expr(sql)
-            .cast(schema(c).dataType))
-        }
-
-      // ---- insert-only fast path: one anti-join, zero rewrites --------
-      if (matched.isEmpty && notMatchedBySource.isEmpty) {
-        val unmatched = srcM.join(
-          readLive(spark, t, m, m.files).alias("t"), on, "left_anti")
-        val taggedI = notMatched.zipWithIndex.map { case (cl, j) =>
-          (hold(cl.cond), s"i$j") }
-        val actI = taggedI.tail
-          .foldLeft(when(taggedI.head._1, lit(taggedI.head._2))) {
-            case (acc, (c, tag)) => acc.when(c, lit(tag)) }
-          .otherwise(lit("drop"))
-        val bare = unmatched.withColumn("__act", actI)
-          .filter(col("__act") =!= "drop")
-          .select(idFreeFields.map { f =>
-            notMatched.zipWithIndex
-              .foldLeft(lit(null).cast(f.dataType): Column) {
-                case (acc, (cl, j)) => when(col("__act") === s"i$j",
-                  cl.values.getOrElse(f.name, lit(null)).cast(f.dataType))
-                  .otherwise(acc)
-              }.as(f.name)
-          }: _*)
-        // identity: every fresh row is an insert, so the mark advance is
-        // just the written row count — no extra pass
-        val rows = if (idMap.isEmpty) bare else assignIdentity(bare, idMap, schema)
-        val w = writeData(enforcing(regen(rows), cons), table,
-          m.partitionBy.getOrElse(Seq.empty))
-        val cdfFiles =
-          if (!changeFeed) Seq.empty
+      (1 to maxAttempts).foreach { _ =>
+        val base = latestVersion(spark, table).getOrElse(
+          sys.error(s"table $table has no committed versions to merge into"))
+        val m = manifestAt(spark, table, base)
+        // already-applied batch: commit NOTHING (the CAS on base makes
+        // this check race-safe — a same-app commit landing after it bumps
+        // the version, voiding this attempt)
+        if (txnAppId.exists(id =>
+            m.txn.getOrElse(Map.empty).get(id).exists(_ >= txnBatchId)))
+          return m.version
+        val txnDelta: Map[String, Long] =
+          txnAppId.map(_ -> txnBatchId).toMap
+        // WITH SCHEMA EVOLUTION (the Delta mergeSchema-for-merge knob):
+        // source columns the clauses actually ASSIGN but the target lacks
+        // widen the schema as new NULLABLE fields inside the SAME merge
+        // commit — the committed manifest's schemaJson comes from the
+        // written frame, which carries them; untouched files simply lack
+        // the columns and null-fill on read (the addColumns semantics,
+        // fused into the merge). Only assignment keys evolve — the Delta
+        // stance: star-expansion (done by the SQL layer) or an explicit
+        // assignment, never a source column every clause ignores. A name
+        // retired by dropColumn (or still present physically under a
+        // rename) cannot be resurrected — fail loudly.
+        val extraFields: Seq[StructField] =
+          if (!evolveSchema) Seq.empty
           else {
-            // fresh files carry any evolution-added columns; reading
-            // them back with the OLD schema would silently drop those
-            // from the feed — widen the read schema to match the write
-            val readJson =
-              if (extraFields.isEmpty) m.schemaJson
-              else StructType(DataType.fromJson(m.schemaJson)
-                .asInstanceOf[StructType].fields ++ extraFields).json
-            writeCdf(spark, table, w.dataRel,
-              aliasLogical(toDf(spark, t, readJson, w.fresh), m)
-                .withColumn("_change_type", lit("insert")))
-          }
-        val committed = publish(spark, table, w, parent =>
-          if (parent.map(_.version).contains(base))
-            Some(Attempt("merge", m.files ++ w.fresh,
-              m.stats.getOrElse(Seq.empty) ++ w.stats,
-              parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
-              cdf = cdfFiles,
-              constraints = guardedCons(table, parent, cons),
-              identity = advancedIds(w.stats.map(_.rows).sum)))
-          else None)
-        committed.foreach(v => return v)
-      } else {
-        // ---- find pass: touched files + multi-match cardinality check.
-        // The ERROR is scoped the way Delta scopes it: only a target row
-        // that ≥2 source rows would actually UPDATE/DELETE (some matched
-        // clause condition holds for ≥2 of its pairs) is ambiguous. A
-        // row matched twice whose matched conditions are all false — or
-        // under clauses that never touch matched rows — merges fine.
-        // The TOUCHED-file set stays "any match at all": a matched
-        // source row must meet its target row in the acted join even
-        // when no clause fires, or it would be mistaken for NOT MATCHED
-        // and inserted as a duplicate.
-        val anyApplies: Column = matched.map(cl => hold(cl.cond))
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val byKey = byScanKey(m.files, t)
-        val perFile =
-          if (m.files.isEmpty) Seq.empty[(String, Long, Long)]
-          else liveKeyed(spark, t, m, m.files).alias("t")
-            .join(srcM, on, "inner")
-            .groupBy(col("t.__dv_k").as("__k"), col("t.__dv_i").as("__i"))
-            .agg(sum(when(anyApplies, lit(1L)).otherwise(lit(0L))).as("__a"),
-              count(lit(1L)).as("__n"))
-            .groupBy(col("__k")).agg(max(col("__a")).as("__amx"),
-              max(col("__n")).as("__nmx"))
-            .collect().toSeq
-            .map(r => (byKey.getOrElse(r.getString(0),
-              sys.error(s"scan returned unlisted file ${r.getString(0)}")),
-              r.getLong(1), r.getLong(2)))
-        if (perFile.exists(_._2 > 1L)) sys.error(
-          s"mergeInto $table: an UPDATE/DELETE clause applies to a target " +
-            "row through multiple source rows — the result is ambiguous; " +
-            "de-duplicate the source on the merge keys")
-        // some target row joined ≥2 source pairs (all but at most one a
-        // non-acting pair, per the check above): the CoW rewrite must
-        // collapse to ONE surviving pair per target row or it would
-        // write the row once per pair (duplicating kept rows and
-        // resurrecting deleted ones)
-        val multiPair = perFile.exists(_._3 > 1L)
-        val touched = perFile.map(_._1).distinct
-        // a by-source clause acts on rows that DON'T match — any file
-        // can hold one, so the working set widens to the whole table
-        val working =
-          if (notMatchedBySource.nonEmpty) m.files else touched
-        if (working.isEmpty && notMatched.isEmpty) return m.version
-
-        val tgt =
-          if (working.nonEmpty) liveKeyed(spark, t, m, working)
-          else aliasLogical(toDf(spark, t, m.schemaJson, Seq.empty), m)
-            .withColumn("__dv_k", lit(null).cast("string"))
-            .withColumn("__dv_i", lit(null).cast("long"))
-        val isM = col("t.__dv_k").isNotNull && col("__s_m").isNotNull
-        val isS = col("t.__dv_k").isNull && col("__s_m").isNotNull
-        val isT = col("__s_m").isNull
-        val tagged: Seq[(Column, String)] =
-          matched.zipWithIndex.map { case (cl, i) => (isM && hold(cl.cond), s"m$i") } ++
-          notMatched.zipWithIndex.map { case (cl, j) => (isS && hold(cl.cond), s"i$j") } ++
-          notMatchedBySource.zipWithIndex.map { case (cl, b) => (isT && hold(cl.cond), s"b$b") }
-        val act = tagged.tail
-          .foldLeft(when(tagged.head._1, lit(tagged.head._2))) {
-            case (acc, (c, tag)) => acc.when(c, lit(tag)) }
-          .otherwise(when(isS, lit("drop")).otherwise(lit("keep")))
-        val acted = tgt.alias("t").join(srcM, on, "full_outer")
-          .withColumn("__act", act)
-        val deadTags: Seq[String] =
-          matched.zipWithIndex.collect { case (MergeDelete(_), i) => s"m$i" } ++
-          notMatchedBySource.zipWithIndex.collect { case (MergeDelete(_), b) => s"b$b" } :+
-          "drop"
-        // a field's target-side value; an evolution-added column has
-        // none, so it reads NULL, not a (non-existent) t.<name>
-        def targetValue(f: StructField): Column =
-          if (extraNames(f.name)) lit(null).cast(f.dataType)
-          else col("t." + quoted(f.name)).cast(f.dataType)
-        // each field's post-clause value over `acted`'s columns
-        def outExprs(fields: Seq[StructField]): Seq[Column] =
-          fields.map { f =>
-            val branches: Seq[(String, Column)] =
-              matched.zipWithIndex.collect {
-                case (MergeUpdate(set, _), i) if set.contains(f.name) =>
-                  s"m$i" -> set(f.name) } ++
-              notMatched.zipWithIndex.map { case (cl, j) =>
-                s"i$j" -> cl.values.getOrElse(f.name, lit(null)) } ++
-              notMatchedBySource.zipWithIndex.collect {
-                case (MergeUpdate(set, _), b) if set.contains(f.name) =>
-                  s"b$b" -> set(f.name) }
-            branches.foldLeft(targetValue(f)) {
-              case (acc, (tag, v)) =>
-                when(col("__act") === tag, v.cast(f.dataType)).otherwise(acc)
-            }.as(f.name)
-          }
-        def outCols(df: DataFrame): DataFrame =
-          df.select(outExprs(schema.fields.toSeq): _*)
-
-        val updTags: Seq[String] =
-          matched.zipWithIndex.collect { case (MergeUpdate(_, _), i) => s"m$i" } ++
-          notMatchedBySource.zipWithIndex.collect {
-            case (MergeUpdate(_, _), b) => s"b$b" }
-        val delTags: Seq[String] =
-          matched.zipWithIndex.collect { case (MergeDelete(_), i) => s"m$i" } ++
-          notMatchedBySource.zipWithIndex.collect {
-            case (MergeDelete(_), b) => s"b$b" }
-        val insTags: Seq[String] = notMatched.indices.map(j => s"i$j")
-        // tags that ACT on a target row (fire a matched / by-source
-        // clause) — the pair that decides the row's fate
-        val actedTags: Seq[String] =
-          matched.indices.map(i => s"m$i") ++
-          notMatchedBySource.indices.map(b => s"b$b")
-        // Identity-assigned insert rows, built ONCE and reused by the
-        // data write and the CDF write so both see the same ids (same
-        // lineage; zipWithIndex over reused shuffle output is stable
-        // across the actions, the appendWithIdentity stance — its count
-        // job materializes the shuffle before either write starts). The
-        // extra count() for the mark advance is change-sized.
-        val insAssigned: Option[DataFrame] =
-          if (idMap.isEmpty || notMatched.isEmpty) None
-          else Some(assignIdentity(
-            acted.filter(col("__act").isin(insTags: _*)).select(outExprs(idFreeFields): _*),
-            idMap, schema))
-        val insertedForIds: Long =
-          if (insAssigned.isEmpty) 0L
-          else acted.filter(col("__act").isin(insTags: _*)).count()
-        // CDF for the general merge (the shape readChangeFeed folds): the
-        // acted-on target rows' pre-images (update_preimage / delete),
-        // update post-images, and inserts, as ONE projection of `acted`
-        // ([[mergeFeed]]). It reads only the parent snapshot and the
-        // source, never the fresh files, so [[overlapCdf]] writes it
-        // concurrently with the data. The feed reads `acted`, not the
-        // CoW path's collapsed `actedCow` — they agree for every
-        // CDF-visible tag because the collapse only discards NON-acting
-        // sibling pairs (tag "keep"/"drop", outside updTags/delTags/
-        // insTags; the ≥2-firing-pairs case already errored), so the
-        // feed can never disagree with the committed rows. An edit that
-        // lets a firing pair be collapsed away must switch the feed to
-        // the collapsed frame. `acted` is deliberately not persisted: a
-        // cached join output fragments the data write (several files
-        // per merge instead of one), which compaction then pays for.
-        val feed: Option[DataFrame] =
-          if (!changeFeed) None
-          else {
-            val in = MergeFeedInputs(acted,
-              preImage = schema.fields.toSeq.map(f => targetValue(f).as(f.name)),
-              postImage = outExprs(schema.fields.toSeq),
-              updTags, delTags, insTags, insAssigned)
-            mergeFeedHook(in)
-            Some(mergeFeed(in))
-          }
-
-        if (!deletionVectors) {
-          // copy-on-write: rewrite the working files without the dead
-          // rows, clause outputs applied; untouched files keep their DVs.
-          // Under join fanout (multiPair) collapse to one surviving pair
-          // per target position — the acting pair if any — mirroring the
-          // DV path's per-position semantics: without this a row matched
-          // by 2 source rows where ≤1 fires is written once per PAIR
-          // (a kept row duplicates; a fired delete is undone by its
-          // non-acting sibling pair rewriting the row). The window
-          // partitions on (file, row index): per-partition occupancy is
-          // bounded (= the row's pair fanout), but the SHUFFLE moves the
-          // whole working-set join output — the full table when a
-          // by-source clause widens `working` to every file — so one
-          // fan-out pair anywhere pays a working-set-sized shuffle. The
-          // multiPair gate keeps that off the common unique-key merge;
-          // scoping it tighter (semi-join on multi-paired positions)
-          // would itself shuffle the working set to find them.
-          val actedCow =
-            if (!multiPair) acted
-            else {
-              val firing = when(col("__act").isin(actedTags: _*), lit(0))
-                .otherwise(lit(1))
-              // positional union: the join output carries duplicate
-              // column NAMES (t.k / s.k), which unionByName rejects;
-              // both branches project acted's columns in identical order
-              acted.filter(col("t.__dv_k").isNotNull)
-                .withColumn("__pick", row_number().over(Window
-                  .partitionBy(col("t.__dv_k"), col("t.__dv_i"))
-                  .orderBy(firing)))
-                .filter(col("__pick") === 1).drop("__pick")
-                .union(acted.filter(col("t.__dv_k").isNull))
+            val logicalNames = logicalSchema(m).fieldNames.map(_.toLowerCase).toSet
+            val physNames = DataType.fromJson(m.schemaJson)
+              .asInstanceOf[StructType].fieldNames.map(_.toLowerCase).toSet
+            val dead = m.dropped.getOrElse(Seq.empty).map(_.toLowerCase).toSet
+            val assigned: Set[String] = ((matched ++ notMatchedBySource).flatMap {
+              case MergeUpdate(set, _) => set.keys
+              case _ => Seq.empty
+            } ++ notMatched.flatMap(_.values.keys))
+              .map(_.toLowerCase).toSet -- logicalNames
+            val fields = source.schema.fields.toSeq
+              .filter(f => assigned(f.name.toLowerCase))
+            val orphans = assigned -- fields.map(_.name.toLowerCase)
+            require(orphans.isEmpty,
+              s"mergeInto schema evolution: assigned column(s) " +
+                s"${orphans.mkString(", ")} exist in neither the target nor " +
+                s"the source of $table - cannot infer a type for them")
+            fields.map { f =>
+              require(!dead(f.name.toLowerCase) && !physNames(f.name.toLowerCase),
+                s"mergeInto schema evolution cannot add '${f.name}' to " +
+                  s"$table: the name was previously dropped or renamed " +
+                  "away - old files may still hold its pre-drop values")
+              f.copy(dataType = asNullable(f.dataType), nullable = true,
+                metadata = Metadata.empty)
             }
-          val rows = insAssigned match {
-            case None => outCols(actedCow.filter(!col("__act").isin(deadTags: _*)))
-            case Some(ins) => outCols(actedCow.filter(
-              !col("__act").isin((deadTags ++ insTags): _*))).unionByName(ins)
           }
-          val goneSet = working.toSet
-          val (w, cdfFiles) = overlapCdf(spark, table, feed) { relOpt =>
-            writeData(enforcing(regen(rows), cons), table,
-              m.partitionBy.getOrElse(Seq.empty), relOpt)
+        val extraNames = extraFields.map(_.name).toSet
+        val schema = StructType(logicalSchema(m).fields ++ extraFields)
+        val gen = m.generated.getOrElse(Map.empty)
+        val cons = m.constraints.getOrElse(Map.empty)
+        // identity columns: NOT MATCHED inserts receive fresh ids from the
+        // snapshot's high-water marks inside THIS commit (the same
+        // zipWithIndex + CAS recipe as appendWithIdentity — the version
+        // CAS below subsumes the marks CAS, since marks only move with
+        // versions); updated/kept rows keep their existing ids, and no
+        // clause may assign one (GENERATED ALWAYS semantics)
+        val idMap = m.identity.getOrElse(Map.empty)
+        def checkAssign(cols: Iterable[String], what: String): Unit =
+          cols.foreach { c =>
+            require(schema.fieldNames.contains(c),
+              s"mergeInto $what references no such column '$c' of $table " +
+                s"(schema: ${schema.fieldNames.mkString(", ")})")
+            require(!gen.contains(c),
+              s"mergeInto cannot assign generated column '$c' of $table — " +
+                s"it derives from (${gen.getOrElse(c, "")})")
+            require(!idMap.contains(c),
+              s"mergeInto cannot assign identity column '$c' of $table — " +
+                "it is GENERATED ALWAYS AS IDENTITY")
           }
+        def advancedIds(inserted: Long): Option[Map[String, IdentitySpec]] =
+          if (idMap.isEmpty) None
+          else Some(idMap.map { case (c, sp) =>
+            c -> sp.copy(next = sp.next + sp.step * inserted) })
+        val idFreeFields = schema.fields.toSeq.filterNot(f => idMap.contains(f.name))
+        (matched ++ notMatchedBySource).foreach {
+          case MergeUpdate(set, _) => checkAssign(set.keys, "UPDATE SET")
+          case _ => ()
+        }
+        notMatched.foreach(cl => checkAssign(cl.values.keys, "INSERT"))
+
+        // re-derive generated columns AFTER clause assignments (mirrors
+        // update), so inbound validation can never trip on a stale value
+        def regen(df: DataFrame): DataFrame =
+          gen.toSeq.sortBy(_._1).foldLeft(df) { case (acc, (c, sql)) =>
+            acc.withColumn(c, org.apache.spark.sql.functions.expr(sql)
+              .cast(schema(c).dataType))
+          }
+
+        // ---- insert-only fast path: one anti-join, zero rewrites --------
+        if (matched.isEmpty && notMatchedBySource.isEmpty) {
+          val unmatched = srcM.join(
+            readLive(spark, t, m, m.files).alias("t"), on, "left_anti")
+          val taggedI = notMatched.zipWithIndex.map { case (cl, j) =>
+            (hold(cl.cond), s"i$j") }
+          val actI = taggedI.tail
+            .foldLeft(when(taggedI.head._1, lit(taggedI.head._2))) {
+              case (acc, (c, tag)) => acc.when(c, lit(tag)) }
+            .otherwise(lit("drop"))
+          val bare = unmatched.withColumn("__act", actI)
+            .filter(col("__act") =!= "drop")
+            .select(idFreeFields.map { f =>
+              notMatched.zipWithIndex
+                .foldLeft(lit(null).cast(f.dataType): Column) {
+                  case (acc, (cl, j)) => when(col("__act") === s"i$j",
+                    cl.values.getOrElse(f.name, lit(null)).cast(f.dataType))
+                    .otherwise(acc)
+                }.as(f.name)
+            }: _*)
+          // identity: every fresh row is an insert, so the mark advance is
+          // just the written row count — no extra pass
+          val rows = if (idMap.isEmpty) bare else assignIdentity(bare, idMap, schema)
+          val w = writeData(enforcing(regen(rows), cons), table,
+            m.partitionBy.getOrElse(Seq.empty))
+          val cdfFiles =
+            if (!changeFeed) Seq.empty
+            else {
+              // fresh files carry any evolution-added columns; reading
+              // them back with the OLD schema would silently drop those
+              // from the feed — widen the read schema to match the write
+              val readJson =
+                if (extraFields.isEmpty) m.schemaJson
+                else StructType(DataType.fromJson(m.schemaJson)
+                  .asInstanceOf[StructType].fields ++ extraFields).json
+              writeCdf(spark, table, w.dataRel,
+                aliasLogical(toDf(spark, t, readJson, w.fresh), m)
+                  .withColumn("_change_type", lit("insert")))
+            }
           val committed = publish(spark, table, w, parent =>
             if (parent.map(_.version).contains(base))
-              Some(Attempt("merge",
-                m.files.filterNot(goneSet) ++ w.fresh,
-                m.stats.getOrElse(Seq.empty).filterNot(e => goneSet(e.path))
-                  ++ w.stats,
+              Some(Attempt("merge", m.files ++ w.fresh,
+                m.stats.getOrElse(Seq.empty) ++ w.stats,
                 parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
                 cdf = cdfFiles,
                 constraints = guardedCons(table, parent, cons),
-                identity = advancedIds(insertedForIds)))
+                identity = advancedIds(w.stats.map(_.rows).sum)))
             else None)
           committed.foreach(v => return v)
         } else {
-          // deletion vectors: EVERY acted-on target row's old position is
-          // vectored out (update and delete alike); updates' post-images
-          // and inserts land in one fresh write. Cost ∝ rows changed —
-          // no working file is read beyond the scans, none rewritten.
-          val tq = fs(spark, t).makeQualified(t)
-          // commit dir chosen before the find pass: acted-on target
-          // positions are aggregated per file and the sidecars written
-          // executor-side — one driver descriptor per touched file
-          val dataRel = newDataRel()
-          val plan = composeDvsDist(spark, t, tq, m, dataRel,
-            acted.filter(col("__act").isin(actedTags: _*))
-              .select(col("t.__dv_k").as("__dv_k"),
-                col("t.__dv_i").as("__dv_i")))
-          val liveTags: Seq[String] =
+          // ---- find pass: touched files + multi-match cardinality check.
+          // The ERROR is scoped the way Delta scopes it: only a target row
+          // that ≥2 source rows would actually UPDATE/DELETE (some matched
+          // clause condition holds for ≥2 of its pairs) is ambiguous. A
+          // row matched twice whose matched conditions are all false — or
+          // under clauses that never touch matched rows — merges fine.
+          // The TOUCHED-file set stays "any match at all": a matched
+          // source row must meet its target row in the acted join even
+          // when no clause fires, or it would be mistaken for NOT MATCHED
+          // and inserted as a duplicate.
+          val anyApplies: Column = matched.map(cl => hold(cl.cond))
+            .reduceOption(_ || _).getOrElse(lit(false))
+          val byKey = byScanKey(m.files, t)
+          // per target row: how many of its pairs a matched clause acts
+          // on (`_1`) and how many pairs it has (`_2`) — the one shuffle;
+          // the per-file maxima then fold in the tasks and on the driver
+          // ([[foldPerFile]]), with no second shuffle or job
+          val perFile: Seq[(String, Long, Long)] =
+            if (m.files.isEmpty) Seq.empty
+            else {
+              import spark.implicits._
+              foldPerFile(liveKeyed(spark, t, m, m.files).alias("t")
+                .join(srcM, on, "inner")
+                .groupBy(col("t.__dv_k").as("__k"), col("t.__dv_i").as("__i"))
+                .agg(struct(
+                  sum(when(anyApplies, lit(1L)).otherwise(lit(0L))).as("_1"),
+                  count(lit(1L)).as("_2")).as("__an"))
+                .select(col("__k"), col("__an"))
+                .as[(String, (Long, Long))]) { (x, y) =>
+                  (math.max(x._1, y._1), math.max(x._2, y._2)) }
+                .toSeq.map { case (k, (a, n)) =>
+                  (byKey.getOrElse(k, sys.error(s"scan returned unlisted file $k")), a, n) }
+            }
+          if (perFile.exists(_._2 > 1L)) sys.error(
+            s"mergeInto $table: an UPDATE/DELETE clause applies to a target " +
+              "row through multiple source rows — the result is ambiguous; " +
+              "de-duplicate the source on the merge keys")
+          // some target row joined ≥2 source pairs (all but at most one a
+          // non-acting pair, per the check above): the CoW rewrite must
+          // collapse to ONE surviving pair per target row or it would
+          // write the row once per pair (duplicating kept rows and
+          // resurrecting deleted ones)
+          val multiPair = perFile.exists(_._3 > 1L)
+          val touched = perFile.map(_._1).distinct
+          // a by-source clause acts on rows that DON'T match — any file
+          // can hold one, so the working set widens to the whole table
+          val working =
+            if (notMatchedBySource.nonEmpty) m.files else touched
+          if (working.isEmpty && notMatched.isEmpty) return m.version
+
+          val tgt =
+            if (working.nonEmpty) liveKeyed(spark, t, m, working)
+            else aliasLogical(toDf(spark, t, m.schemaJson, Seq.empty), m)
+              .withColumn("__dv_k", lit(null).cast("string"))
+              .withColumn("__dv_i", lit(null).cast("long"))
+          val isM = col("t.__dv_k").isNotNull && col("__s_m").isNotNull
+          val isS = col("t.__dv_k").isNull && col("__s_m").isNotNull
+          val isT = col("__s_m").isNull
+          val tagged: Seq[(Column, String)] =
+            matched.zipWithIndex.map { case (cl, i) => (isM && hold(cl.cond), s"m$i") } ++
+            notMatched.zipWithIndex.map { case (cl, j) => (isS && hold(cl.cond), s"i$j") } ++
+            notMatchedBySource.zipWithIndex.map { case (cl, b) => (isT && hold(cl.cond), s"b$b") }
+          val act = tagged.tail
+            .foldLeft(when(tagged.head._1, lit(tagged.head._2))) {
+              case (acc, (c, tag)) => acc.when(c, lit(tag)) }
+            .otherwise(when(isS, lit("drop")).otherwise(lit("keep")))
+          val acted = tgt.alias("t").join(srcM, on, "full_outer")
+            .withColumn("__act", act)
+          val deadTags: Seq[String] =
+            matched.zipWithIndex.collect { case (MergeDelete(_), i) => s"m$i" } ++
+            notMatchedBySource.zipWithIndex.collect { case (MergeDelete(_), b) => s"b$b" } :+
+            "drop"
+          // a field's target-side value; an evolution-added column has
+          // none, so it reads NULL, not a (non-existent) t.<name>
+          def targetValue(f: StructField): Column =
+            if (extraNames(f.name)) lit(null).cast(f.dataType)
+            else col("t." + quoted(f.name)).cast(f.dataType)
+          // each field's post-clause value over `acted`'s columns
+          def outExprs(fields: Seq[StructField]): Seq[Column] =
+            fields.map { f =>
+              val branches: Seq[(String, Column)] =
+                matched.zipWithIndex.collect {
+                  case (MergeUpdate(set, _), i) if set.contains(f.name) =>
+                    s"m$i" -> set(f.name) } ++
+                notMatched.zipWithIndex.map { case (cl, j) =>
+                  s"i$j" -> cl.values.getOrElse(f.name, lit(null)) } ++
+                notMatchedBySource.zipWithIndex.collect {
+                  case (MergeUpdate(set, _), b) if set.contains(f.name) =>
+                    s"b$b" -> set(f.name) }
+              branches.foldLeft(targetValue(f)) {
+                case (acc, (tag, v)) =>
+                  when(col("__act") === tag, v.cast(f.dataType)).otherwise(acc)
+              }.as(f.name)
+            }
+          def outCols(df: DataFrame): DataFrame =
+            df.select(outExprs(schema.fields.toSeq): _*)
+
+          val updTags: Seq[String] =
             matched.zipWithIndex.collect { case (MergeUpdate(_, _), i) => s"m$i" } ++
-            notMatched.indices.map(j => s"i$j") ++
             notMatchedBySource.zipWithIndex.collect {
               case (MergeUpdate(_, _), b) => s"b$b" }
-          val rows = insAssigned match {
-            case None => outCols(acted.filter(col("__act").isin(liveTags: _*)))
-            case Some(ins) => outCols(acted.filter(col("__act").isin(
-              liveTags.filterNot(insTags.contains): _*))).unionByName(ins)
+          val delTags: Seq[String] =
+            matched.zipWithIndex.collect { case (MergeDelete(_), i) => s"m$i" } ++
+            notMatchedBySource.zipWithIndex.collect {
+              case (MergeDelete(_), b) => s"b$b" }
+          val insTags: Seq[String] = notMatched.indices.map(j => s"i$j")
+          // tags that ACT on a target row (fire a matched / by-source
+          // clause) — the pair that decides the row's fate
+          val actedTags: Seq[String] =
+            matched.indices.map(i => s"m$i") ++
+            notMatchedBySource.indices.map(b => s"b$b")
+          // Identity-assigned insert rows, built ONCE and reused by the
+          // data write and the CDF write so both see the same ids (same
+          // lineage; zipWithIndex over reused shuffle output is stable
+          // across the actions, the appendWithIdentity stance — its count
+          // job materializes the shuffle before either write starts). The
+          // extra count() for the mark advance is change-sized.
+          val insAssigned: Option[DataFrame] =
+            if (idMap.isEmpty || notMatched.isEmpty) None
+            else Some(assignIdentity(
+              acted.filter(col("__act").isin(insTags: _*)).select(outExprs(idFreeFields): _*),
+              idMap, schema))
+          val insertedForIds: Long =
+            if (insAssigned.isEmpty) 0L
+            else acted.filter(col("__act").isin(insTags: _*)).count()
+          // CDF for the general merge (the shape readChangeFeed folds): the
+          // acted-on target rows' pre-images (update_preimage / delete),
+          // update post-images, and inserts, as ONE projection of `acted`
+          // ([[mergeFeed]]). It reads only the parent snapshot and the
+          // source, never the fresh files, so [[overlapCdf]] writes it
+          // concurrently with the data. The feed reads `acted`, not the
+          // CoW path's collapsed `actedCow` — they agree for every
+          // CDF-visible tag because the collapse only discards NON-acting
+          // sibling pairs (tag "keep"/"drop", outside updTags/delTags/
+          // insTags; the ≥2-firing-pairs case already errored), so the
+          // feed can never disagree with the committed rows. An edit that
+          // lets a firing pair be collapsed away must switch the feed to
+          // the collapsed frame. `acted` is deliberately not persisted: a
+          // cached join output fragments the data write (several files
+          // per merge instead of one), which compaction then pays for.
+          val feed: Option[DataFrame] =
+            if (!changeFeed) None
+            else {
+              val in = MergeFeedInputs(acted,
+                preImage = schema.fields.toSeq.map(f => targetValue(f).as(f.name)),
+                postImage = outExprs(schema.fields.toSeq),
+                updTags, delTags, insTags, insAssigned)
+              mergeFeedHook(in)
+              Some(mergeFeed(in))
+            }
+
+          if (!deletionVectors) {
+            // copy-on-write: rewrite the working files without the dead
+            // rows, clause outputs applied; untouched files keep their DVs.
+            // Under join fanout (multiPair) collapse to one surviving pair
+            // per target position — the acting pair if any — mirroring the
+            // DV path's per-position semantics: without this a row matched
+            // by 2 source rows where ≤1 fires is written once per PAIR
+            // (a kept row duplicates; a fired delete is undone by its
+            // non-acting sibling pair rewriting the row). The window
+            // partitions on (file, row index): per-partition occupancy is
+            // bounded (= the row's pair fanout), but the SHUFFLE moves the
+            // whole working-set join output — the full table when a
+            // by-source clause widens `working` to every file — so one
+            // fan-out pair anywhere pays a working-set-sized shuffle. The
+            // multiPair gate keeps that off the common unique-key merge;
+            // scoping it tighter (semi-join on multi-paired positions)
+            // would itself shuffle the working set to find them.
+            val actedCow =
+              if (!multiPair) acted
+              else {
+                val firing = when(col("__act").isin(actedTags: _*), lit(0))
+                  .otherwise(lit(1))
+                // positional union: the join output carries duplicate
+                // column NAMES (t.k / s.k), which unionByName rejects;
+                // both branches project acted's columns in identical order
+                acted.filter(col("t.__dv_k").isNotNull)
+                  .withColumn("__pick", row_number().over(Window
+                    .partitionBy(col("t.__dv_k"), col("t.__dv_i"))
+                    .orderBy(firing)))
+                  .filter(col("__pick") === 1).drop("__pick")
+                  .union(acted.filter(col("t.__dv_k").isNull))
+              }
+            val rows = insAssigned match {
+              case None => outCols(actedCow.filter(!col("__act").isin(deadTags: _*)))
+              case Some(ins) => outCols(actedCow.filter(
+                !col("__act").isin((deadTags ++ insTags): _*))).unionByName(ins)
+            }
+            val goneSet = working.toSet
+            val (w, cdfFiles) = overlapCdf(spark, table, feed) { relOpt =>
+              writeData(enforcing(regen(rows), cons), table,
+                m.partitionBy.getOrElse(Seq.empty), relOpt)
+            }
+            val committed = publish(spark, table, w, parent =>
+              if (parent.map(_.version).contains(base))
+                Some(Attempt("merge",
+                  m.files.filterNot(goneSet) ++ w.fresh,
+                  m.stats.getOrElse(Seq.empty).filterNot(e => goneSet(e.path))
+                    ++ w.stats,
+                  parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
+                  cdf = cdfFiles,
+                  constraints = guardedCons(table, parent, cons),
+                  identity = advancedIds(insertedForIds)))
+              else None)
+            committed.foreach(v => return v)
+          } else {
+            // deletion vectors: EVERY acted-on target row's old position is
+            // vectored out (update and delete alike); updates' post-images
+            // and inserts land in one fresh write. Cost ∝ rows changed —
+            // no working file is read beyond the scans, none rewritten.
+            val tq = fs(spark, t).makeQualified(t)
+            // commit dir chosen before the find pass: acted-on target
+            // positions are aggregated per file and the sidecars written
+            // executor-side — one driver descriptor per touched file
+            val dataRel = newDataRel()
+            val plan = composeDvsDist(spark, t, tq, m, dataRel,
+              acted.filter(col("__act").isin(actedTags: _*))
+                .select(col("t.__dv_k").as("__dv_k"),
+                  col("t.__dv_i").as("__dv_i")))
+            val liveTags: Seq[String] =
+              matched.zipWithIndex.collect { case (MergeUpdate(_, _), i) => s"m$i" } ++
+              notMatched.indices.map(j => s"i$j") ++
+              notMatchedBySource.zipWithIndex.collect {
+                case (MergeUpdate(_, _), b) => s"b$b" }
+            val rows = insAssigned match {
+              case None => outCols(acted.filter(col("__act").isin(liveTags: _*)))
+              case Some(ins) => outCols(acted.filter(col("__act").isin(
+                liveTags.filterNot(insTags.contains): _*))).unionByName(ins)
+            }
+            val (w, cdfFiles) = overlapCdf(spark, table, feed, Some(dataRel)) { relOpt =>
+              writeData(enforcing(regen(rows), cons), table,
+                m.partitionBy.getOrElse(Seq.empty), relOpt)
+            }
+            val committed = publish(spark, table, w, parent =>
+              if (parent.map(_.version).contains(base))
+                Some(Attempt("merge",
+                  m.files.filterNot(plan.goneSet) ++ w.fresh,
+                  m.stats.getOrElse(Seq.empty)
+                    .filterNot(e => plan.goneSet(e.path)) ++ w.stats,
+                  parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
+                  cdf = cdfFiles,
+                  constraints = guardedCons(table, parent, cons),
+                  dvs = Some(plan.dvsAgainst(m)),
+                  identity = advancedIds(insertedForIds)))
+              else None)
+            committed.foreach(v => return v)
           }
-          val (w, cdfFiles) = overlapCdf(spark, table, feed, Some(dataRel)) { relOpt =>
-            writeData(enforcing(regen(rows), cons), table,
-              m.partitionBy.getOrElse(Seq.empty), relOpt)
-          }
-          val committed = publish(spark, table, w, parent =>
-            if (parent.map(_.version).contains(base))
-              Some(Attempt("merge",
-                m.files.filterNot(plan.goneSet) ++ w.fresh,
-                m.stats.getOrElse(Seq.empty)
-                  .filterNot(e => plan.goneSet(e.path)) ++ w.stats,
-                parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
-                cdf = cdfFiles,
-                constraints = guardedCons(table, parent, cons),
-                dvs = Some(plan.dvsAgainst(m)),
-                identity = advancedIds(insertedForIds)))
-            else None)
-          committed.foreach(v => return v)
         }
       }
-    }
-    mergeRaceError(table, maxAttempts)
+      mergeRaceError(table, maxAttempts)
+    } finally if (materialize) srcM.unpersist(blocking = false)
   }
 
   /** The inputs of a general MERGE's change feed: `acted` (the target ⟗
@@ -3956,14 +3991,6 @@ object TxLog {
   /** One touched file from the copy-on-write find scan. */
   private final case class Touched(rel: String, matches: Long)
 
-  /** Which manifest-listed files contain a row where `cond` is TRUE —
-    * ONE scan that reads only the columns `cond` references (everything
-    * else is pruned away by the `input_file_name`-only projection) with
-    * `cond` pushed into the parquet reader, so row-group stats prune
-    * non-matching files' IO before a row is ever materialized. Returns
-    * each hit file's match count (the full-file-delete fast path needs
-    * it). The per-file collect is O(files), a metadata-sized result.
-    */
   /** Logical conflict detection for a lost commit CAS: can a computed
     * DELETE/UPDATE attempt be REBASED onto the newer `parent` instead
     * of recomputed from scratch? True iff no table-level contract moved
@@ -4016,32 +4043,55 @@ object TxLog {
     */
   private[graft] var casRaceHook: () => Unit = () => ()
 
+  /** A per-file reduction with no Exchange: each task folds its
+    * `(file key, value)` rows into one row per file key with `op`, and
+    * the driver folds those partials the same way — ONE job, no shuffle,
+    * no AQE re-plan, and a result of at most files × tasks rows. Typed
+    * `mapPartitions` + `collect` keeps it a Dataset action, so the pass
+    * is a tracked SQL execution under the caller's job group.
+    */
+  private def foldPerFile[V](rows: Dataset[(String, V)])(op: (V, V) => V)(
+      implicit enc: Encoder[(String, V)]): Map[String, V] =
+    rows.mapPartitions { it =>
+      val acc = scala.collection.mutable.HashMap.empty[String, V]
+      it.foreach { case (k, v) => acc(k) = acc.get(k).fold(v)(op(_, v)) }
+      acc.iterator
+    }.collect().toSeq.groupMapReduce(_._1)(_._2)(op)
+
+  /** Which manifest-listed files contain a LIVE row where `cond` is
+    * TRUE, with each such file's match count (the full-file-delete tier
+    * compares it with the file's live rows). ONE scan that reads only
+    * the columns `cond` references, with `cond` pushed into the parquet
+    * reader so row-group stats skip non-matching IO; each scan task
+    * counts its matches per file and the driver sums the counts
+    * ([[foldPerFile]]) — one job, no shuffle. Serves [[delete]],
+    * [[update]] and [[replaceWhere]]. Returned sorted by path.
+    */
   private def findTouched(spark: SparkSession, t: Path, m: Manifest,
       cond: Column): Seq[Touched] = graft.DriverTimers.time("findTouched") {
     if (m.files.isEmpty) return Seq.empty
+    import spark.implicits._
     // LIVE rows only: a deletion-vectored row can't be touched again,
     // and the full-file tier compares against live counts
-    val hits = liveKeyed(spark, t, m, m.files)
+    val hits = foldPerFile(liveKeyed(spark, t, m, m.files)
       .filter(cond)
-      .groupBy(col("__dv_k").as("__f"))
-      .agg(count(lit(1)).as("__n"))
-      .collect()
+      .select(col("__dv_k"), lit(1L))
+      .as[(String, Long)])(_ + _)
     // map file keys back to table-relative manifest paths (last2 is
     // unique per live file: the part name embeds its write job's UUID)
     val byKey = byScanKey(m.files, t)
-    hits.toSeq.map { r =>
-      val rel = byKey.getOrElse(r.getString(0),
-        sys.error(s"scan returned unlisted file ${r.getString(0)}"))
-      Touched(rel, r.getAs[Long]("__n"))
-    }
+    hits.toSeq.map { case (k, n) =>
+      Touched(byKey.getOrElse(k, sys.error(s"scan returned unlisted file $k")), n)
+    }.sortBy(_.rel)
   }
 
   /** Copy-on-write DELETE (SQL `DELETE WHERE cond` semantics: a row is
     * removed iff `cond` is TRUE; NULL keeps the row). Three-tier cost,
     * the public Delta DELETE shape:
     *   1. files with no matching row are NOT rewritten (and the find
-    *      scan reads only `cond`'s columns, with `cond` pushed to the
-    *      parquet row-group stats);
+    *      scan, [[findTouched]], reads only `cond`'s columns, with `cond`
+    *      pushed to the parquet row-group stats, and counts matches per
+    *      file inside its tasks: one job, no shuffle);
     *   2. files where EVERY row matches are dropped from the manifest
     *      without being read again (match count == the manifest's
     *      stored per-file row count);
@@ -4349,12 +4399,85 @@ object TxLog {
     DvPlan(perFile.map(_._1).toSeq.sorted, goneSet, newEntries)
   }
 
+  /** Fail an UPDATE's `set` that names a column `m` lacks, assigns a
+    * column twice, or assigns a generated column (those derive).
+    */
+  private def checkUpdate(table: String, m: Manifest,
+      set: Seq[(String, Column)]): Unit = {
+    val schema = logicalSchema(m)
+    val gen = m.generated.getOrElse(Map.empty)
+    set.foreach { case (name, _) =>
+      require(schema.fieldNames.contains(name),
+        s"table $table has no column '$name' " +
+          s"(schema: ${schema.fieldNames.mkString(", ")})")
+      require(!gen.contains(name),
+        s"cannot UPDATE generated column '$name' of $table — it derives " +
+          s"from (${gen(name)})")
+    }
+    val twice = set.map(_._1).diff(set.map(_._1).distinct)
+    require(twice.isEmpty,
+      s"update of $table assigns ${twice.distinct.mkString(", ")} more than once")
+  }
+
+  /** An UPDATE's row images over `live` (live rows of `m`, logical
+    * names): every assignment and `cond` evaluated against the
+    * PRE-update row in ONE projection — `SET a = b, b = a` swaps, and an
+    * assignment to a column `cond` reads cannot un-match the row for
+    * the other assignments — then `m`'s generated columns re-derived
+    * from the post-update values. Each table column holds its
+    * POST-image (assigned where `cond` is TRUE; NULL does not match),
+    * `__hit` whether `cond` held, and `__pre_<i>` the i-th column's
+    * PRE-image. The data write ([[postImages]]) and the change feed
+    * ([[updateFeed]]) both read this frame, so they cannot disagree.
+    */
+  private def updateImages(live: DataFrame, m: Manifest, cond: Column,
+      set: Seq[(String, Column)]): DataFrame = {
+    val schema = logicalSchema(m)
+    val fields = schema.fields.toSeq
+    val hit = coalesce(cond, lit(false))
+    val assign = set.toMap
+    val assigned = live.select(fields.map { f =>
+      val old = col(quoted(f.name))
+      assign.get(f.name)
+        .fold(old)(e => when(hit, e.cast(f.dataType)).otherwise(old)).as(f.name)
+    } ++ fields.indices.map(i => col(quoted(fields(i).name)).as(s"__pre_$i")) :+
+      hit.as("__hit"): _*)
+    m.generated.getOrElse(Map.empty).toSeq.sortBy(_._1)
+      .foldLeft(assigned) { case (acc, (c, sql)) =>
+        acc.withColumn(c, org.apache.spark.sql.functions.expr(sql)
+          .cast(schema(c).dataType))
+      }
+  }
+
+  /** The post-update rows of [[updateImages]], in table order. */
+  private def postImages(images: DataFrame, m: Manifest): DataFrame =
+    images.select(logicalSchema(m).fieldNames.map(n => col(quoted(n))): _*)
+
+  /** UPDATE's change feed as ONE projection of [[updateImages]]: the
+    * matched rows are filtered once and each explodes into its
+    * `update_preimage` and `update_postimage` — one scan of the touched
+    * rows, where a union of the two images scanned them twice (and
+    * wrote twice the CDF files).
+    */
+  private def updateFeed(images: DataFrame, m: Manifest): DataFrame = {
+    val names = logicalSchema(m).fieldNames.toSeq
+    def image(cols: Seq[Column], kind: String): Column =
+      struct(cols :+ lit(kind).as("_change_type"): _*)
+    images.filter(col("__hit"))
+      .select(explode(array(
+        image(names.indices.map(i => col(s"__pre_$i").as(names(i))), "update_preimage"),
+        image(names.map(n => col(quoted(n))), "update_postimage"))).as("__img"))
+      .select("__img.*")
+  }
+
   /** Copy-on-write UPDATE (SQL `UPDATE SET col = expr WHERE cond`
-    * semantics: assignments apply iff `cond` is TRUE). Files with no
-    * matching row are never rewritten — same find-scan economics as
-    * [[delete]] — and each assignment is cast back to the column's
-    * declared type, so an UPDATE can never drift the table schema out
-    * from under the older files. Optimistic CAS like [[merge]].
+    * semantics: assignments apply iff `cond` is TRUE, and every
+    * assignment reads the PRE-update row — [[updateImages]]). Files with
+    * no matching row are never rewritten — the same one-job,
+    * shuffle-free find pass as [[delete]] ([[findTouched]]) — and each
+    * assignment is cast back to the column's declared type, so an
+    * UPDATE can never drift the table schema out from under the older
+    * files. Optimistic CAS like [[merge]].
     */
   def update(spark: SparkSession, table: String, cond: Column,
       set: Seq[(String, Column)], maxAttempts: Int = 10,
@@ -4366,52 +4489,24 @@ object TxLog {
     val t = new Path(table)
     (1 to maxAttempts).foreach { _ =>
       val m = manifest(spark, table)
-      val schema = logicalSchema(m)
-      set.foreach { case (name, _) =>
-        require(schema.fieldNames.contains(name),
-          s"table $table has no column '$name' " +
-            s"(schema: ${schema.fieldNames.mkString(", ")})")
-      }
+      checkUpdate(table, m, set)
       val touched = findTouched(spark, t, m, cond)
       if (touched.isEmpty) return m.version
-      val hit = coalesce(cond, lit(false))
-      // generated columns cannot be assigned (they derive), and are
-      // RECOMPUTED after the assignments in case a source column moved
-      val gen = m.generated.getOrElse(Map.empty)
-      set.foreach { case (name, _) => require(!gen.contains(name),
-        s"cannot UPDATE generated column '$name' of $table — it derives " +
-          s"from (${gen(name)})") }
-      def applySet(df: DataFrame): DataFrame = {
-        val assigned = set.foldLeft(df) {
-          case (acc, (name, expr)) =>
-            acc.withColumn(name,
-              when(hit, expr.cast(schema(name).dataType)).otherwise(col(quoted(name))))
-        }
-        gen.toSeq.sortBy(_._1).foldLeft(assigned) { case (acc, (c, sql)) =>
-          acc.withColumn(c, org.apache.spark.sql.functions.expr(sql)
-            .cast(schema(c).dataType))
-        }
-      }
       // live rows: the rewrite MATERIALIZES any deletion vectors on the
       // touched files (a deleted row must not resurrect updated)
-      val touchedDf = readLive(spark, t, m, touched.map(_.rel))
+      val images = updateImages(readLive(spark, t, m, touched.map(_.rel)),
+        m, cond, set)
       // assignments can violate a CHECK constraint — enforce on the
       // rewritten rows like any other row-changing write
       val cons = m.constraints.getOrElse(Map.empty)
-      // CDF: matched rows' pre-images and post-images (the Delta
-      // update_preimage/update_postimage pair), derived from the same
-      // snapshot files the rewrite read — independent of the fresh
-      // write's output, so it runs CONCURRENTLY with it (overlapCdf).
+      // CDF: the matched rows' update_preimage/update_postimage pairs
+      // as one projection of the rewrite's own rows ([[updateFeed]]) —
+      // independent of the fresh write's output, so it runs
+      // CONCURRENTLY with it (overlapCdf)
       val cdfChanges =
-        if (!changeFeed) None
-        else {
-          val matched = touchedDf.filter(hit)
-          Some(matched.withColumn("_change_type", lit("update_preimage"))
-            .unionByName(applySet(matched)
-              .withColumn("_change_type", lit("update_postimage"))))
-        }
+        if (!changeFeed) None else Some(updateFeed(images, m))
       val (w, cdfFiles) = overlapCdf(spark, table, cdfChanges) { relOpt =>
-        writeData(enforcing(applySet(touchedDf), cons), table,
+        writeData(enforcing(postImages(images, m), cons), table,
           m.partitionBy.getOrElse(Seq.empty), relOpt)
       }
       val gone = touched.map(_.rel).toSet
@@ -4454,51 +4549,27 @@ object TxLog {
     (1 to maxAttempts).foreach { _ =>
       val m = manifest(spark, table)
       if (m.files.isEmpty) return m.version
-      val schema = logicalSchema(m)
-      set.foreach { case (name, _) =>
-        require(schema.fieldNames.contains(name),
-          s"table $table has no column '$name' " +
-            s"(schema: ${schema.fieldNames.mkString(", ")})")
-      }
+      checkUpdate(table, m, set)
       val tq = fs(spark, t).makeQualified(t)
-      val hit = coalesce(cond, lit(false))
       // commit dir chosen BEFORE the find pass: the distributed pass
       // writes the sidecars under it executor-side (one driver
       // descriptor per touched file), the data write appends into it
       val dataRel = newDataRel()
       val plan = composeDvsDist(spark, t, tq, m, dataRel,
         liveKeyed(spark, t, m, m.files)
-          .filter(hit)
+          .filter(coalesce(cond, lit(false)))
           .select(col("__dv_k"), col("__dv_i")))
       if (plan.touched.isEmpty) return m.version
-      val gen = m.generated.getOrElse(Map.empty)
-      set.foreach { case (name, _) => require(!gen.contains(name),
-        s"cannot UPDATE generated column '$name' of $table — it derives " +
-          s"from (${gen(name)})") }
-      def applySet(df: DataFrame): DataFrame = {
-        val assigned = set.foldLeft(df) {
-          case (acc, (name, expr)) =>
-            acc.withColumn(name, expr.cast(schema(name).dataType))
-        }
-        gen.toSeq.sortBy(_._1).foldLeft(assigned) { case (acc, (c, sql)) =>
-          acc.withColumn(c, org.apache.spark.sql.functions.expr(sql)
-            .cast(schema(c).dataType))
-        }
-      }
-      // post-image rows: the matched live rows with assignments applied
-      // (every row in this frame matched, so no per-row `when` needed)
-      val matchedDf = readLive(spark, t, m, plan.touched)
-        .filter(hit)
+      // only the matched live rows: their post-images are the data write
+      val images = updateImages(readLive(spark, t, m, plan.touched), m, cond, set)
+        .filter(col("__hit"))
       val cons = m.constraints.getOrElse(Map.empty)
       // CDF pre/post pairs read the same snapshot rows as the post-image
       // write, so both land concurrently under the commit's dir
       val cdfChanges =
-        if (!changeFeed) None
-        else Some(matchedDf.withColumn("_change_type", lit("update_preimage"))
-          .unionByName(applySet(matchedDf)
-            .withColumn("_change_type", lit("update_postimage"))))
+        if (!changeFeed) None else Some(updateFeed(images, m))
       val (w, cdfFiles) = overlapCdf(spark, table, cdfChanges, Some(dataRel)) { relOpt =>
-        writeData(enforcing(applySet(matchedDf), cons), table,
+        writeData(enforcing(postImages(images, m), cons), table,
           m.partitionBy.getOrElse(Seq.empty), relOpt)
       }
       val touchedSet = plan.touched.toSet
