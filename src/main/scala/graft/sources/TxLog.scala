@@ -990,14 +990,6 @@ object TxLog {
       .map(readManifest(spark, new Path(table), _))
       .flatMap(_.constraints).getOrElse(Map.empty)
 
-  /** Wrap `df` so that materializing it (the commit's data write) throws
-    * on the FIRST row violating any constraint — enforcement rides the
-    * write pass itself as one codegen'd predicate per row, never a
-    * second scan. A row violates when the expression is FALSE or NULL
-    * (the strict Delta invariant contract, stricter than SQL CHECK's
-    * null-passes — a constraint that silently ignores NULLs is how bad
-    * rows sneak into a lakehouse).
-    */
   /** The table's generated columns (column → SQL expression); empty
     * when none are declared.
     */
@@ -1039,10 +1031,7 @@ object TxLog {
       column: String, exprSql: String): Long = {
     val t = new Path(table)
     org.apache.spark.sql.functions.expr(exprSql) // parse eagerly
-    val w = writeNothing(spark, table, manifest(spark, table).schemaJson)
-    publish(spark, table, w, parent => {
-      val m = parent.getOrElse(sys.error(
-        s"table $table has no committed versions"))
+    alterMetadata(spark, table, "set_generated") { (m, carried) =>
       val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
       require(schema.fieldNames.contains(column),
         s"table $table has no column '$column' (schema: ${schema.fieldNames.mkString(", ")})")
@@ -1056,11 +1045,8 @@ object TxLog {
       require(divergent == 0,
         s"cannot declare '$column' generated on $table: existing rows " +
           s"diverge from ($exprSql)")
-      Some(Attempt("set_generated", m.files, m.stats.getOrElse(Seq.empty),
-        m.txn.getOrElse(Map.empty),
-        constraints = m.constraints.getOrElse(Map.empty),
-        generated = Some(gen + (column -> exprSql))))
-    }).get
+      carried.copy(generated = Some(gen + (column -> exprSql)))
+    }
   }
 
   /** Drop a generated-column declaration (the data is untouched — the
@@ -1068,18 +1054,12 @@ object TxLog {
     */
   def dropGeneratedColumn(spark: SparkSession, table: String,
       column: String): Long =
-    publish(spark, table,
-      writeNothing(spark, table, manifest(spark, table).schemaJson), parent => {
-        val m = parent.getOrElse(sys.error(
-          s"table $table has no committed versions"))
-        val gen = m.generated.getOrElse(Map.empty)
-        require(gen.contains(column),
-          s"no generated column '$column' on $table (has: ${gen.keySet.mkString(", ")})")
-        Some(Attempt("drop_generated", m.files, m.stats.getOrElse(Seq.empty),
-          m.txn.getOrElse(Map.empty),
-          constraints = m.constraints.getOrElse(Map.empty),
-          generated = Some(gen - column)))
-      }).get
+    alterMetadata(spark, table, "drop_generated") { (m, carried) =>
+      val gen = m.generated.getOrElse(Map.empty)
+      require(gen.contains(column),
+        s"no generated column '$column' on $table (has: ${gen.keySet.mkString(", ")})")
+      carried.copy(generated = Some(gen - column))
+    }
 
   /** The table's identity columns (column → allocation state). */
   def identityOf(spark: SparkSession, table: String): Map[String, IdentitySpec] =
@@ -1099,32 +1079,26 @@ object TxLog {
       start: Long = 1L, step: Long = 1L): Long = {
     require(step >= 1, s"identity step must be >= 1, got $step")
     val t = new Path(table)
-    publish(spark, table,
-      writeNothing(spark, table, manifest(spark, table).schemaJson), parent => {
-        val m = parent.getOrElse(sys.error(
-          s"table $table has no committed versions"))
-        val schema = logicalSchema(m)
-        require(schema.fieldNames.contains(column),
-          s"table $table has no column '$column' (schema: ${schema.fieldNames.mkString(", ")})")
-        require(schema(column).dataType == LongType,
-          s"identity column '$column' must be BIGINT, is " +
-            schema(column).dataType.simpleString)
-        val ids = m.identity.getOrElse(Map.empty)
-        require(!ids.contains(column),
-          s"column '$column' is already an identity column of $table")
-        require(!m.generated.getOrElse(Map.empty).contains(column),
-          s"column '$column' is a generated column — it cannot also be identity")
-        val existingMax = readLive(spark, t, m, m.files)
-          .agg(max(col(quoted(column)))).head match {
-            case r if r.isNullAt(0) => None
-            case r => Some(r.getLong(0))
-          }
-        val next = existingMax.map(_ + 1L).filter(_ > start).getOrElse(start)
-        Some(Attempt("set_identity", m.files, m.stats.getOrElse(Seq.empty),
-          m.txn.getOrElse(Map.empty),
-          constraints = m.constraints.getOrElse(Map.empty),
-          identity = Some(ids + (column -> IdentitySpec(step, next)))))
-      }).get
+    alterMetadata(spark, table, "set_identity") { (m, carried) =>
+      val schema = logicalSchema(m)
+      require(schema.fieldNames.contains(column),
+        s"table $table has no column '$column' (schema: ${schema.fieldNames.mkString(", ")})")
+      require(schema(column).dataType == LongType,
+        s"identity column '$column' must be BIGINT, is " +
+          schema(column).dataType.simpleString)
+      val ids = m.identity.getOrElse(Map.empty)
+      require(!ids.contains(column),
+        s"column '$column' is already an identity column of $table")
+      require(!m.generated.getOrElse(Map.empty).contains(column),
+        s"column '$column' is a generated column — it cannot also be identity")
+      val existingMax = readLive(spark, t, m, m.files)
+        .agg(max(col(quoted(column)))).head match {
+          case r if r.isNullAt(0) => None
+          case r => Some(r.getLong(0))
+        }
+      val next = existingMax.map(_ + 1L).filter(_ > start).getOrElse(start)
+      carried.copy(identity = Some(ids + (column -> IdentitySpec(step, next))))
+    }
   }
 
   /** Drop an identity declaration (the column keeps its values and
@@ -1132,18 +1106,12 @@ object TxLog {
     */
   def dropIdentityColumn(spark: SparkSession, table: String,
       column: String): Long =
-    publish(spark, table,
-      writeNothing(spark, table, manifest(spark, table).schemaJson), parent => {
-        val m = parent.getOrElse(sys.error(
-          s"table $table has no committed versions"))
-        val ids = m.identity.getOrElse(Map.empty)
-        require(ids.contains(column),
-          s"no identity column '$column' on $table (has: ${ids.keySet.mkString(", ")})")
-        Some(Attempt("drop_identity", m.files, m.stats.getOrElse(Seq.empty),
-          m.txn.getOrElse(Map.empty),
-          constraints = m.constraints.getOrElse(Map.empty),
-          identity = Some(ids - column)))
-      }).get
+    alterMetadata(spark, table, "drop_identity") { (m, carried) =>
+      val ids = m.identity.getOrElse(Map.empty)
+      require(ids.contains(column),
+        s"no identity column '$column' on $table (has: ${ids.keySet.mkString(", ")})")
+      carried.copy(identity = Some(ids - column))
+    }
 
   /** Assign each identity column the contiguous ids
     * `next + step·rowIndex` in ONE `zipWithIndex` pass (a per-partition
@@ -1173,6 +1141,14 @@ object TxLog {
       .select((inSchema ++ extras).map(n => col(quoted(n))): _*)
   }
 
+  /** Wrap `df` so that materializing it (the commit's data write) throws
+    * on the FIRST row violating any constraint — enforcement rides the
+    * write pass itself as one codegen'd predicate per row, never a
+    * second scan. A row violates when the expression is FALSE or NULL
+    * (the strict Delta invariant contract, stricter than SQL CHECK's
+    * null-passes — a constraint that silently ignores NULLs is how bad
+    * rows sneak into a lakehouse).
+    */
   private def enforcing(df: DataFrame, cons: Map[String, String]): DataFrame =
     cons.toSeq.sortBy(_._1).foldLeft(df) { case (d, (name, sql)) =>
       d.filter(org.apache.spark.sql.functions.assert_true(
@@ -1180,9 +1156,6 @@ object TxLog {
         lit(s"CHECK constraint '$name' violated: ($sql) is not true")).isNull)
     }
 
-  /** The row-adding writers' shared inbound pipeline: generated columns
-    * computed/validated, then CHECK constraints enforced.
-    */
   /** Property-key prefix for column DEFAULT declarations
     * (`graft.default.<column>` → SQL expression). Riding the
     * properties map means restore, clone, and TBLPROPERTIES carry them
@@ -1275,6 +1248,9 @@ object TxLog {
     filled.select(inOrder.toSeq.map(c => col(quoted(c))): _*)
   }
 
+  /** The row-adding writers' shared inbound pipeline: generated columns
+    * computed/validated, then CHECK constraints enforced.
+    */
   private def inbound(spark: SparkSession, table: String, df: DataFrame,
       cons: Map[String, String]): DataFrame = {
     val gen = generatedOf(spark, table)
@@ -1315,10 +1291,7 @@ object TxLog {
     // parse eagerly: an unparseable expression must fail HERE, not at
     // the next unsuspecting append
     org.apache.spark.sql.functions.expr(exprSql)
-    val w = writeNothing(spark, table, manifest(spark, table).schemaJson)
-    publish(spark, table, w, parent => {
-      val m = parent.getOrElse(sys.error(
-        s"table $table has no committed versions to constrain"))
+    alterMetadata(spark, table, "addConstraint") { (m, carried) =>
       val cons = m.constraints.getOrElse(Map.empty)
       require(!cons.contains(name),
         s"constraint '$name' already exists on $table (drop it first)")
@@ -1330,26 +1303,18 @@ object TxLog {
       require(violations == 0,
         s"cannot add constraint '$name' to $table: existing rows violate " +
           s"CHECK ($exprSql)")
-      Some(Attempt("addConstraint", m.files, m.stats.getOrElse(Seq.empty),
-        m.txn.getOrElse(Map.empty), schemaJson = Some(m.schemaJson),
-        cdf = Seq.empty, constraints = cons + (name -> exprSql)))
-    }).get
+      carried.copy(constraints = cons + (name -> exprSql))
+    }
   }
 
   /** `ALTER TABLE DROP CONSTRAINT name` — metadata-only commit. */
-  def dropConstraint(spark: SparkSession, table: String, name: String): Long = {
-    val w = writeNothing(spark, table, manifest(spark, table).schemaJson)
-    publish(spark, table, w, parent => {
-      val m = parent.getOrElse(sys.error(
-        s"table $table has no committed versions"))
+  def dropConstraint(spark: SparkSession, table: String, name: String): Long =
+    alterMetadata(spark, table, "dropConstraint") { (m, carried) =>
       val cons = m.constraints.getOrElse(Map.empty)
       require(cons.contains(name),
         s"no constraint '$name' on $table (has: ${cons.keySet.mkString(", ")})")
-      Some(Attempt("dropConstraint", m.files, m.stats.getOrElse(Seq.empty),
-        m.txn.getOrElse(Map.empty), schemaJson = Some(m.schemaJson),
-        cdf = Seq.empty, constraints = cons - name))
-    }).get
-  }
+      carried.copy(constraints = cons - name)
+    }
 
   // ---------------------------------------------------------------------
   // Data skipping
@@ -2049,10 +2014,10 @@ object TxLog {
     * against the new marks. The committed manifest advances every mark
     * by `step · rows`, keeping allocation transactional.
     */
-  private def appendWithIdentity(df: DataFrame, table: String,
+  private[sources] def appendWithIdentity(df: DataFrame, table: String,
       mergeSchema: Boolean, maxAttempts: Int = 10): Long = {
     val spark = df.sparkSession
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "append", maxAttempts) {
       val m = manifest(spark, table)
       val idMap = m.identity.getOrElse(Map.empty)
       val schema = logicalSchema(m)
@@ -2063,7 +2028,7 @@ object TxLog {
             withDefaults(spark, table, df)), idMap, schema), cons),
         table, tablePartitionBy(spark, table))
       val n = w.stats.map(_.rows).sum
-      val committed = publish(spark, table, w, parent => {
+      publish(spark, table, w, parent => {
         val pIds = parent.flatMap(_.identity).getOrElse(Map.empty)
         if (pIds == idMap)
           Some(appendAttempt(table, parent, w, Map.empty, cons, mergeSchema)
@@ -2071,28 +2036,9 @@ object TxLog {
               c -> sp.copy(next = sp.next + sp.step * n) })))
         else None // an id-allocating commit raced us: re-assign fresh ids
       })
-      committed.foreach(v => return v)
     }
-    sys.error(s"identity append to $table lost the commit race " +
-      s"$maxAttempts times (pathological write contention); re-run or " +
-      "serialize writers")
   }
 
-  /** Exactly-once streaming append — the `foreachBatch` sink body:
-    * {{{
-    *   query.writeStream.foreachBatch { (batch, id) =>
-    *     TxLog.idempotentAppend(batch, table, appId = "loader", batchId = id)
-    *   }
-    * }}}
-    * Commits record max(batchId) per `appId` in the manifest; a batch at
-    * or below the recorded watermark returns None and commits NOTHING —
-    * so the replayed last batch of a restarted streaming query (the
-    * at-least-once delivery Structured Streaming guarantees into a
-    * non-transactional sink) lands exactly once in the table. The
-    * watermark check re-runs inside the optimistic-commit loop against
-    * the CURRENT parent, so two racing writers with the same appId
-    * cannot both land the same batch.
-    */
   /** The version whose commit first recorded `appId`'s watermark at or
     * past `batchId` — i.e. where that idempotent batch (or a later
     * same-app one) landed; `None` if it never has. Lets a replayed
@@ -2111,6 +2057,21 @@ object TxLog {
         .get(appId).exists(_ >= batchId))
   }
 
+  /** Exactly-once streaming append — the `foreachBatch` sink body:
+    * {{{
+    *   query.writeStream.foreachBatch { (batch, id) =>
+    *     TxLog.idempotentAppend(batch, table, appId = "loader", batchId = id)
+    *   }
+    * }}}
+    * Commits record max(batchId) per `appId` in the manifest; a batch at
+    * or below the recorded watermark returns None and commits NOTHING —
+    * so the replayed last batch of a restarted streaming query (the
+    * at-least-once delivery Structured Streaming guarantees into a
+    * non-transactional sink) lands exactly once in the table. The
+    * watermark check re-runs inside the optimistic-commit loop against
+    * the CURRENT parent, so two racing writers with the same appId
+    * cannot both land the same batch.
+    */
   def idempotentAppend(df: DataFrame, table: String, appId: String,
       batchId: Long): Option[Long] = {
     require(appId.nonEmpty, "appId must be non-empty")
@@ -2202,7 +2163,6 @@ object TxLog {
       pattern: Option[String] = None,
       files: Option[Seq[String]] = None,
       force: Boolean = false): CopyIntoResult = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
     require(identityOf(spark, table).isEmpty,
       s"copyInto into identity-column table $table is not supported — " +
         "ids must be assigned, use append")
@@ -2213,7 +2173,7 @@ object TxLog {
       "copyInto: PATTERN and FILES are mutually exclusive")
     val land = new Path(landingDir)
     val f = fs(spark, land)
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "copyInto", maxAttempts) {
       val base = latestVersion(spark, table)
       val ledger: Map[String, Long] = base
         .map(v => manifestAt(spark, table, v).txn.getOrElse(Map.empty))
@@ -2330,7 +2290,6 @@ object TxLog {
           .write.mode("append").parquet(d.toString)
         d
       }
-      casRaceHook()
       val committed = publish(spark, table, w, parent => {
         val seen = parent.flatMap(_.txn).getOrElse(Map.empty)
         // a concurrent copy landed one of OUR files: abandon and re-diff
@@ -2339,9 +2298,13 @@ object TxLog {
             seen.contains(copyLedgerPrefix + p) }) None
         else Some(appendAttempt(table, parent, w, txnDelta, cons))
       })
-      committed.foreach { v =>
-        stagedDir.foreach { d =>
-          val qf = fs(spark, d)
+      stagedDir.foreach { d =>
+        val qf = fs(spark, d)
+        if (committed.isEmpty) {
+          // lost the race: drop this attempt's staging before re-diffing —
+          // the retry recomputes (and restages) its own corrupt rows
+          qf.delete(d, true)
+        } else {
           val qroot = new Path(quarantineDir.get)
           qf.listStatus(d).filter(_.isFile).foreach { st =>
             val name = st.getPath.getName
@@ -2352,15 +2315,10 @@ object TxLog {
           }
           qf.delete(d, true)
         }
-        return CopyIntoResult(v,
-          freshFiles.size.toLong, w.stats.map(_.rows).sum)
       }
-      // lost the race: drop this attempt's staging before re-diffing —
-      // the retry recomputes (and restages) its own corrupt rows
-      stagedDir.foreach(d => fs(spark, d).delete(d, true))
+      committed.map(v =>
+        CopyIntoResult(v, freshFiles.size.toLong, w.stats.map(_.rows).sum))
     }
-    sys.error(s"copyInto $table lost the commit race $maxAttempts times " +
-      "(pathological write contention); re-run or serialize writers")
   }
 
   private def appendAttempt(table: String, parent: Option[Manifest],
@@ -2387,12 +2345,9 @@ object TxLog {
           s"[${ppb.mkString(", ")}] but the write used " +
           s"[${w.partitionBy.mkString(", ")}] (concurrent layout change?); re-run")
     }
-    val parentStats = parent.flatMap(_.stats).getOrElse(Seq.empty)
-    Attempt("append",
-      parent.map(_.files).getOrElse(Seq.empty) ++ w.fresh,
-      parentStats ++ w.stats,
-      parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
-      schemaJson = merged,
+    val carried = parent.fold(Attempt("append", w.fresh, w.stats, Map.empty))(
+      swapped("append", _, Set.empty, w))
+    carried.copy(txn = carried.txn ++ txnDelta, schemaJson = merged,
       constraints = guardedCons(table, parent, enforcedCons))
   }
 
@@ -2442,40 +2397,18 @@ object TxLog {
   def renameColumn(spark: SparkSession, table: String,
       from: String, to: String): Long = {
     require(from != to, "rename to the same name is a no-op")
-    publish(spark, table,
-      writeNothing(spark, table, manifest(spark, table).schemaJson), parent => {
-        val m = parent.getOrElse(sys.error(
-          s"table $table has no committed versions"))
-        val ls = logicalSchema(m)
-        require(ls.fieldNames.contains(from),
-          s"table $table has no column '$from' (schema: ${ls.fieldNames.mkString(", ")})")
-        require(!ls.fieldNames.contains(to),
-          s"table $table already has a column '$to'")
-        // renaming TO a dropped-column tombstone is safe under column
-        // mapping: the retired PHYSICAL name stays out of the schema,
-        // so no read ever projects the old files' values — the new
-        // logical label binds to `from`'s physical column only
-        val lc = from.toLowerCase
-        require(!m.partitionBy.getOrElse(Seq.empty).contains(from),
-          s"'$from' is a partition column of $table — re-partition first")
-        require(!m.identity.getOrElse(Map.empty).contains(from),
-          s"'$from' is an identity column — dropIdentityColumn first")
-        val gen = m.generated.getOrElse(Map.empty)
-        require(!gen.contains(from),
-          s"'$from' is a generated column — dropGeneratedColumn first")
-        gen.foreach { case (c, sql) => require(!referencesOf(sql).contains(lc),
-          s"generated column '$c' derives from '$from' — drop that " +
-            "declaration first") }
-        m.constraints.getOrElse(Map.empty).foreach { case (n, sql) =>
-          require(!referencesOf(sql).contains(lc),
-            s"CHECK constraint '$n' references '$from' — drop it first") }
-        val p = physOf(m, from)
-        val ren = renamesOfM(m) - p
-        Some(Attempt("rename_column", m.files, m.stats.getOrElse(Seq.empty),
-          m.txn.getOrElse(Map.empty),
-          constraints = m.constraints.getOrElse(Map.empty),
-          renames = Some(if (to == p) ren else ren + (p -> to))))
-      }).get
+    alterMetadata(spark, table, "rename_column") { (m, carried) =>
+      requireReleased(table, m, from)
+      // renaming TO a dropped-column tombstone is safe under column
+      // mapping: the retired PHYSICAL name stays out of the schema,
+      // so no read ever projects the old files' values — the new
+      // logical label binds to `from`'s physical column only
+      require(!logicalSchema(m).fieldNames.contains(to),
+        s"table $table already has a column '$to'")
+      val p = physOf(m, from)
+      val ren = renamesOfM(m) - p
+      carried.copy(renames = Some(if (to == p) ren else ren + (p -> to)))
+    }
   }
 
   /** The attribute names a SQL expression references (pre-resolution;
@@ -2489,24 +2422,37 @@ object TxLog {
       .collect { case a: UnresolvedAttribute => a.name.toLowerCase }.toSet
   }
 
-  /** DROP COLUMN as a METADATA-ONLY commit (no data file rewritten):
-    * the manifest schema narrows, and because every read plans with the
-    * STORED schema over parquet's by-name resolution, the column simply
-    * stops being read — the bytes stay in the old files but no plan
-    * ever projects them. At 100 TB this is the difference between a
-    * catalog edit and rewriting the table.
-    *
-    * The dropped NAME is tombstoned: WRITE-side schema evolution
-    * (append(mergeSchema), merge WITH SCHEMA EVOLUTION) refuses to
-    * re-introduce it — those paths bind incoming columns by name, and
-    * old files still hold values under that name. [[addColumns]] (and
-    * SQL `ALTER TABLE … ADD COLUMN`) CAN re-add it: the explicit DDL
-    * assigns a fresh physical binding through the rename map, so the
-    * old values stay invisible (see addColumns).
-    * Columns load-bearing elsewhere must be released first: partition
-    * layout, generated-column declarations/sources, CHECK-constraint
-    * references, and the bloom index (auto-dropped from the property).
+  /** Refuse to rename, drop or retype `column` unless it is a logical
+    * column of `m` that no declaration binds: the partition layout, an
+    * identity or generated declaration on it, a generated column
+    * derived from it, or a CHECK constraint reading it — those must be
+    * released first. `retypedFrom` (the column's current type, for a
+    * retype) words the identity and derived-column refusals for it.
     */
+  private def requireReleased(table: String, m: Manifest, column: String,
+      retypedFrom: Option[DataType] = None): Unit = {
+    val ls = logicalSchema(m)
+    require(ls.fieldNames.contains(column),
+      s"table $table has no column '$column' (schema: ${ls.fieldNames.mkString(", ")})")
+    require(!m.partitionBy.getOrElse(Seq.empty).contains(column),
+      s"'$column' is a partition column of $table — flatten or " +
+        "re-partition the layout first")
+    require(!m.identity.getOrElse(Map.empty).contains(column),
+      s"'$column' is an identity column — " + retypedFrom.fold(
+        "dropIdentityColumn first")(_ => "its allocation arithmetic is fixed at long"))
+    val gen = m.generated.getOrElse(Map.empty)
+    require(!gen.contains(column),
+      s"'$column' is a generated column — dropGeneratedColumn first")
+    val lc = column.toLowerCase
+    gen.foreach { case (c, sql) => require(!referencesOf(sql).contains(lc),
+      s"generated column '$c' derives from '$column' — " + retypedFrom.fold(
+        "drop that declaration first")(t =>
+        s"its expression was validated under ${t.simpleString}; drop it first")) }
+    m.constraints.getOrElse(Map.empty).foreach { case (n, sql) =>
+      require(!referencesOf(sql).contains(lc),
+        s"CHECK constraint '$n' references '$column' — drop it first") }
+  }
+
   /** `ALTER TABLE … ADD COLUMN(S)`: widen the manifest schema with new
     * NULLABLE fields in one metadata-only commit — zero data files are
     * touched; existing files simply lack the column, so every read
@@ -2531,9 +2477,7 @@ object TxLog {
     cols.foreach(f => require(f.nullable,
       s"new column '${f.name}' must be nullable - existing rows have no " +
         "value for it"))
-    val m0 = manifest(spark, table)
-    publish(spark, table, writeNothing(spark, table, m0.schemaJson), parent => {
-      val m = parent.getOrElse(sys.error(s"table $table lost its versions"))
+    alterMetadata(spark, table, "add_columns") { (m, carried) =>
       val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
       val taken = (schema.fieldNames ++ logicalSchema(m).fieldNames)
         .map(_.toLowerCase).toSet
@@ -2562,57 +2506,49 @@ object TxLog {
       val widened = StructType(schema.fields ++
         mapped.map(_._1).map(f => f.copy(nullable = true, metadata = Metadata.empty)))
       val remaps = mapped.collect { case (pf, Some(logical)) => pf.name -> logical }
-      Some(Attempt("add_columns", m.files, m.stats.getOrElse(Seq.empty),
-        m.txn.getOrElse(Map.empty),
-        schemaJson = Some(asNullable(widened).json),
-        constraints = m.constraints.getOrElse(Map.empty),
+      carried.copy(schemaJson = Some(asNullable(widened).json),
         renames =
-          if (remaps.isEmpty) None else Some(renamesOfM(m) ++ remaps)))
-    }).get
+          if (remaps.isEmpty) None else Some(renamesOfM(m) ++ remaps))
+    }
   }
 
-  def dropColumn(spark: SparkSession, table: String, column: String): Long = {
-    val m0 = manifest(spark, table)
-    require(logicalSchema(m0).fieldNames.contains(column),
-      s"table $table has no column '$column' (schema: ${logicalSchema(m0).fieldNames.mkString(", ")})")
-    publish(spark, table, writeNothing(spark, table, m0.schemaJson), parent => {
-      val m = parent.getOrElse(sys.error(s"table $table lost its versions"))
-      require(logicalSchema(m).fieldNames.contains(column),
-        s"column '$column' vanished from $table concurrently")
+  /** DROP COLUMN as a METADATA-ONLY commit (no data file rewritten):
+    * the manifest schema narrows, and because every read plans with the
+    * STORED schema over parquet's by-name resolution, the column simply
+    * stops being read — the bytes stay in the old files but no plan
+    * ever projects them. At 100 TB this is the difference between a
+    * catalog edit and rewriting the table.
+    *
+    * The dropped NAME is tombstoned: WRITE-side schema evolution
+    * (append(mergeSchema), merge WITH SCHEMA EVOLUTION) refuses to
+    * re-introduce it — those paths bind incoming columns by name, and
+    * old files still hold values under that name. [[addColumns]] (and
+    * SQL `ALTER TABLE … ADD COLUMN`) CAN re-add it: the explicit DDL
+    * assigns a fresh physical binding through the rename map, so the
+    * old values stay invisible (see addColumns).
+    * Columns load-bearing elsewhere must be released first: partition
+    * layout, generated-column declarations/sources, CHECK-constraint
+    * references, and the bloom index (auto-dropped from the property).
+    */
+  def dropColumn(spark: SparkSession, table: String, column: String): Long =
+    alterMetadata(spark, table, "drop_column") { (m, carried) =>
+      requireReleased(table, m, column)
       // the user names the LOGICAL column; files/stats/tombstones speak
       // physical — drop the physical field and retire BOTH names
       val p = physOf(m, column)
       val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-      val lc = column.toLowerCase
-      require(!m.partitionBy.getOrElse(Seq.empty).contains(column),
-        s"'$column' is a partition column of $table — flatten or " +
-          "re-partition the layout first")
-      val gen = m.generated.getOrElse(Map.empty)
-      require(!gen.contains(column),
-        s"'$column' is a generated column — dropGeneratedColumn first")
-      require(!m.identity.getOrElse(Map.empty).contains(column),
-        s"'$column' is an identity column — dropIdentityColumn first")
-      gen.foreach { case (c, sql) => require(!referencesOf(sql).contains(lc),
-        s"generated column '$c' derives from '$column' — drop that " +
-          "declaration first") }
-      m.constraints.getOrElse(Map.empty).foreach { case (n, sql) =>
-        require(!referencesOf(sql).contains(lc),
-          s"CHECK constraint '$n' references '$column' — drop it first") }
       val narrowed = StructType(schema.fields.filterNot(_.name == p))
       require(narrowed.nonEmpty, s"cannot drop the last column of $table")
-      Some(Attempt("drop_column", m.files,
+      carried.copy(
         // per-file stats for the dropped column are dead weight; strip
-        m.stats.getOrElse(Seq.empty).map(e => e.copy(stats = e.stats - p)),
-        m.txn.getOrElse(Map.empty),
+        stats = carried.stats.map(e => e.copy(stats = e.stats - p)),
         schemaJson = Some(narrowed.json),
-        constraints = m.constraints.getOrElse(Map.empty),
         bloomIndex = Some(m.bloomIndex.getOrElse(Seq.empty)
           .filterNot(_ == p)),
         dropped = Some((m.dropped.getOrElse(Seq.empty) :+ p :+ column)
           .distinct),
-        renames = Some(renamesOfM(m) - p)))
-    }).get
-  }
+        renames = Some(renamesOfM(m) - p))
+    }
 
   /** The lossless type widenings Spark 4's parquet readers perform
     * NATIVELY on narrower physical pages (each pair verified
@@ -2710,15 +2646,11 @@ object TxLog {
     *    their expressions were validated under the old type.
     */
   def alterColumnType(spark: SparkSession, table: String, column: String,
-      to: DataType): Long = {
-    val m0 = manifest(spark, table)
-    require(logicalSchema(m0).fieldNames.contains(column),
-      s"table $table has no column '$column' (schema: ${logicalSchema(m0).fieldNames.mkString(", ")})")
-    publish(spark, table, writeNothing(spark, table, m0.schemaJson), parent => {
-      val m = parent.getOrElse(sys.error(s"table $table lost its versions"))
+      to: DataType): Long =
+    alterMetadata(spark, table, "alter_column") { (m, carried) =>
       val ls = logicalSchema(m)
       require(ls.fieldNames.contains(column),
-        s"column '$column' vanished from $table concurrently")
+        s"table $table has no column '$column' (schema: ${ls.fieldNames.mkString(", ")})")
       val from = ls(column).dataType
       require(from != to,
         s"column '$column' of $table already has type ${to.simpleString}")
@@ -2729,37 +2661,19 @@ object TxLog {
           "short→int/long/double, int→long/double/decimal(≥10 int digits), " +
           "long→decimal(≥20), float→double, decimal→wider decimal); " +
           "rewrite through overwrite for anything else")
-      val lc = column.toLowerCase
-      require(!m.partitionBy.getOrElse(Seq.empty).contains(column),
-        s"'$column' is a partition column of $table — re-partition first")
-      require(!m.identity.getOrElse(Map.empty).contains(column),
-        s"'$column' is an identity column — its allocation arithmetic " +
-          "is fixed at long")
-      val gen = m.generated.getOrElse(Map.empty)
-      require(!gen.contains(column),
-        s"'$column' is a generated column — drop that declaration first")
-      gen.foreach { case (c, sql) => require(!referencesOf(sql).contains(lc),
-        s"generated column '$c' derives from '$column' — its expression " +
-          s"was validated under ${from.simpleString}; drop it first") }
-      m.constraints.getOrElse(Map.empty).foreach { case (n, sql) =>
-        require(!referencesOf(sql).contains(lc),
-          s"CHECK constraint '$n' references '$column' — drop it first") }
+      requireReleased(table, m, column, retypedFrom = Some(from))
       val p = physOf(m, column)
       val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
       val widened = StructType(schema.fields.map(f =>
         if (f.name == p) f.copy(dataType = to) else f))
-      val stats0 = m.stats.getOrElse(Seq.empty)
-      val stats =
-        if (from == FloatType) stats0.map(e => e.copy(stats = e.stats - p))
-        else stats0
-      Some(Attempt("alter_column", m.files, stats,
-        m.txn.getOrElse(Map.empty),
+      carried.copy(
+        stats =
+          if (from == FloatType) carried.stats.map(e => e.copy(stats = e.stats - p))
+          else carried.stats,
         schemaJson = Some(widened.json),
-        constraints = m.constraints.getOrElse(Map.empty),
         bloomIndex = Some(m.bloomIndex.getOrElse(Seq.empty)
-          .filterNot(_ == p))))
-    }).get
-  }
+          .filterNot(_ == p)))
+    }
 
   /** Transactional MERGE INTO: fold a CDC change batch
     * ([[graft.operators.MergeOps.cdcApply]] semantics — latest change
@@ -2789,7 +2703,6 @@ object TxLog {
       keys: Seq[String], ordering: Seq[Column], opCol: String,
       deleteOp: String = "D", maxAttempts: Int = 10,
       deletionVectors: Boolean = false): Long = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
     if (deletionVectors)
       return mergeDv(spark, table, changes, keys, ordering, opCol,
         deleteOp, maxAttempts)
@@ -2797,7 +2710,7 @@ object TxLog {
     val keysDf = changes.select(keys.map(k => col(quoted(k))): _*).distinct()
     val renamedKeys = keys.foldLeft(keysDf)((d, k) =>
       d.withColumnRenamed(k, s"__mk_$k"))
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "merge", maxAttempts) {
       val base = latestVersion(spark, table).getOrElse(
         sys.error(s"table $table has no committed versions to merge into"))
       val m = manifestAt(spark, table, base)
@@ -2820,19 +2733,9 @@ object TxLog {
       val cons = constraintsOf(spark, table)
       val w = writeData(inbound(spark, table, merged, cons), table,
         m.partitionBy.getOrElse(Seq.empty))
-      val touchedSet = touched.toSet
-      val committed = publish(spark, table, w, parent =>
-        if (parent.map(_.version).contains(base))
-          Some(Attempt("merge",
-            m.files.filterNot(touchedSet) ++ w.fresh,
-            m.stats.getOrElse(Seq.empty).filterNot(e => touchedSet(e.path))
-              ++ w.stats,
-            parent.flatMap(_.txn).getOrElse(Map.empty),
-            constraints = guardedCons(table, parent, cons)))
-        else None) // snapshot went stale: recompute from the new latest
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBase(m)(p => swapped("merge", p, touched.toSet, w)
+        .copy(constraints = guardedCons(table, Some(p), cons))))
     }
-    mergeRaceError(table, maxAttempts)
   }
 
   /** MERGE via DELETION VECTORS — the cheapest correct merge CDC
@@ -2851,7 +2754,7 @@ object TxLog {
     val keysDf = changes.select(keys.map(k => col(quoted(k))): _*).distinct()
     val renamedKeys = keys.foldLeft(keysDf)((d, k) =>
       d.withColumnRenamed(k, s"__mk_$k"))
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "merge", maxAttempts) {
       val base = latestVersion(spark, table).getOrElse(
         sys.error(s"table $table has no committed versions to merge into"))
       val m = manifestAt(spark, table, base)
@@ -2878,24 +2781,11 @@ object TxLog {
       val cons = constraintsOf(spark, table)
       val w = writeData(inbound(spark, table, merged, cons), table,
         m.partitionBy.getOrElse(Seq.empty), dataRelOpt = Some(dataRel))
-      val committed = publish(spark, table, w, parent =>
-        if (parent.map(_.version).contains(base))
-          Some(Attempt("merge",
-            m.files.filterNot(plan.goneSet) ++ w.fresh,
-            m.stats.getOrElse(Seq.empty).filterNot(e => plan.goneSet(e.path))
-              ++ w.stats,
-            parent.flatMap(_.txn).getOrElse(Map.empty),
-            constraints = guardedCons(table, parent, cons),
-            dvs = Some(plan.dvsAgainst(m))))
-        else None)
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBase(m)(p => swapped("merge", p, plan.goneSet, w)
+        .copy(constraints = guardedCons(table, Some(p), cons),
+          dvs = Some(plan.dvsAgainst(p)))))
     }
-    mergeRaceError(table, maxAttempts)
   }
-
-  private def mergeRaceError(table: String, maxAttempts: Int): Nothing =
-    sys.error(s"merge into $table lost the commit race $maxAttempts times " +
-      "(pathological write contention); re-run or serialize writers")
 
   // ---------------------------------------------------------------------
   // General MERGE INTO (the full Delta/SQL MERGE clause surface;
@@ -2980,7 +2870,6 @@ object TxLog {
       txnBatchId: Long = Long.MinValue,
       maxAttempts: Int = 10,
       evolveSchema: Boolean = false): Long = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
     txnAppId.foreach(id => require(id.nonEmpty, "txnAppId must be non-empty"))
     require(txnAppId.isEmpty == (txnBatchId == Long.MinValue),
       "txnAppId and txnBatchId must be provided together")
@@ -3017,7 +2906,7 @@ object TxLog {
         srcM.persist()
         srcM.write.format("noop").mode("overwrite").save()
       }
-      (1 to maxAttempts).foreach { _ =>
+      optimistic(table, "mergeInto", maxAttempts) {
         val base = latestVersion(spark, table).getOrElse(
           sys.error(s"table $table has no committed versions to merge into"))
         val m = manifestAt(spark, table, base)
@@ -3095,6 +2984,14 @@ object TxLog {
           if (idMap.isEmpty) None
           else Some(idMap.map { case (c, sp) =>
             c -> sp.copy(next = sp.next + sp.step * inserted) })
+        // every shape of this merge's commit: the file swap against the
+        // CAS base plus the watermark, feed, constraint guard and ids
+        def mergeAttempt(p: Manifest, gone: Set[String], w: Written,
+            cdf: Seq[String], ids: Option[Map[String, IdentitySpec]]): Attempt = {
+          val a = swapped("merge", p, gone, w)
+          a.copy(txn = a.txn ++ txnDelta, cdf = cdf,
+            constraints = guardedCons(table, Some(p), cons), identity = ids)
+        }
         val idFreeFields = schema.fields.toSeq.filterNot(f => idMap.contains(f.name))
         (matched ++ notMatchedBySource).foreach {
           case MergeUpdate(set, _) => checkAssign(set.keys, "UPDATE SET")
@@ -3149,16 +3046,9 @@ object TxLog {
                 aliasLogical(toDf(spark, t, readJson, w.fresh), m)
                   .withColumn("_change_type", lit("insert")))
             }
-          val committed = publish(spark, table, w, parent =>
-            if (parent.map(_.version).contains(base))
-              Some(Attempt("merge", m.files ++ w.fresh,
-                m.stats.getOrElse(Seq.empty) ++ w.stats,
-                parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
-                cdf = cdfFiles,
-                constraints = guardedCons(table, parent, cons),
-                identity = advancedIds(w.stats.map(_.rows).sum)))
-            else None)
-          committed.foreach(v => return v)
+          publish(spark, table, w, onBase(m)(p =>
+            mergeAttempt(p, Set.empty, w, cdfFiles,
+              advancedIds(w.stats.map(_.rows).sum))))
         } else {
           // ---- find pass: touched files + multi-match cardinality check.
           // The ERROR is scoped the way Delta scopes it: only a target row
@@ -3348,23 +3238,13 @@ object TxLog {
               case Some(ins) => outCols(actedCow.filter(
                 !col("__act").isin((deadTags ++ insTags): _*))).unionByName(ins)
             }
-            val goneSet = working.toSet
             val (w, cdfFiles) = overlapCdf(spark, table, feed) { relOpt =>
               writeData(enforcing(regen(rows), cons), table,
                 m.partitionBy.getOrElse(Seq.empty), relOpt)
             }
-            val committed = publish(spark, table, w, parent =>
-              if (parent.map(_.version).contains(base))
-                Some(Attempt("merge",
-                  m.files.filterNot(goneSet) ++ w.fresh,
-                  m.stats.getOrElse(Seq.empty).filterNot(e => goneSet(e.path))
-                    ++ w.stats,
-                  parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
-                  cdf = cdfFiles,
-                  constraints = guardedCons(table, parent, cons),
-                  identity = advancedIds(insertedForIds)))
-              else None)
-            committed.foreach(v => return v)
+            publish(spark, table, w, onBase(m)(p =>
+              mergeAttempt(p, working.toSet, w, cdfFiles,
+                advancedIds(insertedForIds))))
           } else {
             // deletion vectors: EVERY acted-on target row's old position is
             // vectored out (update and delete alike); updates' post-images
@@ -3393,23 +3273,12 @@ object TxLog {
               writeData(enforcing(regen(rows), cons), table,
                 m.partitionBy.getOrElse(Seq.empty), relOpt)
             }
-            val committed = publish(spark, table, w, parent =>
-              if (parent.map(_.version).contains(base))
-                Some(Attempt("merge",
-                  m.files.filterNot(plan.goneSet) ++ w.fresh,
-                  m.stats.getOrElse(Seq.empty)
-                    .filterNot(e => plan.goneSet(e.path)) ++ w.stats,
-                  parent.flatMap(_.txn).getOrElse(Map.empty) ++ txnDelta,
-                  cdf = cdfFiles,
-                  constraints = guardedCons(table, parent, cons),
-                  dvs = Some(plan.dvsAgainst(m)),
-                  identity = advancedIds(insertedForIds)))
-              else None)
-            committed.foreach(v => return v)
+            publish(spark, table, w, onBase(m)(p =>
+              mergeAttempt(p, plan.goneSet, w, cdfFiles,
+                advancedIds(insertedForIds)).copy(dvs = Some(plan.dvsAgainst(p)))))
           }
         }
       }
-      mergeRaceError(table, maxAttempts)
     } finally if (materialize) srcM.unpersist(blocking = false)
   }
 
@@ -3466,24 +3335,6 @@ object TxLog {
     */
   private[sources] var mergeFeedHook: MergeFeedInputs => Unit = _ => ()
 
-  /** Compaction (the public OPTIMIZE bin-packing recipe): rewrite the
-    * referenced files smaller than `smallFileBytes` into
-    * ~`targetFileBytes` files and commit a version with identical rows.
-    * Large files are never rewritten or even read — at 100 TB the
-    * maintenance cost is proportional to the small-file debt (the
-    * streaming-append tail), not the table. Readers are untouched
-    * mid-compaction (snapshot isolation); time travel to pre-compaction
-    * versions still resolves the old files until [[vacuum]].
-    *
-    * Concurrency: a concurrent append composes fine (its files are
-    * simply retained); a concurrent overwrite/compaction that removed
-    * one of the planned-for-rewrite files aborts this compaction with
-    * `ConcurrentModificationException` — rewriting rows whose source
-    * files a racing commit dropped would resurrect deleted data.
-    *
-    * Returns the committed version, or the current version unchanged if
-    * fewer than two files qualify (nothing to pack).
-    */
   /** Abort a rewrite (compact/zorder) whose planned files' DELETION
     * VECTORS changed between planning and commit. The files-still-present
     * check alone misses this race: a concurrent `delete/update(
@@ -3504,6 +3355,48 @@ object TxLog {
           "vectors on file(s) planned for rewrite")
   }
 
+  /** Publish a row-preserving rewrite (compact, purge, z-order): `w`'s
+    * files replace the `planned` files of snapshot `m` in whatever parent
+    * the CAS lands on, so concurrent appends compose. A concurrent commit
+    * that removed a planned file, changed a planned file's deletion
+    * vector ([[requireDvsUnchanged]]) or changed the schema aborts the
+    * rewrite, named `what` — rewriting rows a racer dropped or vectored
+    * out would resurrect them. Constraints flow through unguarded (a
+    * rewrite of already-validated rows cannot introduce a violation);
+    * the planned files' vectors were materialized by the rewrite, and a
+    * vector a concurrent commit put on any other file survives.
+    */
+  private def relayout(spark: SparkSession, table: String, action: String,
+      what: String, m: Manifest, planned: Set[String], w: Written): Long =
+    publish(spark, table, w, parent => {
+      val p = parent.filter(p => planned.subsetOf(p.files.toSet)).getOrElse(
+        throw new java.util.ConcurrentModificationException(
+          s"$what of $table aborted: a concurrent commit removed " +
+            "file(s) planned for rewrite"))
+      requireDvsUnchanged(table, what, planned, m, parent)
+      require(p.schemaJson == w.schemaJson,
+        s"$what schema drift for $table (concurrent overwrite?)")
+      Some(swapped(action, p, planned, w))
+    }).get
+
+  /** Compaction (the public OPTIMIZE bin-packing recipe): rewrite the
+    * referenced files smaller than `smallFileBytes` into
+    * ~`targetFileBytes` files and commit a version with identical rows.
+    * Large files are never rewritten or even read — at 100 TB the
+    * maintenance cost is proportional to the small-file debt (the
+    * streaming-append tail), not the table. Readers are untouched
+    * mid-compaction (snapshot isolation); time travel to pre-compaction
+    * versions still resolves the old files until [[vacuum]].
+    *
+    * Concurrency: a concurrent append composes fine (its files are
+    * simply retained); a concurrent overwrite/compaction that removed
+    * one of the planned-for-rewrite files aborts this compaction with
+    * `ConcurrentModificationException` — rewriting rows whose source
+    * files a racing commit dropped would resurrect deleted data.
+    *
+    * Returns the committed version, or the current version unchanged if
+    * fewer than two files qualify (nothing to pack).
+    */
   def compact(spark: SparkSession, table: String,
       smallFileBytes: Long = 128L << 20,
       targetFileBytes: Long = 128L << 20,
@@ -3537,7 +3430,6 @@ object TxLog {
       f.getFileStatus(new Path(t, rel)).getLen))
     val small = sized.filter(_._2 < smallFileBytes)
     if (small.size < 2) return m.version
-    val smallSet = small.map(_._1).toSet
     val packed = readLive(spark, t, m, small.map(_._1))
       // coalesce, not repartition: packing must not shuffle the data it
       // rewrites — narrow concatenation of the small files' partitions
@@ -3551,27 +3443,7 @@ object TxLog {
     // holding k partitions' rows emits k files — packing quality is
     // per-task, the manifest semantics are exact either way
     val w = writeData(packed, table, m.partitionBy.getOrElse(Seq.empty))
-    casRaceHook()
-    publish(spark, table, w, parent => {
-      val pf = parent.map(_.files).getOrElse(Seq.empty)
-      if (!smallSet.subsetOf(pf.toSet))
-        throw new java.util.ConcurrentModificationException(
-          s"compaction of $table aborted: a concurrent commit removed " +
-            "file(s) planned for rewrite")
-      requireDvsUnchanged(table, "compaction", smallSet, m, parent)
-      parent.foreach { p =>
-        require(p.schemaJson == w.schemaJson,
-          s"compaction schema drift for $table (concurrent overwrite?)")
-      }
-      val parentStats = parent.flatMap(_.stats).getOrElse(Seq.empty)
-      // row-preserving: constraints flow through unguarded (a rewrite of
-      // already-validated rows cannot introduce a violation)
-      Some(Attempt("compact",
-        pf.filterNot(smallSet) ++ w.fresh,
-        parentStats.filterNot(e => smallSet(e.path)) ++ w.stats,
-        parent.flatMap(_.txn).getOrElse(Map.empty),
-        constraints = parent.flatMap(_.constraints).getOrElse(Map.empty)))
-    }).get
+    relayout(spark, table, "compact", "compaction", m, small.map(_._1).toSet, w)
   }
 
   /** `REORG TABLE … APPLY (PURGE)` (the public Delta spelling):
@@ -3592,34 +3464,10 @@ object TxLog {
     val m = manifest(spark, table)
     val vectored = m.dvs.getOrElse(Seq.empty).map(_.path)
     if (vectored.isEmpty) return m.version
-    val gone = vectored.toSet
     // readLive anti-joins the vectors out; the rewrite IS the purge
     val w = writeData(readLive(spark, t, m, vectored), table,
       m.partitionBy.getOrElse(Seq.empty))
-    casRaceHook()
-    publish(spark, table, w, parent => {
-      val pf = parent.map(_.files).getOrElse(Seq.empty)
-      if (!gone.subsetOf(pf.toSet))
-        throw new java.util.ConcurrentModificationException(
-          s"purge of $table aborted: a concurrent commit removed " +
-            "file(s) planned for rewrite")
-      requireDvsUnchanged(table, "purge", gone, m, parent)
-      parent.foreach { p =>
-        require(p.schemaJson == w.schemaJson,
-          s"purge schema drift for $table (concurrent overwrite?)")
-      }
-      val parentStats = parent.flatMap(_.stats).getOrElse(Seq.empty)
-      Some(Attempt("purge",
-        pf.filterNot(gone) ++ w.fresh,
-        parentStats.filterNot(e => gone(e.path)) ++ w.stats,
-        parent.flatMap(_.txn).getOrElse(Map.empty),
-        constraints = parent.flatMap(_.constraints).getOrElse(Map.empty),
-        // the planned vectors were materialized by the rewrite; a
-        // vector a CONCURRENT commit put on some other file since the
-        // plan survives untouched (dropping it would lose that delete)
-        dvs = Some(parent.flatMap(_.dvs).getOrElse(Seq.empty)
-          .filterNot(e => gone(e.path)))))
-    }).get
+    relayout(spark, table, "purge", "purge", m, vectored.toSet, w)
   }
 
   /** Transactional `OPTIMIZE … ZORDER BY (x, y)` (the Delta layout
@@ -3675,31 +3523,12 @@ object TxLog {
         m.files.filter(p => partMatches(schema, byPath(p), partition))
       }
     if (candidates.isEmpty) return m.version
-    val candSet = candidates.toSet
     // live rows: a rewrite MATERIALIZES any deletion vectors (the
     // rewritten files never carry them forward)
     val (clustered, _) = Layout.zOrderedN(
       readLive(spark, t, m, candidates), cols, numFiles, curve)
     val w = writeData(clustered, table, m.partitionBy.getOrElse(Seq.empty))
-    casRaceHook()
-    publish(spark, table, w, parent => {
-      val pf = parent.map(_.files).getOrElse(Seq.empty)
-      if (!candSet.subsetOf(pf.toSet))
-        throw new java.util.ConcurrentModificationException(
-          s"zorder optimize of $table aborted: a concurrent commit " +
-            "removed file(s) planned for rewrite")
-      requireDvsUnchanged(table, "zorder optimize", candSet, m, parent)
-      parent.foreach { p =>
-        require(p.schemaJson == w.schemaJson,
-          s"zorder schema drift for $table (concurrent overwrite?)")
-      }
-      val parentStats = parent.flatMap(_.stats).getOrElse(Seq.empty)
-      Some(Attempt("zorder",
-        pf.filterNot(candSet) ++ w.fresh,
-        parentStats.filterNot(e => candSet(e.path)) ++ w.stats,
-        parent.flatMap(_.txn).getOrElse(Map.empty),
-        constraints = parent.flatMap(_.constraints).getOrElse(Map.empty)))
-    }).get
+    relayout(spark, table, "zorder", "zorder optimize", m, candidates.toSet, w)
   }
 
   // ---------------------------------------------------------------------
@@ -3892,10 +3721,9 @@ object TxLog {
     */
   def overwritePartitions(df: DataFrame, table: String,
       changeFeed: Boolean = false, maxAttempts: Int = 10): Long = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
     val spark = df.sparkSession
     val t = new Path(table)
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "overwritePartitions", maxAttempts) {
       val m = manifest(spark, table)
       val pcols = partitionedManifest(table, m)
       val cons = m.constraints.getOrElse(Map.empty)
@@ -3925,20 +3753,10 @@ object TxLog {
             .withColumn("_change_type", lit("insert"))
           writeCdf(spark, table, w.dataRel, pre.unionByName(post))
         }
-      val committed = publish(spark, table, w, parent =>
-        if (parent.map(_.version).contains(m.version))
-          Some(Attempt("overwritePartitions",
-            m.files.filterNot(gone) ++ w.fresh,
-            m.stats.getOrElse(Seq.empty).filterNot(e => gone(e.path)) ++ w.stats,
-            m.txn.getOrElse(Map.empty),
-            cdf = cdfFiles,
-            constraints = guardedCons(table, parent, cons)))
-        else None) // snapshot went stale: recompute against the new latest
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBase(m)(p =>
+        swapped("overwritePartitions", p, gone, w).copy(cdf = cdfFiles,
+          constraints = guardedCons(table, Some(p), cons))))
     }
-    sys.error(s"overwritePartitions on $table lost the commit race " +
-      s"$maxAttempts times (pathological write contention); re-run or " +
-      "serialize writers")
   }
 
   /** `ALTER TABLE DROP PARTITION` — drop every file in the partition(s)
@@ -3953,8 +3771,7 @@ object TxLog {
       values: Map[String, Any], maxAttempts: Int = 10,
       changeFeed: Boolean = false): Long = {
     require(values.nonEmpty, "dropPartitions needs at least one partition value")
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "dropPartitions", maxAttempts) {
       val m = manifest(spark, table)
       val pcols = partitionedManifest(table, m)
       values.keys.foreach(k => require(pcols.contains(k),
@@ -3973,19 +3790,9 @@ object TxLog {
         else writeCdf(spark, table, w.dataRel,
           readLive(spark, new Path(table), m, gone.toSeq.sorted)
             .withColumn("_change_type", lit("delete")))
-      val committed = publish(spark, table, w, parent =>
-        if (parent.map(_.version).contains(m.version))
-          Some(Attempt("dropPartitions",
-            m.files.filterNot(gone),
-            m.stats.getOrElse(Seq.empty).filterNot(e => gone(e.path)),
-            m.txn.getOrElse(Map.empty),
-            cdf = cdfFiles,
-            constraints = m.constraints.getOrElse(Map.empty)))
-        else None) // snapshot went stale: re-match against the new latest
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBase(m)(p =>
+        swapped("dropPartitions", p, gone, w).copy(cdf = cdfFiles)))
     }
-    sys.error(s"dropPartitions on $table lost the commit race $maxAttempts " +
-      "times (pathological write contention); re-run or serialize writers")
   }
 
   /** One touched file from the copy-on-write find scan. */
@@ -4036,10 +3843,13 @@ object TxLog {
     touched.forall(f => pf(f) && bd.get(f) == pd.get(f))
   }
 
-  /** Test-only interposition point: runs once between a DML's find
-    * pass and its first publish, so specs can land a DETERMINISTIC
-    * concurrent commit in the CAS gap (append-vs-delete rebase races,
-    * constraint-change aborts) without thread timing.
+  /** Test-only interposition point: runs at the start of every
+    * [[publish]] call, after the attempt's data is written and before
+    * its first CAS, so specs can land a DETERMINISTIC concurrent commit
+    * in the CAS gap of any writer (append-vs-delete rebase races,
+    * constraint-change aborts, exhausted retries) without thread timing.
+    * A racer that commits from the hook publishes too: the hook must
+    * disarm itself, or guard against re-entry, before it does.
     */
   private[graft] var casRaceHook: () => Unit = () => ()
 
@@ -4106,11 +3916,10 @@ object TxLog {
   def delete(spark: SparkSession, table: String, cond: Column,
       maxAttempts: Int = 10, changeFeed: Boolean = false,
       deletionVectors: Boolean = false): Long = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
     if (deletionVectors)
       return deleteDv(spark, table, cond, maxAttempts, changeFeed)
     val t = new Path(table)
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "delete", maxAttempts) {
       val m = manifest(spark, table)
       val touched = findTouched(spark, t, m, cond)
       if (touched.isEmpty) return m.version
@@ -4136,26 +3945,13 @@ object TxLog {
           table, m.partitionBy.getOrElse(Seq.empty), relOpt)
       }
       val gone = touched.map(_.rel).toSet
-      casRaceHook()
       // row-removing: constraints flow through unguarded. On a lost
       // CAS, REBASE onto the winner when it left our touched files
       // alone (rebasable) — concurrent appends / file-disjoint DML
       // cost one compute each instead of a full re-derive.
-      def att(mm: Manifest) = Attempt("delete",
-        mm.files.filterNot(gone) ++ w.fresh,
-        mm.stats.getOrElse(Seq.empty).filterNot(e => gone(e.path)) ++ w.stats,
-        mm.txn.getOrElse(Map.empty),
-        cdf = cdfFiles,
-        constraints = mm.constraints.getOrElse(Map.empty))
-      val committed = publish(spark, table, w, {
-        case Some(p) if p.version == m.version => Some(att(m))
-        case Some(p) if rebasable(m, p, gone) => Some(att(p))
-        case _ => None // conflicting overlap: re-find against the latest
-      })
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBaseOrRebase(m, gone)(p =>
+        swapped("delete", p, gone, w).copy(cdf = cdfFiles)))
     }
-    sys.error(s"delete from $table lost the commit race $maxAttempts times " +
-      "(pathological write contention); re-run or serialize writers")
   }
 
   /** Arbitrary-predicate `replaceWhere` (the Delta
@@ -4183,10 +3979,9 @@ object TxLog {
     */
   def replaceWhere(df: DataFrame, table: String, cond: Column,
       maxAttempts: Int = 10, changeFeed: Boolean = false): Long = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
     val spark = df.sparkSession
     val t = new Path(table)
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "replaceWhere", maxAttempts) {
       val m = manifest(spark, table)
       val cons = m.constraints.getOrElse(Map.empty)
       // in-task insert-predicate guard: fail the write, not the data
@@ -4220,20 +4015,10 @@ object TxLog {
             .withColumn("_change_type", lit("insert"))
           writeCdf(spark, table, w.dataRel, pre.unionByName(post))
         }
-      val gone = touched.map(_.rel).toSet
-      val committed = publish(spark, table, w, parent =>
-        if (parent.map(_.version).contains(m.version))
-          Some(Attempt("replaceWhere",
-            m.files.filterNot(gone) ++ w.fresh,
-            m.stats.getOrElse(Seq.empty).filterNot(e => gone(e.path)) ++ w.stats,
-            m.txn.getOrElse(Map.empty),
-            cdf = cdfFiles,
-            constraints = guardedCons(table, parent, cons)))
-        else None) // snapshot went stale: re-find against the new latest
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBase(m)(p =>
+        swapped("replaceWhere", p, touched.map(_.rel).toSet, w).copy(
+          cdf = cdfFiles, constraints = guardedCons(table, Some(p), cons))))
     }
-    sys.error(s"replaceWhere on $table lost the commit race $maxAttempts " +
-      "times (pathological write contention); re-run or serialize writers")
   }
 
   /** DELETE via DELETION VECTORS (the modern Delta default): no data
@@ -4255,7 +4040,7 @@ object TxLog {
   private def deleteDv(spark: SparkSession, table: String, cond: Column,
       maxAttempts: Int, changeFeed: Boolean): Long = {
     val t = new Path(table)
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "delete", maxAttempts) {
       val m = manifest(spark, table)
       if (m.files.isEmpty) return m.version
       val tq = fs(spark, t).makeQualified(t)
@@ -4274,26 +4059,12 @@ object TxLog {
           readLive(spark, t, m, plan.touched)
             .filter(coalesce(cond, lit(false)))
             .withColumn("_change_type", lit("delete")))
-      val touchedSet = plan.touched.toSet
-      casRaceHook()
       // lost CAS: rebase onto a winner that left our touched files and
       // their vectors alone (rebasable) instead of re-deriving
-      def att(mm: Manifest) = Attempt("delete",
-        mm.files.filterNot(plan.goneSet),
-        mm.stats.getOrElse(Seq.empty).filterNot(e => plan.goneSet(e.path)),
-        mm.txn.getOrElse(Map.empty),
-        cdf = cdfFiles,
-        constraints = mm.constraints.getOrElse(Map.empty),
-        dvs = Some(plan.dvsAgainst(mm)))
-      val committed = publish(spark, table, w, {
-        case Some(p) if p.version == m.version => Some(att(m))
-        case Some(p) if rebasable(m, p, touchedSet) => Some(att(p))
-        case _ => None // conflicting overlap: re-find against the latest
-      })
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBaseOrRebase(m, plan.touched.toSet)(p =>
+        swapped("delete", p, plan.goneSet, w).copy(cdf = cdfFiles,
+          dvs = Some(plan.dvsAgainst(p)))))
     }
-    sys.error(s"delete from $table lost the commit race $maxAttempts times " +
-      "(pathological write contention); re-run or serialize writers")
   }
 
   /** The driver-visible outcome of a distributed DV find pass: the
@@ -4482,12 +4253,11 @@ object TxLog {
   def update(spark: SparkSession, table: String, cond: Column,
       set: Seq[(String, Column)], maxAttempts: Int = 10,
       changeFeed: Boolean = false, deletionVectors: Boolean = false): Long = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
     require(set.nonEmpty, "update needs at least one assignment")
     if (deletionVectors)
       return updateDv(spark, table, cond, set, maxAttempts, changeFeed)
     val t = new Path(table)
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "update", maxAttempts) {
       val m = manifest(spark, table)
       checkUpdate(table, m, set)
       val touched = findTouched(spark, t, m, cond)
@@ -4510,25 +4280,13 @@ object TxLog {
           m.partitionBy.getOrElse(Seq.empty), relOpt)
       }
       val gone = touched.map(_.rel).toSet
-      casRaceHook()
       // lost CAS: rebase onto a winner that left our touched files
       // alone (rebasable guarantees constraints are unchanged too, so
       // the guardedCons stance is preserved by construction)
-      def att(mm: Manifest) = Attempt("update",
-        mm.files.filterNot(gone) ++ w.fresh,
-        mm.stats.getOrElse(Seq.empty).filterNot(e => gone(e.path)) ++ w.stats,
-        mm.txn.getOrElse(Map.empty),
-        cdf = cdfFiles,
-        constraints = guardedCons(table, Some(mm), cons))
-      val committed = publish(spark, table, w, {
-        case Some(p) if p.version == m.version => Some(att(m))
-        case Some(p) if rebasable(m, p, gone) => Some(att(p))
-        case _ => None // conflicting overlap: re-find against the latest
-      })
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBaseOrRebase(m, gone)(p =>
+        swapped("update", p, gone, w).copy(cdf = cdfFiles,
+          constraints = guardedCons(table, Some(p), cons))))
     }
-    sys.error(s"update of $table lost the commit race $maxAttempts times " +
-      "(pathological write contention); re-run or serialize writers")
   }
 
   /** UPDATE via DELETION VECTORS: the matched rows' old positions are
@@ -4546,7 +4304,7 @@ object TxLog {
       set: Seq[(String, Column)], maxAttempts: Int,
       changeFeed: Boolean): Long = {
     val t = new Path(table)
-    (1 to maxAttempts).foreach { _ =>
+    optimistic(table, "update", maxAttempts) {
       val m = manifest(spark, table)
       if (m.files.isEmpty) return m.version
       checkUpdate(table, m, set)
@@ -4572,27 +4330,13 @@ object TxLog {
         writeData(enforcing(postImages(images, m), cons), table,
           m.partitionBy.getOrElse(Seq.empty), relOpt)
       }
-      val touchedSet = plan.touched.toSet
-      casRaceHook()
       // lost CAS: rebase onto a winner that left our touched files and
       // their vectors alone (rebasable) instead of re-deriving
-      def att(mm: Manifest) = Attempt("update",
-        mm.files.filterNot(plan.goneSet) ++ w.fresh,
-        mm.stats.getOrElse(Seq.empty).filterNot(e => plan.goneSet(e.path))
-          ++ w.stats,
-        mm.txn.getOrElse(Map.empty),
-        cdf = cdfFiles,
-        constraints = guardedCons(table, Some(mm), cons),
-        dvs = Some(plan.dvsAgainst(mm)))
-      val committed = publish(spark, table, w, {
-        case Some(p) if p.version == m.version => Some(att(m))
-        case Some(p) if rebasable(m, p, touchedSet) => Some(att(p))
-        case _ => None // conflicting overlap: re-find against the latest
-      })
-      committed.foreach(v => return v)
+      publish(spark, table, w, onBaseOrRebase(m, plan.touched.toSet)(p =>
+        swapped("update", p, plan.goneSet, w).copy(cdf = cdfFiles,
+          constraints = guardedCons(table, Some(p), cons),
+          dvs = Some(plan.dvsAgainst(p)))))
     }
-    sys.error(s"update of $table lost the commit race $maxAttempts times " +
-      "(pathological write contention); re-run or serialize writers")
   }
 
   /** Change feed over an append-only stretch of history: every row
@@ -4718,27 +4462,15 @@ object TxLog {
     */
   def setProperty(spark: SparkSession, table: String, key: String,
       value: String): Long =
-    publish(spark, table,
-      writeNothing(spark, table, manifest(spark, table).schemaJson), parent => {
-        val m = parent.getOrElse(sys.error(
-          s"table $table has no committed versions"))
-        Some(Attempt("set_property", m.files, m.stats.getOrElse(Seq.empty),
-          m.txn.getOrElse(Map.empty),
-          constraints = m.constraints.getOrElse(Map.empty),
-          properties = Some(m.properties.getOrElse(Map.empty) + (key -> value))))
-      }).get
+    alterMetadata(spark, table, "set_property") { (m, carried) =>
+      carried.copy(properties = Some(m.properties.getOrElse(Map.empty) + (key -> value)))
+    }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES(key)` (no-op if absent). */
   def unsetProperty(spark: SparkSession, table: String, key: String): Long =
-    publish(spark, table,
-      writeNothing(spark, table, manifest(spark, table).schemaJson), parent => {
-        val m = parent.getOrElse(sys.error(
-          s"table $table has no committed versions"))
-        Some(Attempt("unset_property", m.files, m.stats.getOrElse(Seq.empty),
-          m.txn.getOrElse(Map.empty),
-          constraints = m.constraints.getOrElse(Map.empty),
-          properties = Some(m.properties.getOrElse(Map.empty) - key)))
-      }).get
+    alterMetadata(spark, table, "unset_property") { (m, carried) =>
+      carried.copy(properties = Some(m.properties.getOrElse(Map.empty) - key))
+    }
 
   /** Commits whose LIVE row set is provably identical to their
     * parent's (Delta's `dataChange = false` class): bin-packing /
@@ -4842,14 +4574,18 @@ object TxLog {
       stats: Seq[FileEntry], schemaJson: String,
       partitionBy: Seq[String] = Seq.empty)
 
-  /** A commit attempt that adds NO data files (e.g. a delete whose every
-    * touched file was dropped whole). Nothing is written; the unused
-    * dataRel keeps [[publish]]'s bookkeeping uniform (abandoning it
-    * deletes a directory that never existed — a no-op). Note the
-    * lost-ack disambiguator cannot recognize a zero-file commit by its
-    * data dir; that is safe exactly because the only zero-file commits
-    * are full-file deletes, which are idempotent — a retried publish
-    * re-derives against the new snapshot and finds nothing left to do.
+  /** A commit attempt that adds NO data files: a delete whose every
+    * touched file was dropped whole, a DV delete, [[dropPartitions]],
+    * every metadata-only commit ([[alterMetadata]]), [[restore]],
+    * [[clone]] and [[convert]]. Nothing is written; the unused dataRel
+    * keeps [[publish]]'s bookkeeping uniform (abandoning it deletes a
+    * directory that never existed — a no-op). The lost-ack
+    * disambiguator cannot recognize a zero-file commit by its data dir,
+    * so a lost-ack retry composes against a parent that already holds
+    * the commit: a delete or drop re-derives and finds nothing left to
+    * do, a metadata edit re-applies or its check refuses it loudly,
+    * restore lands a content-identical version, clone refuses the now
+    * non-empty target, and convert accepts the identical winner.
     */
   private def writeNothing(spark: SparkSession, table: String,
       schemaJson: String, dataRel: Option[String] = None): Written =
@@ -4864,7 +4600,9 @@ object TxLog {
 
   /** What a commit wants to publish, composed against the current parent.
     * `schemaJson` overrides the written frame's schema as the manifest
-    * schema — only a schema-evolving append sets it (to the merged one).
+    * schema: a schema-evolving append sets it to the merged schema, and
+    * every metadata-only commit ([[alterMetadata]]) to its parent's,
+    * edited or not.
     * `cdf` lists this commit's change-data files (delete/update with
     * `changeFeed = true`); `constraints` is the FULL constraint map the
     * committed manifest carries (composers thread the parent's through,
@@ -4898,6 +4636,69 @@ object TxLog {
       // free-form table properties (TBLPROPERTIES): None inherits, only
       // setProperty / restore / clone pass Some
       properties: Option[Map[String, String]] = None)
+
+  /** The optimistic-commit loop every retrying writer shares: run
+    * `attempt` (snapshot, compute, write, [[publish]]) until one returns
+    * a result. `None` is an attempt that lost the commit race and was
+    * abandoned (its data dir deleted); the next attempt re-derives
+    * against the new latest snapshot.
+    */
+  private def optimistic[T](table: String, op: String, maxAttempts: Int)(
+      attempt: => Option[T]): T = {
+    require(maxAttempts >= 1, "maxAttempts must be >= 1")
+    Iterator.fill(maxAttempts)(attempt).collectFirst { case Some(v) => v }
+      .getOrElse(sys.error(s"$op on $table lost the commit race $maxAttempts " +
+        "times (pathological write contention); re-run or serialize writers"))
+  }
+
+  /** Compose `att` against exactly the snapshot `base` the attempt was
+    * computed from; any other parent abandons the attempt for a
+    * re-derive (the stale result would silently drop the winner's rows).
+    */
+  private def onBase(base: Manifest)(
+      att: Manifest => Attempt): Option[Manifest] => Option[Attempt] =
+    parent => parent.filter(_.version == base.version).map(_ => att(base))
+
+  /** [[onBase]], but a newer parent that left every `touched` file
+    * alone ([[rebasable]]) is composed against instead of abandoned:
+    * DELETE and UPDATE rebase onto concurrent appends and file-disjoint
+    * DML rather than recompute.
+    */
+  private def onBaseOrRebase(base: Manifest, touched: Set[String])(
+      att: Manifest => Attempt): Option[Manifest] => Option[Attempt] = {
+    case Some(p) if p.version == base.version => Some(att(base))
+    case Some(p) if rebasable(base, p, touched) => Some(att(p))
+    case _ => None
+  }
+
+  /** `p` with its `gone` files (and their stats) swapped for `w`'s fresh
+    * ones; `p`'s txn watermarks and constraints carried.
+    */
+  private def swapped(action: String, p: Manifest, gone: Set[String],
+      w: Written): Attempt =
+    Attempt(action, p.files.filterNot(gone) ++ w.fresh,
+      p.stats.getOrElse(Seq.empty).filterNot(e => gone(e.path)) ++ w.stats,
+      p.txn.getOrElse(Map.empty),
+      constraints = p.constraints.getOrElse(Map.empty))
+
+  /** A metadata-only commit: `edit` gets the CAS parent and that
+    * parent's files, stats, txn, constraints and schema as a carried
+    * [[Attempt]], and returns it with the table-level state it changes.
+    * A lost race re-runs `edit` against the new parent, so nothing a
+    * concurrent commit changed is ever republished stale. The table
+    * must exist before anything is published: `current` is a snapshot
+    * the caller already read, else it is read here.
+    */
+  private def alterMetadata(spark: SparkSession, table: String,
+      action: String, current: Option[Manifest] = None)(
+      edit: (Manifest, Attempt) => Attempt): Long = {
+    val w = writeNothing(spark, table,
+      current.getOrElse(manifest(spark, table)).schemaJson)
+    publish(spark, table, w, parent => {
+      val m = parent.getOrElse(sys.error(s"table $table has no committed versions"))
+      Some(edit(m, swapped(action, m, Set.empty, w).copy(schemaJson = Some(m.schemaJson))))
+    }).get
+  }
 
   /** Write a change-data frame under the commit's own data directory
     * (`<dataRel>/_cdf/`): invisible to snapshot readers (only
@@ -5344,8 +5145,10 @@ object TxLog {
     * orphaned data directory is deleted and None is returned.
     */
   private def publish(spark: SparkSession, table: String, w: Written,
-      compose: Option[Manifest] => Option[Attempt]): Option[Long] =
+      compose: Option[Manifest] => Option[Attempt]): Option[Long] = {
+    casRaceHook()
     graft.DriverTimers.time("publish")(publish0(spark, table, w, compose))
+  }
 
   private def publish0(spark: SparkSession, table: String, w: Written,
       compose: Option[Manifest] => Option[Attempt]): Option[Long] = {
@@ -6100,27 +5903,18 @@ object TxLog {
     buildBlooms(spark, t,
       DataType.fromJson(m.schemaJson).asInstanceOf[StructType],
       own, expected, physCols)
-    publish(spark, table, writeNothing(spark, table, m.schemaJson), parent => {
-      val p = parent.getOrElse(sys.error(s"table $table lost its versions"))
-      Some(Attempt("set_bloom_index", p.files,
-        p.stats.getOrElse(Seq.empty), p.txn.getOrElse(Map.empty),
-        cdf = Seq.empty, constraints = p.constraints.getOrElse(Map.empty),
-        bloomIndex = Some(physCols)))
-    }).get
+    alterMetadata(spark, table, "set_bloom_index", Some(m)) { (_, carried) =>
+      carried.copy(bloomIndex = Some(physCols))
+    }
   }
 
   /** Drop the bloom-index property (sidecars become dead weight until
     * [[vacuum]] reaps them with their files; readers ignore them).
     */
   def dropBloomIndex(spark: SparkSession, table: String): Long =
-    publish(spark, table,
-      writeNothing(spark, table, manifest(spark, table).schemaJson), parent => {
-        val p = parent.getOrElse(sys.error(s"table $table lost its versions"))
-        Some(Attempt("drop_bloom_index", p.files,
-          p.stats.getOrElse(Seq.empty), p.txn.getOrElse(Map.empty),
-          cdf = Seq.empty, constraints = p.constraints.getOrElse(Map.empty),
-          bloomIndex = Some(Seq.empty))) // Some(empty) → filter(_.nonEmpty) → unset
-      }).get
+    alterMetadata(spark, table, "drop_bloom_index") { (_, carried) =>
+      carried.copy(bloomIndex = Some(Seq.empty)) // Some(empty) → filter(_.nonEmpty) → unset
+    }
 
   /** Driver-side hash matching the build side exactly: the value cast
     * to the COLUMN's type (the aggregate hashed the column's native
