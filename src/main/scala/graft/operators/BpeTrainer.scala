@@ -42,8 +42,8 @@ object BpeTrainer {
     * BpeTrainerSpec pins local ≡ distributed merge-for-merge.
     */
   private def localVocabThreshold(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption("spark.graft.bpe.localVocabThreshold")
-      .map(_.toInt).getOrElse(1000000)
+    graft.GraftConf.int(spark.sessionState.conf,
+      "spark.graft.bpe.localVocabThreshold", 1000000)
 
   /** Driver-side reference of one merge round over (syms, freq) rows:
     * count adjacent pairs weighted by freq, pick (max n, then lexical

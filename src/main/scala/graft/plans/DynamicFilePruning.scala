@@ -95,16 +95,16 @@ object DynamicFilePruning extends Rule[LogicalPlan] with PredicateHelper {
   @volatile private[graft] var lastTier: String = ""
 
   private def enabled: Boolean =
-    conf.getConfString("spark.graft.dynamicFilePruning", "true").toBoolean
+    graft.GraftConf.boolean(conf, "spark.graft.dynamicFilePruning", true)
 
   private def maxKeys: Int =
-    conf.getConfString("spark.graft.dynamicFilePruning.maxKeys", "1000").toInt
+    graft.GraftConf.int(conf, "spark.graft.dynamicFilePruning.maxKeys", 1000)
 
-  private def summaryMaxKeys: Int = conf.getConfString(
-    "spark.graft.dynamicFilePruning.summaryMaxKeys", "100000").toInt
+  private def summaryMaxKeys: Int = graft.GraftConf.int(conf,
+    "spark.graft.dynamicFilePruning.summaryMaxKeys", 100000)
 
-  private def maxRows: Int = conf.getConfString(
-    "spark.graft.dynamicFilePruning.maxRows", "1000000").toInt
+  private def maxRows: Int = graft.GraftConf.int(conf,
+    "spark.graft.dynamicFilePruning.maxRows", 1000000)
 
   private def dimLimitBytes: Long = {
     val t = conf.autoBroadcastJoinThreshold

@@ -86,10 +86,10 @@ case class TopKPerKeyExec(
     // 64 MiB of retained row bytes or 2M retained rows per task —
     // comfortably inside a 4 GiB / 4-core executor even with JVM
     // per-entry overhead on top.
-    val maxBytes = conf.getConfString("spark.graft.topk.maxRetainedBytes",
-      (64L * 1024 * 1024).toString).toLong
-    val maxRows = conf.getConfString("spark.graft.topk.maxRetainedRows",
-      (2L * 1024 * 1024).toString).toLong
+    val maxBytes = graft.GraftConf.long(conf, "spark.graft.topk.maxRetainedBytes",
+      64L * 1024 * 1024)
+    val maxRows = graft.GraftConf.long(conf, "spark.graft.topk.maxRetainedRows",
+      2L * 1024 * 1024)
     child.execute().mapPartitions { iter =>
       val keyGen = UnsafeProjection.create(keyExprs, childOutput)
       val ord = RowOrdering.create(sortOrder, childOutput)
@@ -197,8 +197,8 @@ case class TopKPerKeyExec(
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyNode(k, keys, order, child) =>
-      val usePartial = org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.topk.partial", "true").toBoolean
+      val usePartial = graft.GraftConf.boolean(
+        org.apache.spark.sql.internal.SQLConf.get, "spark.graft.topk.partial", true)
       val planned = planLater(child)
       val pre =
         if (usePartial) TopKPerKeyExec(k, keys, order, planned, partial = true)

@@ -52,7 +52,7 @@ object WindowTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * sort-based shape is no worse.
     */
   private def maxK: Int =
-    conf.getConfString("spark.graft.topk.rewriteMaxK", "100000").toInt
+    graft.GraftConf.int(conf, "spark.graft.topk.rewriteMaxK", 100000)
 
   private def limitFor(rn: ExprId, conjunct: Expression): Option[Int] =
     conjunct match {

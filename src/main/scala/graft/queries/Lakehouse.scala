@@ -456,7 +456,7 @@ object Lakehouse {
 
     "q116_tx_dv_update" -> ((s, dir) => {
       // q97's reclassification through DELETION-VECTOR update
-      // (TxLog.updateDv scaladoc): the matched rows' old positions are
+      // (TxLog.update scaladoc): the matched rows' old positions are
       // vectored out — no touched file rewritten (DeletionVectorSpec
       // pins file identity) — and the post-images land in one fresh
       // write. Same oracle as q97: hash equality proves the DV path and
@@ -474,7 +474,7 @@ object Lakehouse {
     }),
 
     "q117_tx_dv_merge" -> ((s, dir) => {
-      // q93's CDC fold through DELETION-VECTOR merge (TxLog.mergeDv
+      // q93's CDC fold through DELETION-VECTOR merge (TxLog.merge
       // scaladoc): matched keys' old positions vectored out, the latest
       // non-delete change rows appended in one fresh write — no touched
       // file read beyond the key scan, none rewritten; cost O(changes).
@@ -984,7 +984,7 @@ object Lakehouse {
     }),
 
     "q115_tx_deletion_vectors" -> ((s, dir) => {
-      // DELETE via deletion vectors under the oracle gate (TxLog.deleteDv
+      // DELETE via deletion vectors under the oracle gate (TxLog.delete
       // scaladoc): orders published, a scattered predicate DV-deleted —
       // no data file rewritten, the matching positions live in sidecars
       // (DeletionVectorSpec pins byte-identical files) — then the live

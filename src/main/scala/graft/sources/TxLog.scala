@@ -553,20 +553,21 @@ object TxLog {
     * affects correctness ([[fileCensus]] falls back to the manifest),
     * and the JSON record remains the commit gate. Spark's job-commit
     * protocol makes the dir appear complete-or-absent (`_SUCCESS`
-    * checked on read).
+    * checked on read). A malformed size gate is not a failed write: it
+    * fails the call loudly, after the commit has landed.
     */
   private def writeCensus(spark: SparkSession, t: Path, version: Long,
-      m: Manifest): Unit =
-    try {
-      val minFiles = spark.conf
-        .get("spark.graft.checkpointCensus.minFiles", "1000").toInt
-      if (m.files.size < minFiles) return
+      m: Manifest): Unit = {
+    val minFiles = graft.GraftConf.int(spark.sessionState.conf,
+      "spark.graft.checkpointCensus.minFiles", 1000)
+    if (m.files.size >= minFiles) try {
       import spark.implicits._
       val rows = censusRowsOf(m)
       val parts = math.max(1, rows.size / 1000000)
       spark.createDataset(rows).repartition(parts)
         .write.mode("overwrite").parquet(censusPath(t, version).toString)
     } catch { case scala.util.control.NonFatal(_) => () }
+  }
 
   /** The file census of `version` (default: latest) as a DATAFRAME —
     * path, rows, bytes, partition values, per-column min/max/null
@@ -1705,7 +1706,7 @@ object TxLog {
   private def footerStats(spark: SparkSession, schema: StructType,
       skippable: Array[StructField], absFiles: Seq[String],
       relOf: String => String): Option[Seq[FileEntry]] = {
-    if (spark.conf.getOption("spark.graft.stats.footer").contains("false"))
+    if (!graft.GraftConf.boolean(spark.sessionState.conf, "spark.graft.stats.footer", true))
       return None
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     // relOf is written for SCAN-reported spellings (URI-encoded); the
@@ -2680,110 +2681,60 @@ object TxLog {
     * per key wins, `deleteOp` deletes, anything else upserts) into the
     * table under snapshot isolation.
     *
-    * TOUCHED-FILES-ONLY rewrite (the public Delta merge shape): one
+    * TOUCHED-FILES-ONLY (the public Delta merge shape): one
     * column-pruned scan semi-joined against the BROADCAST distinct
-    * change-key set finds the files holding any matched key; ONLY those
-    * are rewritten (with the changes applied; new-key inserts ride in
-    * the same fresh write), every other file stays referenced
-    * untouched. Cost is O(touched + changes), not O(table) — at 100 TB
-    * a CDC batch touching 0.1% of files rewrites 0.1% of the table.
-    * The broadcast assumes the key set is change-batch-sized (the CDC
-    * premise); a table-sized "change" batch should be an overwrite.
+    * change-key set finds the files holding any matched key
+    * ([[findTouched]]); every other file stays referenced untouched.
+    * Cost is O(touched + changes), not O(table) — at 100 TB a CDC batch
+    * touching 0.1% of files rewrites 0.1% of the table. The broadcast
+    * assumes the key set is change-batch-sized (the CDC premise); a
+    * table-sized "change" batch should be an overwrite. Copy-on-write
+    * rewrites the touched files with the changes applied (new-key
+    * inserts ride in the same fresh write; their deletion vectors are
+    * materialized). `deletionVectors = true` is the cheapest correct
+    * merge CDC semantics allow: a replaced row's OLD VALUES never
+    * matter (the change row carries the entire new row), so the matched
+    * keys' old positions are vectored out and only the latest
+    * non-delete change rows are written — no touched file is read
+    * beyond the key-finding scan, cost O(changes), the shape that
+    * absorbs a trickle of CDC batches into a 100 TB table all day and
+    * lets the nightly OPTIMIZE materialize the vectors once.
     *
-    * Optimistic CAS loop: the merge is computed against the latest
-    * snapshot and publishes ONLY if that snapshot is still the latest
-    * at commit time; a concurrent commit in the gap makes the loop
-    * re-derive against the new snapshot (the stale result, however
-    * plausible, would silently drop the concurrent writer's rows —
-    * lost update). Data is rewritten per retry; retries are as rare as
-    * real write-write races. Deletion vectors on touched files are
-    * materialized by the rewrite; untouched files keep theirs.
+    * Optimistic CAS loop ([[dml]]): the merge is computed against the
+    * latest snapshot and publishes ONLY if that snapshot is still the
+    * latest at commit time; a concurrent commit in the gap makes the
+    * loop re-derive against the new snapshot (the stale result, however
+    * plausible, would silently drop the concurrent writer's rows — lost
+    * update). Data is rewritten per retry; retries are as rare as real
+    * write-write races.
     */
   def merge(spark: SparkSession, table: String, changes: DataFrame,
       keys: Seq[String], ordering: Seq[Column], opCol: String,
       deleteOp: String = "D", maxAttempts: Int = 10,
       deletionVectors: Boolean = false): Long = {
-    if (deletionVectors)
-      return mergeDv(spark, table, changes, keys, ordering, opCol,
-        deleteOp, maxAttempts)
     val t = new Path(table)
     val keysDf = changes.select(keys.map(k => col(quoted(k))): _*).distinct()
     val renamedKeys = keys.foldLeft(keysDf)((d, k) =>
       d.withColumnRenamed(k, s"__mk_$k"))
-    optimistic(table, "merge", maxAttempts) {
+    dml(spark, table, "merge", maxAttempts) { dataRel =>
       val base = latestVersion(spark, table).getOrElse(
         sys.error(s"table $table has no committed versions to merge into"))
       val m = manifestAt(spark, table, base)
-      val touched: Seq[String] =
-        if (m.files.isEmpty) Seq.empty
-        else {
-          // null-safe key match, mirroring cdcApply's <=> semantics
-          val cond = keys.map(k => col(quoted(k)) <=> col(s"__mk_$k"))
-            .reduce(_ && _)
-          val byKey = byScanKey(m.files, t)
-          liveKeyed(spark, t, m, m.files)
-            .join(broadcast(renamedKeys), cond, "left_semi")
-            .select(col("__dv_k")).distinct().collect()
-            .map(r => byKey.getOrElse(r.getString(0),
-              sys.error(s"scan returned unlisted file ${r.getString(0)}")))
-            .toSeq
-        }
+      // null-safe key match, mirroring cdcApply's <=> semantics
+      val f = findTouched(spark, t, m, dataRel, deletionVectors)(
+        liveKeyed(spark, t, m, m.files).join(broadcast(renamedKeys),
+          keys.map(k => col(quoted(k)) <=> col(s"__mk_$k")).reduce(_ && _),
+          "left_semi"))
+      // the old rows cdcApply folds: the touched files' live rows, or
+      // none under vectors (CDC replace semantics)
       val merged = graft.operators.MergeOps.cdcApply(
-        readLive(spark, t, m, touched), changes, keys, ordering, opCol, deleteOp)
+        readLive(spark, t, m, if (deletionVectors) Seq.empty else f.touched),
+        changes, keys, ordering, opCol, deleteOp)
       val cons = constraintsOf(spark, table)
       val w = writeData(inbound(spark, table, merged, cons), table,
-        m.partitionBy.getOrElse(Seq.empty))
-      publish(spark, table, w, onBase(m)(p => swapped("merge", p, touched.toSet, w)
-        .copy(constraints = guardedCons(table, Some(p), cons))))
-    }
-  }
-
-  /** MERGE via DELETION VECTORS — the cheapest correct merge CDC
-    * semantics allow: a replaced row's OLD VALUES never matter (the
-    * change row carries the entire new row), so the matched keys' old
-    * positions are vectored out and the latest non-delete change rows
-    * land in ONE fresh write. No touched file is read beyond the
-    * key-finding scan, none is rewritten — cost O(changes), the shape
-    * that absorbs a trickle of CDC batches into a 100 TB table all day
-    * and lets the nightly OPTIMIZE materialize the vectors once.
-    */
-  private def mergeDv(spark: SparkSession, table: String, changes: DataFrame,
-      keys: Seq[String], ordering: Seq[Column], opCol: String,
-      deleteOp: String, maxAttempts: Int): Long = {
-    val t = new Path(table)
-    val keysDf = changes.select(keys.map(k => col(quoted(k))): _*).distinct()
-    val renamedKeys = keys.foldLeft(keysDf)((d, k) =>
-      d.withColumnRenamed(k, s"__mk_$k"))
-    optimistic(table, "merge", maxAttempts) {
-      val base = latestVersion(spark, table).getOrElse(
-        sys.error(s"table $table has no committed versions to merge into"))
-      val m = manifestAt(spark, table, base)
-      val tq = fs(spark, t).makeQualified(t)
-      // commit dir chosen before the find pass: matched keys' old
-      // positions are aggregated per file and the sidecars written
-      // executor-side — one driver descriptor per touched file
-      val dataRel = newDataRel()
-      val plan: DvPlan =
-        if (m.files.isEmpty) DvPlan(Seq.empty, Set.empty, Seq.empty)
-        else {
-          val cond = keys.map(k => col(quoted(k)) <=> col(s"__mk_$k"))
-            .reduce(_ && _)
-          composeDvsDist(spark, t, tq, m, dataRel,
-            liveKeyed(spark, t, m, m.files)
-              .join(broadcast(renamedKeys), cond, "left_semi")
-              .select(col("__dv_k"), col("__dv_i")))
-        }
-      // the appended rows: latest non-delete change per key (the old
-      // rows' values are irrelevant under CDC replace semantics)
-      val merged = graft.operators.MergeOps.cdcApply(
-        readLive(spark, t, m, Seq.empty), changes, keys, ordering,
-        opCol, deleteOp)
-      val cons = constraintsOf(spark, table)
-      val w = writeData(inbound(spark, table, merged, cons), table,
-        m.partitionBy.getOrElse(Seq.empty), dataRelOpt = Some(dataRel))
-      publish(spark, table, w, onBase(m)(p => swapped("merge", p, plan.goneSet, w)
-        .copy(constraints = guardedCons(table, Some(p), cons),
-          dvs = Some(plan.dvsAgainst(p)))))
+        m.partitionBy.getOrElse(Seq.empty), Some(dataRel))
+      (w, onBase(m)(p => swapped("merge", p, f.gone, w).copy(
+        constraints = guardedCons(table, Some(p), cons), dvs = f.dvsAgainst(p))))
     }
   }
 
@@ -2906,7 +2857,7 @@ object TxLog {
         srcM.persist()
         srcM.write.format("noop").mode("overwrite").save()
       }
-      optimistic(table, "mergeInto", maxAttempts) {
+      dml(spark, table, "mergeInto", maxAttempts) { dataRel =>
         val base = latestVersion(spark, table).getOrElse(
           sys.error(s"table $table has no committed versions to merge into"))
         val m = manifestAt(spark, table, base)
@@ -3031,7 +2982,7 @@ object TxLog {
           // just the written row count — no extra pass
           val rows = if (idMap.isEmpty) bare else assignIdentity(bare, idMap, schema)
           val w = writeData(enforcing(regen(rows), cons), table,
-            m.partitionBy.getOrElse(Seq.empty))
+            m.partitionBy.getOrElse(Seq.empty), Some(dataRel))
           val cdfFiles =
             if (!changeFeed) Seq.empty
             else {
@@ -3046,7 +2997,7 @@ object TxLog {
                 aliasLogical(toDf(spark, t, readJson, w.fresh), m)
                   .withColumn("_change_type", lit("insert")))
             }
-          publish(spark, table, w, onBase(m)(p =>
+          (w, onBase(m)(p =>
             mergeAttempt(p, Set.empty, w, cdfFiles,
               advancedIds(w.stats.map(_.rows).sum))))
         } else {
@@ -3201,7 +3152,9 @@ object TxLog {
               Some(mergeFeed(in))
             }
 
-          if (!deletionVectors) {
+          // the files that leave the manifest, the DV list to commit
+          // against a parent, and the rows of the one fresh write
+          val (gone, dvsAgainst, rows) = if (!deletionVectors) {
             // copy-on-write: rewrite the working files without the dead
             // rows, clause outputs applied; untouched files keep their DVs.
             // Under join fanout (multiPair) collapse to one surviving pair
@@ -3238,27 +3191,15 @@ object TxLog {
               case Some(ins) => outCols(actedCow.filter(
                 !col("__act").isin((deadTags ++ insTags): _*))).unionByName(ins)
             }
-            val (w, cdfFiles) = overlapCdf(spark, table, feed) { relOpt =>
-              writeData(enforcing(regen(rows), cons), table,
-                m.partitionBy.getOrElse(Seq.empty), relOpt)
-            }
-            publish(spark, table, w, onBase(m)(p =>
-              mergeAttempt(p, working.toSet, w, cdfFiles,
-                advancedIds(insertedForIds))))
+            (working.toSet, (_: Manifest) => Option.empty[Seq[DvEntry]], rows)
           } else {
             // deletion vectors: EVERY acted-on target row's old position is
             // vectored out (update and delete alike); updates' post-images
             // and inserts land in one fresh write. Cost ∝ rows changed —
             // no working file is read beyond the scans, none rewritten.
-            val tq = fs(spark, t).makeQualified(t)
-            // commit dir chosen before the find pass: acted-on target
-            // positions are aggregated per file and the sidecars written
-            // executor-side — one driver descriptor per touched file
-            val dataRel = newDataRel()
-            val plan = composeDvsDist(spark, t, tq, m, dataRel,
+            val f = findTouched(spark, t, m, dataRel, deletionVectors = true)(
               acted.filter(col("__act").isin(actedTags: _*))
-                .select(col("t.__dv_k").as("__dv_k"),
-                  col("t.__dv_i").as("__dv_i")))
+                .select(col("t.__dv_k").as("__dv_k"), col("t.__dv_i").as("__dv_i")))
             val liveTags: Seq[String] =
               matched.zipWithIndex.collect { case (MergeUpdate(_, _), i) => s"m$i" } ++
               notMatched.indices.map(j => s"i$j") ++
@@ -3269,14 +3210,15 @@ object TxLog {
               case Some(ins) => outCols(acted.filter(col("__act").isin(
                 liveTags.filterNot(insTags.contains): _*))).unionByName(ins)
             }
-            val (w, cdfFiles) = overlapCdf(spark, table, feed, Some(dataRel)) { relOpt =>
-              writeData(enforcing(regen(rows), cons), table,
-                m.partitionBy.getOrElse(Seq.empty), relOpt)
-            }
-            publish(spark, table, w, onBase(m)(p =>
-              mergeAttempt(p, plan.goneSet, w, cdfFiles,
-                advancedIds(insertedForIds)).copy(dvs = Some(plan.dvsAgainst(p)))))
+            (f.gone, f.dvsAgainst _, rows)
           }
+          val (w, cdfFiles) = overlapCdf(spark, table, feed, dataRel) {
+            writeData(enforcing(regen(rows), cons), table,
+              m.partitionBy.getOrElse(Seq.empty), Some(dataRel))
+          }
+          (w, onBase(m)(p =>
+            mergeAttempt(p, gone, w, cdfFiles, advancedIds(insertedForIds))
+              .copy(dvs = dvsAgainst(p))))
         }
       }
     } finally if (materialize) srcM.unpersist(blocking = false)
@@ -3795,9 +3737,6 @@ object TxLog {
     }
   }
 
-  /** One touched file from the copy-on-write find scan. */
-  private final case class Touched(rel: String, matches: Long)
-
   /** Logical conflict detection for a lost commit CAS: can a computed
     * DELETE/UPDATE attempt be REBASED onto the newer `parent` instead
     * of recomputed from scratch? True iff no table-level contract moved
@@ -3868,63 +3807,104 @@ object TxLog {
       acc.iterator
     }.collect().toSeq.groupMapReduce(_._1)(_._2)(op)
 
-  /** Which manifest-listed files contain a LIVE row where `cond` is
-    * TRUE, with each such file's match count (the full-file-delete tier
-    * compares it with the file's live rows). ONE scan that reads only
-    * the columns `cond` references, with `cond` pushed into the parquet
-    * reader so row-group stats skip non-matching IO; each scan task
-    * counts its matches per file and the driver sums the counts
-    * ([[foldPerFile]]) — one job, no shuffle. Serves [[delete]],
-    * [[update]] and [[replaceWhere]]. Returned sorted by path.
+  /** What a row-level DML attempt's find step ([[findTouched]])
+    * decided: the `touched` files (sorted rels, each holding a matched
+    * live row), the `full` ones whose every live row matched, and, under
+    * deletion vectors, the new vectors of the touched files that stay
+    * (`dvEntries`). Positions never reach the driver.
     */
-  private def findTouched(spark: SparkSession, t: Path, m: Manifest,
-      cond: Column): Seq[Touched] = graft.DriverTimers.time("findTouched") {
-    if (m.files.isEmpty) return Seq.empty
-    import spark.implicits._
-    // LIVE rows only: a deletion-vectored row can't be touched again,
-    // and the full-file tier compares against live counts
-    val hits = foldPerFile(liveKeyed(spark, t, m, m.files)
-      .filter(cond)
-      .select(col("__dv_k"), lit(1L))
-      .as[(String, Long)])(_ + _)
-    // map file keys back to table-relative manifest paths (last2 is
-    // unique per live file: the part name embeds its write job's UUID)
-    val byKey = byScanKey(m.files, t)
-    hits.toSeq.map { case (k, n) =>
-      Touched(byKey.getOrElse(k, sys.error(s"scan returned unlisted file $k")), n)
-    }.sortBy(_.rel)
+  private final case class Found(touched: Seq[String], full: Set[String],
+      dvEntries: Option[Seq[DvEntry]]) {
+    /** The files that leave the manifest: under copy-on-write every
+      * touched file (rewritten), under vectors only the full ones — the
+      * rest keep their unmatched rows behind a vector.
+      */
+    val gone: Set[String] = if (dvEntries.isEmpty) touched.toSet else full
+
+    /** The DV list to commit against `p` — the CAS base, or a rebase
+      * parent proven safe by [[rebasable]] (which guarantees every
+      * touched file carries its base vector, so the entries'
+      * prior-unions stay exact). None under copy-on-write: [[publish]]
+      * then keeps the parent's vectors of the files that stay.
+      */
+    def dvsAgainst(p: Manifest): Option[Seq[DvEntry]] = dvEntries.map { es =>
+      val replaced = es.map(_.path).toSet
+      p.dvs.getOrElse(Seq.empty).filterNot(e => gone(e.path) || replaced(e.path)) ++ es
+    }
   }
 
-  /** Copy-on-write DELETE (SQL `DELETE WHERE cond` semantics: a row is
-    * removed iff `cond` is TRUE; NULL keeps the row). Three-tier cost,
-    * the public Delta DELETE shape:
-    *   1. files with no matching row are NOT rewritten (and the find
-    *      scan, [[findTouched]], reads only `cond`'s columns, with `cond`
-    *      pushed to the parquet row-group stats, and counts matches per
-    *      file inside its tasks: one job, no shuffle);
-    *   2. files where EVERY row matches are dropped from the manifest
-    *      without being read again (match count == the manifest's
-    *      stored per-file row count);
-    *   3. only boundary files — some rows match, some don't — are
-    *      rewritten without the matching rows.
+  /** The find step of every row-level DML statement: how the rows in
+    * `matched` — the statement's matched LIVE rows, carrying
+    * [[liveKeyed]]'s `__dv_k`/`__dv_i` — reach the files.
+    *   - Copy-on-write: each scan task counts its matches per file and
+    *     the driver sums the counts ([[foldPerFile]]) — one job, no
+    *     shuffle. A `cond` filter over [[liveKeyed]] reads only the
+    *     columns `cond` references, with `cond` pushed into the parquet
+    *     reader so row-group stats skip non-matching IO. A file is
+    *     `full` when its count equals its live rows.
+    *   - Deletion vectors: [[composeDvsDist]] aggregates the positions
+    *     per file and writes the sidecars under `dataRel`, the
+    *     attempt's own data dir ([[dml]]).
+    * Serves [[delete]], [[update]], [[merge]], [[replaceWhere]] and the
+    * vector branch of [[mergeInto]]. `matched` is built only when the
+    * manifest lists files.
+    */
+  private def findTouched(spark: SparkSession, t: Path, m: Manifest,
+      dataRel: String, deletionVectors: Boolean)(matched: => DataFrame): Found =
+    graft.DriverTimers.time("findTouched") {
+      if (m.files.isEmpty) Found(Seq.empty, Set.empty, None)
+      else if (deletionVectors) composeDvsDist(spark, t, m, dataRel, matched)
+      else {
+        import spark.implicits._
+        val hits = foldPerFile(matched.select(col("__dv_k"), lit(1L))
+          .as[(String, Long)])(_ + _)
+        // map file keys back to table-relative manifest paths (last2 is
+        // unique per live file: the part name embeds its write job's UUID)
+        val byKey = byScanKey(m.files, t)
+        val live = liveRowsOf(m)
+        val counts = hits.toSeq.map { case (k, n) =>
+          byKey.getOrElse(k, sys.error(s"scan returned unlisted file $k")) -> n }
+        Found(counts.map(_._1).sorted,
+          counts.collect { case (rel, n) if live.get(rel).contains(n) => rel }.toSet, None)
+      }
+    }
+
+  /** Row-level DELETE (SQL `DELETE WHERE cond` semantics: a row is
+    * removed iff `cond` is TRUE; NULL keeps the row), the public Delta
+    * DELETE shape:
+    *   1. files with no matching row are NOT touched (the find scan,
+    *      [[findTouched]], reads only `cond`'s columns, with `cond`
+    *      pushed to the parquet row-group stats);
+    *   2. files where EVERY live row matches are dropped from the
+    *      manifest without being read again;
+    *   3. boundary files — some rows match, some don't — are rewritten
+    *      without the matching rows, or, with `deletionVectors = true`
+    *      (the modern Delta default), keep their bytes: the matching
+    *      rows' parquet positions go to change-sized sidecars, and the
+    *      manifest maps each file to its vector (a second delete on a
+    *      vectored file unions positions).
     * At 100 TB a retention delete on a date-partitioned table is tier 2
-    * for almost every touched file: metadata-only. Optimistic CAS like
-    * [[merge]]: a concurrent commit in the find→publish gap triggers a
-    * full re-derive against the new snapshot. Returns the committed
-    * version (unchanged if nothing matched).
+    * for almost every touched file: metadata-only. Vectors turn a
+    * GDPR-style scattered delete from "rewrite every touched GB" into
+    * "one scan + KBs of positions". Every live read anti-joins the
+    * positions out; rewrites (compact/zorder/copy-on-write DML)
+    * materialize them; [[statsAggregate]] and the metadata-aggregate
+    * rule refuse tables with vectors (per-file min/max may describe
+    * deleted rows — a metadata ANSWER is never a guess, while stats
+    * PRUNING stays safe because bounds only widen). Optimistic CAS
+    * ([[dml]]); a lost race rebases onto a winner that left the touched
+    * files alone. Returns the committed version (unchanged if nothing
+    * matched).
     */
   def delete(spark: SparkSession, table: String, cond: Column,
       maxAttempts: Int = 10, changeFeed: Boolean = false,
       deletionVectors: Boolean = false): Long = {
-    if (deletionVectors)
-      return deleteDv(spark, table, cond, maxAttempts, changeFeed)
     val t = new Path(table)
-    optimistic(table, "delete", maxAttempts) {
+    dml(spark, table, "delete", maxAttempts) { dataRel =>
       val m = manifest(spark, table)
-      val touched = findTouched(spark, t, m, cond)
-      if (touched.isEmpty) return m.version
-      val live = liveRowsOf(m)
-      val (drop, rewrite) = touched.partition(h => live.get(h.rel).contains(h.matches))
+      val f = findTouched(spark, t, m, dataRel, deletionVectors)(
+        liveKeyed(spark, t, m, m.files).filter(cond))
+      if (f.touched.isEmpty) return m.version
       // CDF: the deleted rows' pre-images. Opt-in because tier-2 files
       // are otherwise never read — recording their pre-images turns the
       // metadata-only drop into a read of exactly the dropped files
@@ -3932,25 +3912,23 @@ object TxLog {
       // write (overlapCdf — both read only the parent snapshot).
       val cdfChanges =
         if (!changeFeed) None
-        else Some(readLive(spark, t, m, touched.map(_.rel))
+        else Some(readLive(spark, t, m, f.touched)
           .filter(coalesce(cond, lit(false)))
           .withColumn("_change_type", lit("delete")))
-      val (w, cdfFiles) = overlapCdf(spark, table, cdfChanges) { relOpt =>
-        if (rewrite.isEmpty) writeNothing(spark, table, m.schemaJson, relOpt)
-        else writeData(
-          // live rows: the rewrite MATERIALIZES any existing deletion
-          // vectors on the boundary files (never carried forward)
-          readLive(spark, t, m, rewrite.map(_.rel))
-            .filter(!coalesce(cond, lit(false))),
-          table, m.partitionBy.getOrElse(Seq.empty), relOpt)
+      // copy-on-write rewrites the boundary files' LIVE rows: the
+      // rewrite MATERIALIZES their vectors (never carried forward)
+      val rewrite = if (deletionVectors) Seq.empty else f.touched.filterNot(f.full)
+      val (w, cdfFiles) = overlapCdf(spark, table, cdfChanges, dataRel) {
+        if (rewrite.isEmpty) writeNothing(spark, table, m.schemaJson, Some(dataRel))
+        else writeData(readLive(spark, t, m, rewrite).filter(!coalesce(cond, lit(false))),
+          table, m.partitionBy.getOrElse(Seq.empty), Some(dataRel))
       }
-      val gone = touched.map(_.rel).toSet
       // row-removing: constraints flow through unguarded. On a lost
-      // CAS, REBASE onto the winner when it left our touched files
-      // alone (rebasable) — concurrent appends / file-disjoint DML
+      // CAS, REBASE onto the winner when it left our touched files (and
+      // their vectors) alone — concurrent appends / file-disjoint DML
       // cost one compute each instead of a full re-derive.
-      publish(spark, table, w, onBaseOrRebase(m, gone)(p =>
-        swapped("delete", p, gone, w).copy(cdf = cdfFiles)))
+      (w, onBaseOrRebase(m, f.touched.toSet)(p =>
+        swapped("delete", p, f.gone, w).copy(cdf = cdfFiles, dvs = f.dvsAgainst(p))))
     }
   }
 
@@ -3981,7 +3959,7 @@ object TxLog {
       maxAttempts: Int = 10, changeFeed: Boolean = false): Long = {
     val spark = df.sparkSession
     val t = new Path(table)
-    optimistic(table, "replaceWhere", maxAttempts) {
+    dml(spark, table, "replaceWhere", maxAttempts) { dataRel =>
       val m = manifest(spark, table)
       val cons = m.constraints.getOrElse(Map.empty)
       // in-task insert-predicate guard: fail the write, not the data
@@ -3992,22 +3970,22 @@ object TxLog {
             "replacement predicate - it would silently survive the next " +
             "replaceWhere of the same range; widen the predicate or fix " +
             "the frame")).isNull)
-      val touched = findTouched(spark, t, m, cond)
-      val live = liveRowsOf(m)
-      val (_, rewrite) = touched.partition(h => live.get(h.rel).contains(h.matches))
+      val f = findTouched(spark, t, m, dataRel, deletionVectors = false)(
+        liveKeyed(spark, t, m, m.files).filter(cond))
+      val rewrite = f.touched.filterNot(f.full)
       val toWrite =
         if (rewrite.isEmpty) guarded
-        else readLive(spark, t, m, rewrite.map(_.rel))
+        else readLive(spark, t, m, rewrite)
           .filter(!coalesce(cond, lit(false)))
           .unionByName(guarded)
-      val w = writeData(toWrite, table, m.partitionBy.getOrElse(Seq.empty))
+      val w = writeData(toWrite, table, m.partitionBy.getOrElse(Seq.empty), Some(dataRel))
       require(w.schemaJson == m.schemaJson,
         s"replaceWhere schema drift for $table: table has " +
           s"${m.schemaJson}, frame has ${w.schemaJson}")
       val cdfFiles =
         if (!changeFeed) Seq.empty
         else {
-          val pre = readLive(spark, t, m, touched.map(_.rel))
+          val pre = readLive(spark, t, m, f.touched)
             .filter(coalesce(cond, lit(false)))
             .withColumn("_change_type", lit("delete"))
           val post = aliasLogical(toDf(spark, t, m.schemaJson, w.fresh), m)
@@ -4015,74 +3993,9 @@ object TxLog {
             .withColumn("_change_type", lit("insert"))
           writeCdf(spark, table, w.dataRel, pre.unionByName(post))
         }
-      publish(spark, table, w, onBase(m)(p =>
-        swapped("replaceWhere", p, touched.map(_.rel).toSet, w).copy(
+      (w, onBase(m)(p =>
+        swapped("replaceWhere", p, f.gone, w).copy(
           cdf = cdfFiles, constraints = guardedCons(table, Some(p), cons))))
-    }
-  }
-
-  /** DELETE via DELETION VECTORS (the modern Delta default): no data
-    * file is rewritten — the matching rows' parquet positions are
-    * written to change-sized sidecar files and the manifest maps each
-    * touched file to its vector. At 100 TB this turns a GDPR-style
-    * scattered delete from "rewrite every touched GB" into "one scan +
-    * KBs of positions": the delete's cost is proportional to what it
-    * DELETES, not what it touches. Files whose every live row matches
-    * are still dropped from the manifest outright (no vector needed); a
-    * second delete on an already-vectored file unions positions. Every
-    * live read (read/readAsOf/readWhere/SQL relation) anti-joins the
-    * positions out; rewrites (compact/zorder/update/boundary-delete)
-    * materialize them; [[statsAggregate]] and the metadata-aggregate
-    * rule refuse tables with vectors (per-file min/max may describe
-    * deleted rows — a metadata ANSWER is never a guess, while stats
-    * PRUNING stays safe because bounds only widen).
-    */
-  private def deleteDv(spark: SparkSession, table: String, cond: Column,
-      maxAttempts: Int, changeFeed: Boolean): Long = {
-    val t = new Path(table)
-    optimistic(table, "delete", maxAttempts) {
-      val m = manifest(spark, table)
-      if (m.files.isEmpty) return m.version
-      val tq = fs(spark, t).makeQualified(t)
-      val w = writeNothing(spark, table, m.schemaJson)
-      // ONE distributed pass: LIVE matching rows' positions aggregated
-      // per file and the sidecars written executor-side — the driver
-      // collects one descriptor per touched file, never per row
-      val plan = composeDvsDist(spark, t, tq, m, w.dataRel,
-        liveKeyed(spark, t, m, m.files)
-          .filter(coalesce(cond, lit(false)))
-          .select(col("__dv_k"), col("__dv_i")))
-      if (plan.touched.isEmpty) return m.version
-      val cdfFiles =
-        if (!changeFeed) Seq.empty
-        else writeCdf(spark, table, w.dataRel,
-          readLive(spark, t, m, plan.touched)
-            .filter(coalesce(cond, lit(false)))
-            .withColumn("_change_type", lit("delete")))
-      // lost CAS: rebase onto a winner that left our touched files and
-      // their vectors alone (rebasable) instead of re-deriving
-      publish(spark, table, w, onBaseOrRebase(m, plan.touched.toSet)(p =>
-        swapped("delete", p, plan.goneSet, w).copy(cdf = cdfFiles,
-          dvs = Some(plan.dvsAgainst(p)))))
-    }
-  }
-
-  /** The driver-visible outcome of a distributed DV find pass: the
-    * touched files (sorted rels), the files every live row of which
-    * matched (dropped from the manifest outright — no vector), and the
-    * manifest's complete new DV list. Positions never reach the driver.
-    */
-  private final case class DvPlan(touched: Seq[String], goneSet: Set[String],
-      entries: Seq[DvEntry]) {
-    /** The manifest's complete DV list when committing against `mm` —
-      * the CAS base, or a rebase parent proven safe by [[rebasable]]
-      * (which guarantees every touched file carries its base vector,
-      * so `entries`' prior-unions stay exact).
-      */
-    def dvsAgainst(mm: Manifest): Seq[DvEntry] = {
-      val replaced = entries.map(_.path).toSet
-      mm.dvs.getOrElse(Seq.empty)
-        .filterNot(e => goneSet(e.path) || replaced(e.path)) ++ entries
     }
   }
 
@@ -4093,33 +4006,35 @@ object TxLog {
   private[graft] val lastDvFindCollected =
     new java.util.concurrent.atomic.AtomicLong(-1L)
 
-  /** Turn the find pass's matched `(__dv_k, __dv_i)` frame into this
-    * commit's DV state WITHOUT collecting positions to the driver: the
-    * positions are aggregated per file executor-side, unioned with any
-    * prior vector (physical parquet row indexes are stable for an
-    * immutable file), encoded, and each sidecar is written FROM THE
-    * TASK under `dataRel/_dv/` — the driver collects exactly ONE
-    * descriptor row per touched file. A 1% delete on a 100 TB table
-    * therefore moves ~10⁹ positions through executors (bounded per
-    * task by one file's row count) and ~10⁵ descriptor rows through
-    * the driver, not the other way round — the Delta DV-write shape.
+  /** [[findTouched]] under deletion vectors: turn the matched
+    * `(__dv_k, __dv_i)` rows into this commit's DV state WITHOUT
+    * collecting positions to the driver: the positions are aggregated
+    * per file executor-side, unioned with any prior vector (physical
+    * parquet row indexes are stable for an immutable file), encoded,
+    * and each sidecar is written FROM THE TASK under `dataRel/_dv/` —
+    * the driver collects exactly ONE descriptor row per touched file.
+    * A 1% delete on a 100 TB table therefore moves ~10⁹ positions
+    * through executors (bounded per task by one file's row count) and
+    * ~10⁵ descriptor rows through the driver, not the other way round —
+    * the Delta DV-write shape.
     * Files whose every live row matched are dropped outright (decided
     * in-task from the broadcast live-row counts; no sidecar written).
-    * `dataRel` must be the commit's OWN data dir, chosen before the
-    * data write ([[writeData]] appends into it), so an abandoned
-    * publish cleans the sidecars up with it; the sidecar name is a
-    * digest of the data file's rel, making task retries idempotent.
+    * `dataRel` must be the commit's OWN data dir ([[dml]]), which the
+    * data write appends into, so an abandoned attempt cleans the
+    * sidecars up with it; the sidecar name is a digest of the data
+    * file's rel, making task retries idempotent.
     */
-  private def composeDvsDist(spark: SparkSession, t: Path, tq: Path,
-      m: Manifest, dataRel: String, matchedKeyed: DataFrame): DvPlan = {
+  private def composeDvsDist(spark: SparkSession, t: Path, m: Manifest,
+      dataRel: String, matched: DataFrame): Found = {
     import spark.implicits._
     val byKey = byScanKey(m.files, t)
     val live = liveRowsOf(m)
     val oldDv = m.dvs.getOrElse(Seq.empty).map(e => e.path -> e.dv).toMap
     val confBc = spark.sparkContext.broadcast(
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-    val tqStr = tq.toString
-    val perFile: Array[(String, String, Long)] = try matchedKeyed
+    val tqStr = fs(spark, t).makeQualified(t).toString
+    val perFile: Array[(String, String, Long)] = try matched
+      .select(col("__dv_k"), col("__dv_i"))
       .groupBy(col("__dv_k"))
       .agg(collect_list(col("__dv_i")).as("__ps"))
       .as[(String, Seq[Long])]
@@ -4164,10 +4079,10 @@ object TxLog {
       .collect() // ONE row per touched FILE — the only driver structure
     finally confBc.destroy()
     lastDvFindCollected.set(perFile.length.toLong)
-    val goneSet = perFile.collect { case (rel, "", _) => rel }.toSet
     val newEntries = perFile.toSeq.collect { case (rel, dv, n) if dv.nonEmpty =>
       DvEntry(rel, dv, n) }.sortBy(_.path)
-    DvPlan(perFile.map(_._1).toSeq.sorted, goneSet, newEntries)
+    Found(perFile.map(_._1).toSeq.sorted,
+      perFile.collect { case (rel, "", _) => rel }.toSet, Some(newEntries))
   }
 
   /** Fail an UPDATE's `set` that names a column `m` lacks, assigns a
@@ -4241,101 +4156,57 @@ object TxLog {
       .select("__img.*")
   }
 
-  /** Copy-on-write UPDATE (SQL `UPDATE SET col = expr WHERE cond`
+  /** Row-level UPDATE (SQL `UPDATE SET col = expr WHERE cond`
     * semantics: assignments apply iff `cond` is TRUE, and every
     * assignment reads the PRE-update row — [[updateImages]]). Files with
-    * no matching row are never rewritten — the same one-job,
-    * shuffle-free find pass as [[delete]] ([[findTouched]]) — and each
-    * assignment is cast back to the column's declared type, so an
-    * UPDATE can never drift the table schema out from under the older
-    * files. Optimistic CAS like [[merge]].
+    * no matching row are never touched — the same find pass as
+    * [[delete]] ([[findTouched]]) — and each assignment is cast back to
+    * the column's declared type, so an UPDATE can never drift the table
+    * schema out from under the older files. Copy-on-write rewrites every
+    * touched file with the assignments applied; `deletionVectors = true`
+    * vectors the matched rows' old positions out of their files and
+    * writes only their post-images — cost proportional to the rows
+    * UPDATED, not the files touched (a scattered 0.01% update of a
+    * 100 TB table moves KBs of positions plus the updated rows), and
+    * drops a file whose every live row matched instead of vectoring it.
+    * Optimistic CAS ([[dml]]); a lost race rebases like [[delete]].
     */
   def update(spark: SparkSession, table: String, cond: Column,
       set: Seq[(String, Column)], maxAttempts: Int = 10,
       changeFeed: Boolean = false, deletionVectors: Boolean = false): Long = {
     require(set.nonEmpty, "update needs at least one assignment")
-    if (deletionVectors)
-      return updateDv(spark, table, cond, set, maxAttempts, changeFeed)
     val t = new Path(table)
-    optimistic(table, "update", maxAttempts) {
+    dml(spark, table, "update", maxAttempts) { dataRel =>
       val m = manifest(spark, table)
       checkUpdate(table, m, set)
-      val touched = findTouched(spark, t, m, cond)
-      if (touched.isEmpty) return m.version
-      // live rows: the rewrite MATERIALIZES any deletion vectors on the
-      // touched files (a deleted row must not resurrect updated)
-      val images = updateImages(readLive(spark, t, m, touched.map(_.rel)),
-        m, cond, set)
+      val f = findTouched(spark, t, m, dataRel, deletionVectors)(
+        liveKeyed(spark, t, m, m.files).filter(cond))
+      if (f.touched.isEmpty) return m.version
+      // live rows: a rewrite MATERIALIZES any deletion vectors on the
+      // touched files (a deleted row must not resurrect updated); under
+      // vectors only the matched rows' post-images are written
+      val all = updateImages(readLive(spark, t, m, f.touched), m, cond, set)
+      val images = if (deletionVectors) all.filter(col("__hit")) else all
       // assignments can violate a CHECK constraint — enforce on the
-      // rewritten rows like any other row-changing write
+      // written rows like any other row-changing write
       val cons = m.constraints.getOrElse(Map.empty)
       // CDF: the matched rows' update_preimage/update_postimage pairs
-      // as one projection of the rewrite's own rows ([[updateFeed]]) —
-      // independent of the fresh write's output, so it runs
-      // CONCURRENTLY with it (overlapCdf)
+      // as one projection of the written rows' own images
+      // ([[updateFeed]]) — independent of the fresh write's output, so
+      // it runs CONCURRENTLY with it (overlapCdf)
       val cdfChanges =
         if (!changeFeed) None else Some(updateFeed(images, m))
-      val (w, cdfFiles) = overlapCdf(spark, table, cdfChanges) { relOpt =>
+      val (w, cdfFiles) = overlapCdf(spark, table, cdfChanges, dataRel) {
         writeData(enforcing(postImages(images, m), cons), table,
-          m.partitionBy.getOrElse(Seq.empty), relOpt)
+          m.partitionBy.getOrElse(Seq.empty), Some(dataRel))
       }
-      val gone = touched.map(_.rel).toSet
       // lost CAS: rebase onto a winner that left our touched files
       // alone (rebasable guarantees constraints are unchanged too, so
       // the guardedCons stance is preserved by construction)
-      publish(spark, table, w, onBaseOrRebase(m, gone)(p =>
-        swapped("update", p, gone, w).copy(cdf = cdfFiles,
-          constraints = guardedCons(table, Some(p), cons))))
-    }
-  }
-
-  /** UPDATE via DELETION VECTORS: the matched rows' old positions are
-    * vectored out of their files (no touched file is rewritten) and the
-    * updated post-image rows land in ONE fresh write — cost proportional
-    * to the rows UPDATED, not the files touched. A scattered 0.01%
-    * update of a 100 TB table moves KBs of positions plus the updated
-    * rows themselves, where the copy-on-write path rewrites every file
-    * that held a match. Same CAS loop, CDF pre/post pairs, and
-    * constraint enforcement (on the rewritten rows) as the rewrite
-    * path; files whose every live row matched are dropped outright
-    * (their entire content moved to the fresh write).
-    */
-  private def updateDv(spark: SparkSession, table: String, cond: Column,
-      set: Seq[(String, Column)], maxAttempts: Int,
-      changeFeed: Boolean): Long = {
-    val t = new Path(table)
-    optimistic(table, "update", maxAttempts) {
-      val m = manifest(spark, table)
-      if (m.files.isEmpty) return m.version
-      checkUpdate(table, m, set)
-      val tq = fs(spark, t).makeQualified(t)
-      // commit dir chosen BEFORE the find pass: the distributed pass
-      // writes the sidecars under it executor-side (one driver
-      // descriptor per touched file), the data write appends into it
-      val dataRel = newDataRel()
-      val plan = composeDvsDist(spark, t, tq, m, dataRel,
-        liveKeyed(spark, t, m, m.files)
-          .filter(coalesce(cond, lit(false)))
-          .select(col("__dv_k"), col("__dv_i")))
-      if (plan.touched.isEmpty) return m.version
-      // only the matched live rows: their post-images are the data write
-      val images = updateImages(readLive(spark, t, m, plan.touched), m, cond, set)
-        .filter(col("__hit"))
-      val cons = m.constraints.getOrElse(Map.empty)
-      // CDF pre/post pairs read the same snapshot rows as the post-image
-      // write, so both land concurrently under the commit's dir
-      val cdfChanges =
-        if (!changeFeed) None else Some(updateFeed(images, m))
-      val (w, cdfFiles) = overlapCdf(spark, table, cdfChanges, Some(dataRel)) { relOpt =>
-        writeData(enforcing(postImages(images, m), cons), table,
-          m.partitionBy.getOrElse(Seq.empty), relOpt)
-      }
-      // lost CAS: rebase onto a winner that left our touched files and
-      // their vectors alone (rebasable) instead of re-deriving
-      publish(spark, table, w, onBaseOrRebase(m, plan.touched.toSet)(p =>
-        swapped("update", p, plan.goneSet, w).copy(cdf = cdfFiles,
+      (w, onBaseOrRebase(m, f.touched.toSet)(p =>
+        swapped("update", p, f.gone, w).copy(cdf = cdfFiles,
           constraints = guardedCons(table, Some(p), cons),
-          dvs = Some(plan.dvsAgainst(p)))))
+          dvs = f.dvsAgainst(p))))
     }
   }
 
@@ -4592,9 +4463,9 @@ object TxLog {
     Written(dataRel.getOrElse(newDataRel()), Seq.empty, Seq.empty,
       schemaJson)
 
-  /** A fresh commit-private data dir name. DV-writing DML picks it
-    * BEFORE the find pass so the executor-written sidecars land under
-    * the same dir the data write and the abandon cleanup use.
+  /** A fresh commit-private data dir name. Row-level DML ([[dml]])
+    * picks it BEFORE the find pass so the executor-written sidecars land
+    * under the same dir the data write and the cleanups use.
     */
   private def newDataRel(): String = s"data/${java.util.UUID.randomUUID()}"
 
@@ -4649,6 +4520,68 @@ object TxLog {
     Iterator.fill(maxAttempts)(attempt).collectFirst { case Some(v) => v }
       .getOrElse(sys.error(s"$op on $table lost the commit race $maxAttempts " +
         "times (pathological write contention); re-run or serialize writers"))
+  }
+
+  /** The optimistic loop of a row-level DML statement ([[delete]],
+    * [[update]], [[merge]], [[mergeInto]], [[replaceWhere]]). Each
+    * attempt picks a fresh commit-private `data/<uuid>/` dir and hands
+    * it to `stage` — the find step ([[findTouched]]) writes deletion
+    * vectors under it, the data and change-feed writes land in it —
+    * which returns the written files and the manifest composer for
+    * [[publish]]; an attempt that commits nothing `return`s from the
+    * statement instead. If `stage` throws (a CHECK violation in the
+    * write, a cancelled job group), the dir is deleted before the
+    * exception leaves, once [[overlapCdf]] has drained its CDF job and
+    * every task of the attempt's jobs has ended ([[awaitTasks]]), so no
+    * write of the attempt is still landing in it. [[publish]] runs
+    * outside that guard: it abandons the dir itself on a lost race, and
+    * a post-commit hook can throw after the rename has landed, when the
+    * dir is committed data.
+    */
+  private def dml(spark: SparkSession, table: String, op: String,
+      maxAttempts: Int)(
+      stage: String => (Written, Option[Manifest] => Option[Attempt])): Long =
+    optimistic(table, op, maxAttempts) {
+      val dataRel = newDataRel()
+      val sc = spark.sparkContext
+      val tag = s"graft-dml-${dataRel.stripPrefix("data/")}"
+      sc.addJobTag(tag)
+      val (w, compose) =
+        try stage(dataRel)
+        catch { case e: Throwable
+            if !e.isInstanceOf[scala.util.control.ControlThrowable] =>
+          try {
+            awaitTasks(spark, tag)
+            val f = fs(spark, new Path(table))
+            f.delete(new Path(f.makeQualified(new Path(table)), dataRel), true)
+          } catch { case scala.util.control.NonFatal(d) => e.addSuppressed(d) }
+          throw e
+        } finally sc.removeJobTag(tag)
+      publish(spark, table, w, compose)
+    }
+
+  /** Wait, for at most a minute, until every job tagged `tag` has ended
+    * and none of its tasks has run for a quiet period. A failed or
+    * cancelled job returns to its caller before its killed tasks end,
+    * and a task that ends late can still create its output dirs. The
+    * status store learns of a job's start before any of its tasks
+    * launch, but a task launched while its job is being cancelled
+    * reports its start only after the job's end — the quiet period
+    * covers that gap.
+    */
+  private def awaitTasks(spark: SparkSession, tag: String): Unit = {
+    val st = spark.sparkContext.statusTracker
+    def busy: Boolean = st.getJobIdsForTag(tag).exists(id =>
+      st.getJobInfo(id).exists(j =>
+        j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+          j.stageIds.exists(s => st.getStageInfo(s).exists(_.numActiveTasks > 0))))
+    val quietNs = 200L * 1000 * 1000
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    var quietSince = System.nanoTime()
+    while (System.nanoTime() - quietSince < quietNs && System.nanoTime() < deadline) {
+      Thread.sleep(10)
+      if (busy) quietSince = System.nanoTime()
+    }
   }
 
   /** Compose `att` against exactly the snapshot `base` the attempt was
@@ -4736,20 +4669,17 @@ object TxLog {
     * frame reads only the parent snapshot's files (and a MERGE's
     * source), never the fresh write's output, so the two jobs are
     * independent, and each carries ~0.2 s of fixed write-command cost
-    * that otherwise serializes on the driver. Callers: copy-on-write
-    * [[delete]] and [[update]], `updateDv`, and both branches of the
-    * general [[mergeInto]]. Writers whose feed reads the fresh files
-    * (insert-only MERGE, `replaceWhere`, `overwritePartitions`) stay
-    * sequential and do not come here.
+    * that otherwise serializes on the driver. Callers: [[delete]],
+    * [[update]] and the general [[mergeInto]], in both write modes.
+    * Writers whose feed reads the fresh files (insert-only MERGE,
+    * `replaceWhere`, `overwritePartitions`) stay sequential and do not
+    * come here.
     *
-    * The commit-private `data/<uuid>/` dir is shared so the CDF lands
-    * under it (same abandonment unit): `dataRel` is one the caller
-    * already chose (the DV writers pick it before their find pass, for
-    * the sidecars), or a fresh one. `write` gets `Some(dir)` whenever
-    * the dir may already hold files, and appends into it. The data
-    * write's fresh-file listing excludes the `_cdf`/`_dv` subdirs, so a
-    * CDF file that lands first can never be mistaken for data. With no
-    * change feed, only `write` runs, given `dataRel` as is.
+    * Both land under the attempt's commit-private `dataRel` (same
+    * abandonment unit, [[dml]]): the CDF under `_cdf/`, while `write`
+    * appends into the dir. The data write's fresh-file listing excludes
+    * the `_cdf`/`_dv` subdirs, so a CDF file that lands first can never
+    * be mistaken for data. With no change feed, only `write` runs.
     *
     * The CDF job runs on [[cdfPool]] with the caller's thread-locals
     * captured and restored around it (`SQLExecution
@@ -4757,17 +4687,16 @@ object TxLog {
     * carries the caller's job group, so `cancelJobGroup` reaches it.
     */
   private[sources] def overlapCdf(spark: SparkSession, table: String,
-      changes: Option[DataFrame], dataRel: Option[String] = None)(
-      write: Option[String] => Written): (Written, Seq[String]) =
+      changes: Option[DataFrame], dataRel: String)(
+      write: => Written): (Written, Seq[String]) =
     changes match {
-      case None => (write(dataRel), Seq.empty)
+      case None => (write, Seq.empty)
       case Some(ch) =>
-        val rel = dataRel.getOrElse(newDataRel())
         val fut = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
           spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], cdfPool)(
-          writeCdf(spark, table, rel, ch))
+          writeCdf(spark, table, dataRel, ch))
         val w =
-          try write(Some(rel))
+          try write
           catch { case e: Throwable =>
             // let the CDF job drain before propagating, so abandon/retry
             // never races a write into the dir it is about to delete
@@ -4987,10 +4916,11 @@ object TxLog {
     val df = clusterOnWrite(mOpt, ren, aligned)
     val f = fs(spark, new Path(table))
     val t = f.makeQualified(new Path(table))
-    // a DV-writing DML pre-chooses the dir (its find pass already put
-    // sidecars under `<dataRel>/_dv/`) — append alongside them; the
-    // fresh-file listing below filters on `.parquet`, and the `_dv`
-    // underscore prefix keeps the sidecars invisible to any scan
+    // row-level DML pre-chooses the dir ([[dml]]; its find pass may
+    // already have put sidecars under `<dataRel>/_dv/`, its change feed
+    // may be landing under `_cdf/`) — append alongside them; the
+    // fresh-file listing below filters on `.parquet`, and the underscore
+    // prefixes keep those subdirs invisible to any scan
     val dataRel = dataRelOpt.getOrElse(newDataRel())
     val dataDir = new Path(t, dataRel)
     val writeMode = if (dataRelOpt.isDefined) "append" else "error"

@@ -16,9 +16,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 
-/** The job and plan shape of copy-on-write DML: a DELETE or UPDATE is
-  * its find pass plus its write (one job each, no shuffle), the MERGE
-  * find pass shuffles once, and the UPDATE change feed is one scan.
+/** The job and plan shape of row-level DML: a copy-on-write DELETE or
+  * UPDATE is its find pass plus its write (one job each, no shuffle),
+  * the deletion-vector and CDC MERGE job counts are pinned, the general
+  * MERGE find pass shuffles once, and the UPDATE change feed is one
+  * scan.
   */
 class DmlShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -74,6 +76,27 @@ class DmlShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(jobsOf(TxLog.delete(spark, t, expr("k % 10 = 3"))) == ((2, 0)))
     assert(jobsOf(TxLog.update(spark, t, expr("k % 10 = 4"),
       Seq("v" -> lit("u")))) == ((2, 0)))
+    assert(TxLog.read(spark, t).count() == 36L)
+    assert(TxLog.read(spark, t).where(col("v") === "u").count() == 4L)
+  }
+
+  test("DV DELETE and UPDATE, and CDC MERGE in both modes, keep their job shape") {
+    val changes = Seq((3L, "x", 1L, "U"), (99L, "y", 1L, "U")).toDF("k", "v", "n", "op")
+    def merge(dv: Boolean): (Int, Int) = {
+      val t = tmpTable(); seed(t)
+      jobsOf(TxLog.merge(spark, t, changes, Seq("k"), Seq(col("n")), "op",
+        deletionVectors = dv))
+    }
+    val t = tmpTable(); seed(t)
+    // the DV find aggregates positions per file: one shuffle
+    assert(jobsOf(TxLog.delete(spark, t, expr("k % 10 = 3"),
+      deletionVectors = true)) == ((2, 1)))
+    assert(jobsOf(TxLog.update(spark, t, expr("k % 10 = 4"),
+      Seq("v" -> lit("u")), deletionVectors = true)) == ((5, 1)))
+    // the copy-on-write find counts matches per file in its tasks; the
+    // shuffles left are the change batch's own (distinct keys, cdcApply)
+    assert(merge(dv = false) == ((7, 3)))
+    assert(merge(dv = true) == ((8, 4)))
     assert(TxLog.read(spark, t).count() == 36L)
     assert(TxLog.read(spark, t).where(col("v") === "u").count() == 4L)
   }

@@ -170,7 +170,7 @@ class TxLogHardeningSpec extends SparkSpec {
     @volatile var failure: Throwable = null
     @volatile var interrupted = false
     val caller = new Thread(() => {
-      try TxLog.overlapCdf(spark, tmpTable(), Some(changes)) { _ =>
+      try TxLog.overlapCdf(spark, tmpTable(), Some(changes), "data/drain") {
         throw new IllegalStateException("data write failed")
       }
       catch { case e: Throwable => failure = e }
