@@ -1,31 +1,22 @@
 package graft
 
-/** Opt-in driver-phase wall-clock accumulators (optimization-round
-  * measurement tooling, like [[Profile]]): attribute a lifecycle query's
-  * "outside jobs" time to the driver phase that spent it (write, stats,
-  * publish, find, SQL parse/plan). Zero overhead unless
-  * `GRAFT_DRIVER_TIMERS=1`; never on in the bench/verify path.
+/** Driver-phase wall-clock accumulators (measurement tooling, like
+  * [[Profile]]): attribute a lifecycle query's "outside jobs" time to
+  * the driver phase that spent it (write, stats, publish, find, SQL
+  * parse/plan). Always on: one `nanoTime` pair and one map merge per
+  * timed phase.
   */
 object DriverTimers {
-  val enabled: Boolean = sys.env.get("GRAFT_DRIVER_TIMERS").contains("1")
-
   private val acc = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]
 
   def time[T](name: String)(f: => T): T = {
-    if (!enabled) f
-    else {
-      val t0 = System.nanoTime()
-      try f
-      finally {
-        val dt = System.nanoTime() - t0
-        acc.merge(name, (dt, 1L),
-          (a, b) => (a._1 + b._1, a._2 + b._2))
-      }
-    }
+    val t0 = System.nanoTime()
+    try f
+    finally add(name, System.nanoTime() - t0)
   }
 
   def add(name: String, ns: Long): Unit =
-    if (enabled) acc.merge(name, (ns, 1L), (a, b) => (a._1 + b._1, a._2 + b._2))
+    acc.merge(name, (ns, 1L), (a, b) => (a._1 + b._1, a._2 + b._2))
 
   def reset(): Unit = acc.clear()
 

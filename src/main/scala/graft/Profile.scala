@@ -9,7 +9,9 @@ import scala.util.control.NonFatal
   * wall time, stage count, task count and shuffle bytes, so a query's cost
   * can be attributed to its constituent jobs (a lifecycle query runs many).
   * Timing methodology matches Bench.materialize (full-output toRdd foreach,
-  * CacheRegistry cleared per run). Usage:
+  * CacheRegistry cleared per run); prints the driver-phase timers
+  * ([[DriverTimers]]) after each pass. For hot frames, record a JFR
+  * profile instead (README, "Measuring"). Usage:
   * `SPARK_GRAFT_CPUS=32 runMain graft.Profile <sfDir> <key> [key ...]`
   */
 object Profile {
@@ -50,41 +52,6 @@ object Profile {
     }
   }
 
-  /** Poor-man's sampling profiler: every 20 ms, sample all live threads
-    * whose name marks them as Spark executor/task threads, count the
-    * topmost N frames. Prints the hottest frames per query.
-    */
-  final class Sampler extends Thread {
-    setDaemon(true)
-    @volatile var on = false
-    val counts = new scala.collection.mutable.HashMap[String, Int]
-    override def run(): Unit = {
-      while (true) {
-        if (on) {
-          val stacks = Thread.getAllStackTraces
-          stacks.forEach { (th, st) =>
-            if (th.getName.startsWith("Executor task launch") && st.nonEmpty) {
-              // skip park/wait frames — idle workers
-              val top = st.head.toString
-              if (!top.contains("Unsafe.park") && !top.contains("Object.wait")) {
-                val key = st.take(12).map(_.toString)
-                  .find(f => f.startsWith("graft.") || f.contains("TxLog") ||
-                    f.contains("parquet") || f.contains("Compressor") ||
-                    f.contains("zstd") || f.contains("Zstd"))
-                  .getOrElse(st.head.toString)
-                synchronized { counts(key) = counts.getOrElse(key, 0) + 1 }
-              }
-            }
-          }
-        }
-        Thread.sleep(20)
-      }
-    }
-    def reset(): Unit = synchronized { counts.clear() }
-    def top(n: Int): Seq[(String, Int)] =
-      synchronized { counts.toSeq.sortBy(-_._2).take(n) }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val keys = args.drop(1).toSeq
@@ -97,27 +64,20 @@ object Profile {
     // for every query execution — names the driver latency the job
     // listener cannot see. Accumulated via DriverTimers so it dumps with
     // the TxLog phase timers.
-    if (DriverTimers.enabled)
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          private def record(
-              qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-            qe.tracker.phases.foreach { case (phase, s) =>
-              DriverTimers.add(s"catalyst.$phase", (s.endTimeMs - s.startTimeMs) * 1000000L)
-            }
-          override def onSuccess(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              durationNs: Long): Unit = record(qe)
-          override def onFailure(funcName: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              exception: Exception): Unit = record(qe)
-        })
-    // opt-in: getAllStackTraces forces a safepoint per sample, which
-    // inflates and serializes the very jobs being measured — enable only
-    // when hunting for hot frames, not when reading job timings
-    val sample = sys.env.get("GRAFT_PROFILE_SAMPLE").contains("1")
-    val sampler = new Sampler
-    if (sample) sampler.start()
+    spark.listenerManager.register(
+      new org.apache.spark.sql.util.QueryExecutionListener {
+        private def record(
+            qe: org.apache.spark.sql.execution.QueryExecution): Unit =
+          qe.tracker.phases.foreach { case (phase, s) =>
+            DriverTimers.add(s"catalyst.$phase", (s.endTimeMs - s.startTimeMs) * 1000000L)
+          }
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit = record(qe)
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = record(qe)
+      })
     keys.foreach { k =>
       val fn = SparkEntry.queries(k)
       // warmup (untimed, like Bench's warmup pass)
@@ -127,11 +87,9 @@ object Profile {
         CacheRegistry.releaseAll(); spark.catalog.clearCache()
         rec.synchronized { rec.jobs.clear() }
         DriverTimers.reset()
-        sampler.reset(); sampler.on = true
         val t0 = System.nanoTime()
         materialize(fn(spark, sfDir))
         val wallMs = (System.nanoTime() - t0) / 1000000L
-        sampler.on = false
         // jobs may finish slightly after the action returns
         Thread.sleep(200)
         val js = rec.synchronized { rec.jobs.toVector }
@@ -139,9 +97,6 @@ object Profile {
         println(f"==== $k pass $pass: wall ${wallMs}ms, ${js.size} jobs ($jobMs ms in-job, ${wallMs - jobMs} ms outside)")
         js.foreach { j =>
           println(f"  job ${j.id}%4d ${j.ms}%6d ms  stages=${j.stages}%2d tasks=${j.tasks}%4d shufW=${j.shuffleWriteB}%9d  ${j.site.take(70)} ${j.desc.take(60)}")
-        }
-        sampler.top(12).foreach { case (f, n) =>
-          println(f"  hot $n%4d  ${f.take(130)}")
         }
         DriverTimers.dump()
       }

@@ -38,12 +38,10 @@ object BpeTrainer {
     * × ~100 B is ~100 MB of driver heap at the cap — the same budget a
     * broadcast join spends routinely; a true 100 TB-corpus vocabulary
     * (tens of millions of types) stays on the distributed path.
-    * Overridable via spark.graft.bpe.localVocabThreshold (0 disables).
-    * BpeTrainerSpec pins local ≡ distributed merge-for-merge.
+    * Var, not val: BpeTrainerSpec sets it to 0 (no local path) to pin
+    * local ≡ distributed merge-for-merge.
     */
-  private def localVocabThreshold(spark: org.apache.spark.sql.SparkSession): Int =
-    graft.GraftConf.int(spark.sessionState.conf,
-      "spark.graft.bpe.localVocabThreshold", 1000000)
+  private[graft] var localVocabThreshold: Int = 1000000
 
   /** Driver-side reference of one merge round over (syms, freq) rows:
     * count adjacent pairs weighted by freq, pick (max n, then lexical
@@ -107,8 +105,7 @@ object BpeTrainer {
   def train(words: DataFrame, numMerges: Int, minCount: Long = 2L)
       : Seq[(String, String)] = {
     require(numMerges >= 1, "numMerges must be >= 1")
-    val spark = words.sparkSession
-    val cap = localVocabThreshold(spark)
+    val cap = localVocabThreshold
     if (cap > 0) {
       val probe = words.select(col("word").cast("string"),
         col("freq").cast("long")).limit(cap + 1).collect()

@@ -80,7 +80,8 @@ import graft.sources.TxLogRelation
   * fixed point): executing the dim subplan inside a fixed-point batch
   * would re-fire on every iteration, and the injected filter needs no
   * further optimization — it is born fully pushed.
-  * Disable with `spark.graft.dynamicFilePruning = false`.
+  * Disable per session with Spark's own
+  * `spark.sql.optimizer.excludedRules = graft.plans.DynamicFilePruning`.
   */
 object DynamicFilePruning extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -94,17 +95,13 @@ object DynamicFilePruning extends Rule[LogicalPlan] with PredicateHelper {
     */
   @volatile private[graft] var lastTier: String = ""
 
-  private def enabled: Boolean =
-    graft.GraftConf.boolean(conf, "spark.graft.dynamicFilePruning", true)
-
-  private def maxKeys: Int =
-    graft.GraftConf.int(conf, "spark.graft.dynamicFilePruning.maxKeys", 1000)
-
-  private def summaryMaxKeys: Int = graft.GraftConf.int(conf,
-    "spark.graft.dynamicFilePruning.summaryMaxKeys", 100000)
-
-  private def maxRows: Int = graft.GraftConf.int(conf,
-    "spark.graft.dynamicFilePruning.maxRows", 1000000)
+  /** The tier and freeze caps of the scaladoc above. Vars, not vals:
+    * specs lower them to reach the InSet tier, the range tier and the
+    * freeze back-off on small dims.
+    */
+  private[graft] var maxKeys: Int = 1000
+  private[graft] var summaryMaxKeys: Int = 100000
+  private[graft] var maxRows: Int = 1000000
 
   private def dimLimitBytes: Long = {
     val t = conf.autoBroadcastJoinThreshold
@@ -267,7 +264,7 @@ object DynamicFilePruning extends Rule[LogicalPlan] with PredicateHelper {
     }
 
   def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled || plan.isStreaming) return plan
+    if (plan.isStreaming) return plan
     plan.transformUp {
       case j @ Join(left, right, jt, Some(cond), _)
           if (jt == Inner || jt == LeftSemi) && !j.isStreaming =>

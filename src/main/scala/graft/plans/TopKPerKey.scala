@@ -86,10 +86,8 @@ case class TopKPerKeyExec(
     // 64 MiB of retained row bytes or 2M retained rows per task —
     // comfortably inside a 4 GiB / 4-core executor even with JVM
     // per-entry overhead on top.
-    val maxBytes = graft.GraftConf.long(conf, "spark.graft.topk.maxRetainedBytes",
-      64L * 1024 * 1024)
-    val maxRows = graft.GraftConf.long(conf, "spark.graft.topk.maxRetainedRows",
-      2L * 1024 * 1024)
+    val maxBytes = TopKPerKey.maxRetainedBytes
+    val maxRows = TopKPerKey.maxRetainedRows
     child.execute().mapPartitions { iter =>
       val keyGen = UnsafeProjection.create(keyExprs, childOutput)
       val ord = RowOrdering.create(sortOrder, childOutput)
@@ -191,24 +189,25 @@ case class TopKPerKeyExec(
 }
 
 /** Plans [[TopKPerKeyNode]] into a partial + final [[TopKPerKeyExec]]
-  * pair (map-side combine before the exchange, exact reduce after), or
-  * just the final pass when `spark.graft.topk.partial=false`.
+  * pair: map-side combine before the exchange, exact reduce after.
   */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyNode(k, keys, order, child) =>
-      val usePartial = graft.GraftConf.boolean(
-        org.apache.spark.sql.internal.SQLConf.get, "spark.graft.topk.partial", true)
-      val planned = planLater(child)
-      val pre =
-        if (usePartial) TopKPerKeyExec(k, keys, order, planned, partial = true)
-        else planned
-      TopKPerKeyExec(k, keys, order, pre) :: Nil
+      val partial = TopKPerKeyExec(k, keys, order, planLater(child), partial = true)
+      TopKPerKeyExec(k, keys, order, partial) :: Nil
     case _ => Nil
   }
 }
 
 object TopKPerKey {
+
+  /** Per-task heap-state caps of [[TopKPerKeyExec]]: past either one a
+    * partition falls back to the sort-based pass. Vars, not vals: specs
+    * lower them to pin the fallback on small inputs.
+    */
+  private[graft] var maxRetainedBytes: Long = 64L * 1024 * 1024
+  private[graft] var maxRetainedRows: Long = 2L * 1024 * 1024
 
   /** Top `k` rows per key under `orderBy` (first-k in that sort order;
     * use `.desc` columns for largest-first). The session must carry

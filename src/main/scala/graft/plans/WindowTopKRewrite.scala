@@ -51,8 +51,7 @@ object WindowTopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * giant k means heaps approach full materialization anyway and the
     * sort-based shape is no worse.
     */
-  private def maxK: Int =
-    graft.GraftConf.int(conf, "spark.graft.topk.rewriteMaxK", 100000)
+  private val maxK = 100000
 
   private def limitFor(rn: ExprId, conjunct: Expression): Option[Int] =
     conjunct match {

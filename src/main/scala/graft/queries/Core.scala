@@ -640,8 +640,8 @@ object Core {
       // WindowTopKRewriteSpec), while the result stays the exact window
       // answer the oracle checks, rank column included. The rule is
       // installed at session build (GraftExtensions). Specs that need the
-      // PLAIN window plan as a reference disable it via
-      // spark.graft.topk.rewriteMaxK=0.
+      // PLAIN window plan as a reference exclude it through
+      // spark.sql.optimizer.excludedRules.
       val w = Window.partitionBy("user_id")
         .orderBy(col("value").desc, col("event_id"))
       ev(s, dir)

@@ -544,23 +544,25 @@ object TxLog {
     }
   }
 
+  /** Size gate of [[writeCensus]]: checkpoints of fewer live files
+    * write no census. Var, not val: specs lower it to 1 to pin the
+    * census on small tables.
+    */
+  private[graft] var censusMinFiles: Int = 1000
+
   /** Write the PARQUET checkpoint census next to a just-published
     * checkpoint manifest — one columnar row per live file, under
-    * `_txlog/<v>.checkpoint.parquet/`. Size-gated
-    * (`spark.graft.checkpointCensus.minFiles`, default 1000): small
-    * tables gain nothing and must not pay a Spark write job per fifth
-    * commit. Best-effort by design: a failed or missing census never
-    * affects correctness ([[fileCensus]] falls back to the manifest),
-    * and the JSON record remains the commit gate. Spark's job-commit
-    * protocol makes the dir appear complete-or-absent (`_SUCCESS`
-    * checked on read). A malformed size gate is not a failed write: it
-    * fails the call loudly, after the commit has landed.
+    * `_txlog/<v>.checkpoint.parquet/`. Size-gated ([[censusMinFiles]]):
+    * small tables gain nothing and must not pay a Spark write job per
+    * fifth commit. Best-effort by design: a failed or missing census
+    * never affects correctness ([[fileCensus]] falls back to the
+    * manifest), and the JSON record remains the commit gate. Spark's
+    * job-commit protocol makes the dir appear complete-or-absent
+    * (`_SUCCESS` checked on read).
     */
   private def writeCensus(spark: SparkSession, t: Path, version: Long,
       m: Manifest): Unit = {
-    val minFiles = graft.GraftConf.int(spark.sessionState.conf,
-      "spark.graft.checkpointCensus.minFiles", 1000)
-    if (m.files.size >= minFiles) try {
+    if (m.files.size >= censusMinFiles) try {
       import spark.implicits._
       val rows = censusRowsOf(m)
       val parts = math.max(1, rows.size / 1000000)
@@ -1617,15 +1619,6 @@ object TxLog {
       .agg(coalesce(sum(col("__rows")), lit(0L)).as("n_rows"), aggs: _*)
   }
 
-  /** Per-file stats for the freshly written files under `dataDir`: ONE
-    * column-pruned aggregate pass grouped by file. Parquet is columnar,
-    * so this reads only the ≤[[maxStatsCols]] skippable columns'
-    * chunks, not the data — the write-side cost that buys read-side
-    * skipping. (A footer-only collector would be cheaper still; the
-    * parquet footers already hold these min/maxes. The aggregate keeps
-    * this engine on public DataFrame API and one code path for every
-    * filesystem.)
-    */
   /** Map each scanned absolute path back to its table-relative path by
     * its `data/<uuid>/…` suffix — the commit-uuid dir makes it unique,
     * and (unlike the bare file name) it stays unique under partition
@@ -1650,15 +1643,6 @@ object TxLog {
     statsScan(spark, schema, relFiles.map(new Path(table, _).toString),
       relMapper(relFiles)).map(e => e.copy(parts = partValuesOf(e.path)))
 
-  /** The shared per-file stats pass: ONE column-pruned aggregate over
-    * `absFiles` grouped by file, ≤[[maxStatsCols]] skippable columns.
-    * Zero skippable columns still yields per-file ROW COUNTS (a
-    * no-data-column parquet count is a footer-metadata scan): row
-    * counts must be complete for every table — delete's tier-2 and
-    * statsAggregate's count(*) both answer from them. `relOf` maps the
-    * scan's absolute paths back to manifest-relative entries
-    * (fresh-write and convert layouts differ).
-    */
   /** Boundary between the two footer-statistics execution shapes: at or
     * below this many files the footers are read on the driver's pool;
     * above it one distributed metadata job reads them on the executors
@@ -1675,7 +1659,7 @@ object TxLog {
     * its planning (~100–200 ms here, a second data pass at scale).
     *
     * EXACTNESS, not best-effort: the returned entries must be
-    * byte-identical to what [[statsScan]]'s aggregate would produce
+    * byte-identical to what [[aggregateStats]] would produce
     * (these strings feed the oracle-checked q105/q106 outputs and the
     * skipping comparisons), so every min/max is decoded to the same
     * Catalyst value the scan would aggregate and rendered through the
@@ -1706,8 +1690,6 @@ object TxLog {
   private def footerStats(spark: SparkSession, schema: StructType,
       skippable: Array[StructField], absFiles: Seq[String],
       relOf: String => String): Option[Seq[FileEntry]] = {
-    if (!graft.GraftConf.boolean(spark.sessionState.conf, "spark.graft.stats.footer", true))
-      return None
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     // relOf is written for SCAN-reported spellings (URI-encoded); the
     // footer path hands it the caller's own abs strings — any exotic
@@ -1899,16 +1881,34 @@ object TxLog {
     } finally reader.close()
   }
 
+  /** The shared per-file stats pass over `absFiles`, ≤[[maxStatsCols]]
+    * skippable columns: the parquet footers when every shape is
+    * provably exact ([[footerStats]]; FooterStatsSpec pins
+    * byte-equality), else ONE column-pruned aggregate grouped by file.
+    * Zero skippable columns still yields per-file ROW COUNTS (a
+    * no-data-column parquet count is a footer-metadata scan): row
+    * counts must be complete for every table — delete's tier-2 and
+    * statsAggregate's count(*) both answer from them. `relOf` maps the
+    * scan's absolute paths back to manifest-relative entries
+    * (fresh-write and convert layouts differ).
+    */
   private def statsScan(spark: SparkSession, schema: StructType,
       absFiles: Seq[String], relOf: String => String,
-      statsCols: Int = maxStatsCols): Seq[FileEntry] = {
-    val skippable = schema.fields.filter(f => isSkippable(f.dataType))
+      statsCols: Int = maxStatsCols): Seq[FileEntry] =
+    footerStats(spark, schema, skippableOf(schema, statsCols), absFiles, relOf)
+      .getOrElse(aggregateStats(spark, schema, absFiles, relOf, statsCols))
+
+  private def skippableOf(schema: StructType, statsCols: Int): Array[StructField] =
+    schema.fields.filter(f => isSkippable(f.dataType))
       .take(statsCols.min(maxStatsCols).max(0))
-    // metadata-only fast path: footers already hold exactly these stats
-    // (falls back to the aggregate scan on ANY unprovable shape —
-    // footerStats scaladoc; FooterStatsSpec pins byte-equality)
-    footerStats(spark, schema, skippable, absFiles, relOf)
-      .foreach(entries => return entries)
+
+  /** The aggregate collector [[footerStats]] falls back to: one
+    * column-pruned scan of `absFiles` grouped by file.
+    */
+  private[sources] def aggregateStats(spark: SparkSession, schema: StructType,
+      absFiles: Seq[String], relOf: String => String,
+      statsCols: Int = maxStatsCols): Seq[FileEntry] = {
+    val skippable = skippableOf(schema, statsCols)
     val aggs = skippable.zipWithIndex.flatMap { case (f, i) =>
       val c = col(quoted(f.name))
       Seq(min(c).cast("string").as(s"__mn_$i"),
@@ -4534,9 +4534,9 @@ object TxLog {
     * exception leaves, once [[overlapCdf]] has drained its CDF job and
     * every task of the attempt's jobs has ended ([[awaitTasks]]), so no
     * write of the attempt is still landing in it. [[publish]] runs
-    * outside that guard: it abandons the dir itself on a lost race, and
-    * a post-commit hook can throw after the rename has landed, when the
-    * dir is committed data.
+    * outside that guard: it deletes the dir itself on a lost race or a
+    * throw before its rename lands, and a post-commit hook can throw
+    * after the rename has landed, when the dir is committed data.
     */
   private def dml(spark: SparkSession, table: String, op: String,
       maxAttempts: Int)(
@@ -5072,18 +5072,52 @@ object TxLog {
     * and retries with the SAME already-written data files — only the
     * metadata attempt repeats, never the data write. `compose` returning
     * None abandons the commit (CAS failure / idempotent skip): the
-    * orphaned data directory is deleted and None is returned.
+    * orphaned data directory is deleted and None is returned. A throw
+    * before the rename lands (a failed manifest write, the last lost
+    * race, [[casRaceHook]]) deletes the directory too, unless the
+    * latest manifest holds it (a lost ack), then rethrows. The
+    * post-commit hooks run outside that guard: once the rename has
+    * landed the directory is committed data.
     */
   private def publish(spark: SparkSession, table: String, w: Written,
-      compose: Option[Manifest] => Option[Attempt]): Option[Long] = {
-    casRaceHook()
-    graft.DriverTimers.time("publish")(publish0(spark, table, w, compose))
+      compose: Option[Manifest] => Option[Attempt]): Option[Long] =
+    graft.DriverTimers.time("publish") {
+      val f = fs(spark, new Path(table))
+      val t = f.makeQualified(new Path(table))
+      val landed =
+        try { casRaceHook(); casLoop(spark, table, f, t, w, compose) }
+        catch { case e: Throwable
+            if !e.isInstanceOf[scala.util.control.ControlThrowable] =>
+          try {
+            if (!latestVersion(spark, table)
+                .exists(v => holdsDir(readManifest(spark, t, v), w.dataRel)))
+              f.delete(new Path(t, w.dataRel), true)
+          } catch { case scala.util.control.NonFatal(d) => e.addSuppressed(d) }
+          throw e
+        }
+      landed.map { case (version, afterCommit) => afterCommit(); version }
+    }
+
+  /** Does `m` reference anything under the commit-private `dataRel`: a
+    * data file, a change-data file or a deletion-vector sidecar? The
+    * dir's name is unique to one commit attempt, so a manifest that
+    * references it proves that attempt landed.
+    */
+  private def holdsDir(m: Manifest, dataRel: String): Boolean = {
+    val under = (p: String) => p.startsWith(dataRel + "/")
+    m.files.exists(under) || m.cdf.exists(_.exists(under)) ||
+      m.dvs.exists(_.exists(d => under(d.dv)))
   }
 
-  private def publish0(spark: SparkSession, table: String, w: Written,
-      compose: Option[Manifest] => Option[Attempt]): Option[Long] = {
-    val f = fs(spark, new Path(table))
-    val t = f.makeQualified(new Path(table))
+  /** [[publish]]'s compose → manifest write → rename loop. Returns the
+    * landed version with the post-commit hooks still to run (none for a
+    * lost-ack success found on a retry), or None when `compose`
+    * abandoned the commit.
+    */
+  private def casLoop(spark: SparkSession, table: String,
+      f: org.apache.hadoop.fs.FileSystem,
+      t: Path, w: Written, compose: Option[Manifest] => Option[Attempt])
+      : Option[(Long, () => Unit)] = {
     f.mkdirs(logDir(t))
     val fc = FileContext.getFileContext(t.toUri, spark.sessionState.newHadoopConf())
     // did OUR rename land at `version`? Identified by this commit's
@@ -5092,26 +5126,20 @@ object TxLog {
     // client sees an IOException; blindly retrying such a commit would
     // re-compose on top of a parent that already contains it and
     // double-count every appended row).
-    def winner(version: Long): Boolean = {
-      val p = manifestPath(t, version)
-      f.exists(p) && readManifest(spark, t, version).files
-        .exists(_.startsWith(w.dataRel + "/"))
-    }
-    def abandon(): Option[Long] = {
-      f.delete(new Path(t, w.dataRel), true)
-      None
-    }
+    def winner(version: Long): Boolean =
+      f.exists(manifestPath(t, version)) &&
+        holdsDir(readManifest(spark, t, version), w.dataRel)
     var attempt = 0
     while (true) {
       attempt += 1
       val parent = latestVersion(spark, table).map(readManifest(spark, t, _))
       // a lost-ack success would appear here as our own data dir in the
       // parent — the commit is already published, return it
-      parent.filter(_.files.exists(_.startsWith(w.dataRel + "/")))
-        .foreach(p => return Some(p.version))
+      parent.filter(holdsDir(_, w.dataRel))
+        .foreach(p => return Some((p.version, () => ())))
       val att = compose(parent) match {
         case Some(a) => a
-        case None => return abandon()
+        case None => f.delete(new Path(t, w.dataRel), true); return None
       }
       val version = parent.map(_.version).getOrElse(0L) + 1
       val m0 = Manifest(version, att.action, att.files,
@@ -5192,9 +5220,9 @@ object TxLog {
             // else someone else owns `version` (or nothing landed): retry
             winner(version)
         }
-      if (landed) {
-        // commit is durable from here — hook failures surface loudly
-        // to the caller but can never lose or duplicate the commit
+      // commit is durable from here — hook failures surface loudly
+      // to the caller but can never lose or duplicate the commit
+      if (landed) return Some((version, () => {
         // seed the resolver cache — the snapshot we just proved exact
         snapshotCache.put(
           f.makeQualified(manifestPath(t, version)).toString, m)
@@ -5221,8 +5249,7 @@ object TxLog {
             && m.dvs.forall(_.isEmpty)) {
           generateSymlinkManifest(spark, table)
         }
-        return Some(version)
-      }
+      }))
     }
     sys.error("unreachable")
   }

@@ -18,4 +18,13 @@ trait SparkSpec extends AnyFunSuite {
       .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Run `body` with one of graft's optimizer rules switched off in the
+    * shared session, through Spark's own `excludedRules` setting.
+    */
+  def withoutRule[A](rule: org.apache.spark.sql.catalyst.rules.Rule[_])(body: => A): A = {
+    val key = org.apache.spark.sql.internal.SQLConf.OPTIMIZER_EXCLUDED_RULES.key
+    spark.conf.set(key, rule.ruleName)
+    try body finally spark.conf.unset(key)
+  }
 }

@@ -75,11 +75,12 @@ class BpeTrainerSpec extends SparkSpec {
       "low lower lowest slow slower slowest", "a ab abc abcd abcde")
     val wordsDf = freqs(corpus).toSeq.toDF("word", "freq")
     val local = BpeTrainer.train(wordsDf, numMerges = 20)
-    spark.conf.set("spark.graft.bpe.localVocabThreshold", "0")
+    val saved = BpeTrainer.localVocabThreshold
+    BpeTrainer.localVocabThreshold = 0
     try {
       val dist = BpeTrainer.train(wordsDf, numMerges = 20)
       assert(local == dist, s"\nlocal: $local\n dist: $dist")
-    } finally spark.conf.unset("spark.graft.bpe.localVocabThreshold")
+    } finally BpeTrainer.localVocabThreshold = saved
   }
 
   test("early stop when no pair reaches minCount; repeats merge greedily") {

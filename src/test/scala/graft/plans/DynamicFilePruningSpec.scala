@@ -20,6 +20,13 @@ class DynamicFilePruningSpec extends SparkSpec {
   private def tmpTable(): String =
     Files.createTempDirectory("graft-dfp").resolve("t").toString
 
+  /** `body` with the literal-IN tier capped at `n` keys. */
+  private def withMaxKeys[A](n: Int)(body: => A): A = {
+    val saved = DynamicFilePruning.maxKeys
+    DynamicFilePruning.maxKeys = n
+    try body finally DynamicFilePruning.maxKeys = saved
+  }
+
   /** Fact clustered on k: 8 files, each holding one contiguous k-range
     * of 0..799 — per-file min/max stats make IN-pruning exact.
     */
@@ -88,26 +95,26 @@ class DynamicFilePruningSpec extends SparkSpec {
     // (b) a dim past the FREEZE cap cannot be frozen into a
     // LocalRelation, and the rule backs off entirely — an unfrozen dim
     // could disagree with the collected key set at runtime
-    spark.conf.set("spark.graft.dynamicFilePruning.maxRows", "5")
+    val savedRows = DynamicFilePruning.maxRows
+    DynamicFilePruning.maxRows = 5
     try {
       val wide = (0L until 50L).toDF("dk").filter(col("dk") >= 0)
       TxLogRelation.lastScanFileCount = -1
       assert(fact.join(wide, fact("k") === wide("dk")).count() == 50L)
       assert(TxLogRelation.lastScanFileCount == 8,
         "an unfreezable dim must not prune")
-    } finally spark.conf.unset("spark.graft.dynamicFilePruning.maxRows")
+    } finally DynamicFilePruning.maxRows = savedRows
     // (c) left outer: fact rows are preserved — never pruned
     val dim = Seq(9L).toDF("dk").filter(col("dk") > 0)
     TxLogRelation.lastScanFileCount = -1
     assert(fact.join(dim, fact("k") === dim("dk"), "left").count() == 800L)
     assert(TxLogRelation.lastScanFileCount == 8, "outer join must not prune")
-    // (d) kill switch
-    spark.conf.set("spark.graft.dynamicFilePruning", "false")
-    try {
+    // (d) the rule excluded from the session
+    withoutRule(DynamicFilePruning) {
       TxLogRelation.lastScanFileCount = -1
       assert(fact.join(dim, fact("k") === dim("dk")).count() == 1L)
       assert(TxLogRelation.lastScanFileCount == 8)
-    } finally spark.conf.unset("spark.graft.dynamicFilePruning")
+    }
   }
 
   test("a non-deterministic dim never prunes (it executes twice)") {
@@ -141,8 +148,7 @@ class DynamicFilePruningSpec extends SparkSpec {
     // the single-node InSet pushes as sources.In and the one-sort
     // window prune keeps exactly the two covering files (a RANGE
     // summary alone would keep all eight)
-    spark.conf.set("spark.graft.dynamicFilePruning.maxKeys", "5")
-    try {
+    withMaxKeys(5) {
       val dim = (Seq(0L, 1L, 2L, 3L, 4L) ++ Seq(750L, 751L, 752L, 753L, 754L))
         .toDF("dk").filter(col("dk") >= 0)
       TxLogRelation.lastScanFileCount = -1
@@ -151,15 +157,15 @@ class DynamicFilePruningSpec extends SparkSpec {
       assert(DynamicFilePruning.lastTier == "set")
       assert(TxLogRelation.lastScanFileCount == 2,
         s"expected 2 of 8 fact files planned, got ${TxLogRelation.lastScanFileCount}")
-    } finally spark.conf.unset("spark.graft.dynamicFilePruning.maxKeys")
+    }
   }
 
   test("past the summary cap the rule falls to min/max range bounds") {
     val t = mkFact()
     val fact = spark.read.format("graft-txlog").load(t)
-    spark.conf.set("spark.graft.dynamicFilePruning.maxKeys", "2")
-    spark.conf.set("spark.graft.dynamicFilePruning.summaryMaxKeys", "5")
-    try {
+    val savedSummary = DynamicFilePruning.summaryMaxKeys
+    DynamicFilePruning.summaryMaxKeys = 5
+    try withMaxKeys(2) {
       // 50 keys > summaryMaxKeys=5 → injected [700, 749] range → the
       // one covering file; the join still filters rows exactly
       val dim = (700L until 750L).toDF("dk").filter(col("dk") >= 0)
@@ -169,10 +175,7 @@ class DynamicFilePruningSpec extends SparkSpec {
       assert(DynamicFilePruning.lastTier == "range")
       assert(TxLogRelation.lastScanFileCount == 1,
         s"expected 1 of 8 fact files planned, got ${TxLogRelation.lastScanFileCount}")
-    } finally {
-      spark.conf.unset("spark.graft.dynamicFilePruning.maxKeys")
-      spark.conf.unset("spark.graft.dynamicFilePruning.summaryMaxKeys")
-    }
+    } finally DynamicFilePruning.summaryMaxKeys = savedSummary
   }
 
   test("the dim is frozen at planning and executes exactly once") {
@@ -219,8 +222,7 @@ class DynamicFilePruningSpec extends SparkSpec {
       .toDF("k", "v").repartitionByRange(8, col("k")), t)
     TxLog.setBloomIndex(spark, t, Seq("k"))
     val fact = spark.read.format("graft-txlog").load(t)
-    spark.conf.set("spark.graft.dynamicFilePruning.maxKeys", "2")
-    try {
+    withMaxKeys(2) {
       val dim = Seq(1L, 3L, 5L).toDF("dk").filter(col("dk") >= 0)
       TxLogRelation.lastScanFileCount = -1
       DynamicFilePruning.lastTier = ""
@@ -228,7 +230,7 @@ class DynamicFilePruningSpec extends SparkSpec {
       assert(DynamicFilePruning.lastTier == "set")
       assert(TxLogRelation.lastScanFileCount == 0,
         s"bloom should reject all files, planned ${TxLogRelation.lastScanFileCount}")
-    } finally spark.conf.unset("spark.graft.dynamicFilePruning.maxKeys")
+    }
   }
 
   test("results are identical with pruning on and off (row-level truth)") {
@@ -237,10 +239,8 @@ class DynamicFilePruningSpec extends SparkSpec {
     val dim = (0 until 100).map(i => (i * 7L, i)).toDF("dk", "i")
       .filter(col("i") % 3 === 0)
     val on = fact.join(dim, fact("k") === dim("dk")).collect().toSet
-    spark.conf.set("spark.graft.dynamicFilePruning", "false")
-    val off =
-      try fact.join(dim, fact("k") === dim("dk")).collect().toSet
-      finally spark.conf.unset("spark.graft.dynamicFilePruning")
+    val off = withoutRule(DynamicFilePruning)(
+      fact.join(dim, fact("k") === dim("dk")).collect().toSet)
     assert(on == off && on.nonEmpty)
   }
 }

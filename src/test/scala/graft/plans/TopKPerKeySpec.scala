@@ -14,14 +14,11 @@ class TopKPerKeySpec extends SparkSpec {
   private val rnd = new Random(42L)
 
   /** Evaluate a window-formulation REFERENCE with the WindowTopKRewrite
-    * disabled (k-threshold 0): another suite may have installed the
-    * rewrite on the shared session, which would otherwise turn these
-    * differentials into operator-vs-operator tautologies.
+    * excluded: the shared session installs the rewrite, which would
+    * otherwise turn these differentials into operator-vs-operator
+    * tautologies.
     */
-  private def asPlainWindow[A](body: => A): A = {
-    spark.conf.set("spark.graft.topk.rewriteMaxK", "0")
-    try body finally spark.conf.unset("spark.graft.topk.rewriteMaxK")
-  }
+  private def asPlainWindow[A](body: => A): A = withoutRule(WindowTopKRewrite)(body)
 
   test("TopKPerKey equals the window row_number formulation on random data") {
     for (_ <- 1 to 3) {
@@ -93,8 +90,9 @@ class TopKPerKeySpec extends SparkSpec {
     * partition takes the external-sorter fallback path.
     */
   private def withTinySpillThreshold[A](body: => A): A = {
-    spark.conf.set("spark.graft.topk.maxRetainedRows", "4")
-    try body finally spark.conf.unset("spark.graft.topk.maxRetainedRows")
+    val saved = TopKPerKey.maxRetainedRows
+    TopKPerKey.maxRetainedRows = 4
+    try body finally TopKPerKey.maxRetainedRows = saved
   }
 
   test("sort-based fallback (tiny spill threshold) matches the window formulation") {
@@ -155,7 +153,8 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("byte-threshold fallback triggers and stays correct with wide rows") {
-    spark.conf.set("spark.graft.topk.maxRetainedBytes", "4096")
+    val saved = TopKPerKey.maxRetainedBytes
+    TopKPerKey.maxRetainedBytes = 4096
     try {
       val df = Seq.tabulate(300)(i => (i.toLong % 5, i, "x" * 200))
         .toDF("key", "seq", "pad")
@@ -167,7 +166,7 @@ class TopKPerKeySpec extends SparkSpec {
       val out = TopKPerKey(df, Seq(col("key")), Seq(col("seq").desc), k = 3)
         .select("key", "seq").as[(Long, Int)].collect().toSet
       assert(out == expected)
-    } finally spark.conf.unset("spark.graft.topk.maxRetainedBytes")
+    } finally TopKPerKey.maxRetainedBytes = saved
   }
 
   test("TopKPerKey plans as the custom exec with a single hash exchange") {

@@ -158,7 +158,8 @@ class TxSqlMaintenanceSpec extends SparkSpec {
 
   test("DRY RUN reports dropped versions' census dirs (reap parity)") {
     val (name, path) = freshTable()
-    spark.conf.set("spark.graft.checkpointCensus.minFiles", "1")
+    val saved = TxLog.censusMinFiles
+    TxLog.censusMinFiles = 1
     try {
       TxLog.overwrite(Seq((0L, "s", 0)).toDF("k", "v", "n"), path)
       // reach the 10th version, whose checkpoint writes a parquet census
@@ -176,7 +177,7 @@ class TxSqlMaintenanceSpec extends SparkSpec {
       assert(reaped == dry.size.toLong, "the reap deletes the dry list exactly")
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(path, censusRel)))
-    } finally spark.conf.unset("spark.graft.checkpointCensus.minFiles")
+    } finally TxLog.censusMinFiles = saved
   }
 
   test("COPY INTO ingests a landing dir idempotently from SQL") {

@@ -26,13 +26,10 @@ class WindowTopKRewriteSpec extends SparkSpec {
     df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  /** Evaluate `body` with the rewrite disabled (k-threshold forced to 0),
-    * yielding the plain window plan as the expected-result reference.
+  /** Evaluate `body` with the rewrite excluded, yielding the plain
+    * window plan as the expected-result reference.
     */
-  private def withoutRewrite[A](body: => A): A = {
-    spark.conf.set("spark.graft.topk.rewriteMaxK", "0")
-    try body finally spark.conf.unset("spark.graft.topk.rewriteMaxK")
-  }
+  private def withoutRewrite[A](body: => A): A = withoutRule(WindowTopKRewrite)(body)
 
   test("rewrite fires on the row_number <= k pattern and matches the window result") {
     val df = randomDf
@@ -101,23 +98,18 @@ class WindowTopKRewriteSpec extends SparkSpec {
   private def occurrences(s: String, sub: String): Int =
     s.sliding(sub.length).count(_ == sub)
 
-  test("partial pass plans below the exchange and is disabled by conf") {
+  test("partial pass plans below the exchange") {
     val df = randomDf
     val plan = TopKPerKey(df, Seq(col("key")), Seq(col("value"), col("id")), k = 3)
       .queryExecution.executedPlan.toString
     // partial + final passes, one exchange between them
     assert(occurrences(plan, "TopKPerKey") == 2, plan)
     assert(occurrences(plan, "Exchange") == 1, plan)
-    spark.conf.set("spark.graft.topk.partial", "false")
-    try {
-      val single = TopKPerKey(df, Seq(col("key")), Seq(col("value"), col("id")), k = 3)
-        .queryExecution.executedPlan.toString
-      assert(occurrences(single, "TopKPerKey") == 1, single)
-    } finally spark.conf.unset("spark.graft.topk.partial")
   }
 
   test("partial passthrough fallback (tiny threshold) stays exact") {
-    spark.conf.set("spark.graft.topk.maxRetainedRows", "4")
+    val saved = TopKPerKey.maxRetainedRows
+    TopKPerKey.maxRetainedRows = 4
     try {
       val df = randomDf
       val custom = TopKPerKey(df, Seq(col("key")),
@@ -129,7 +121,7 @@ class WindowTopKRewriteSpec extends SparkSpec {
           .select("key", "value", "id").as[(Long, Int, Long)].collect().toSet
       }
       assert(custom == viaWindow)
-    } finally spark.conf.unset("spark.graft.topk.maxRetainedRows")
+    } finally TopKPerKey.maxRetainedRows = saved
   }
 
   test("GraftExtensions wires the preCBO rule and planner strategy at session build") {

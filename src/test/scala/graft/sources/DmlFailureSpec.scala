@@ -36,8 +36,8 @@ object CancelGate {
 
 /** What a row-level DML statement leaves behind when it fails before it
   * publishes, in both write modes: a cancelled job group, a crash in
-  * the gap between the data write and the publish, and an UPDATE whose
-  * assignments are invalid.
+  * the gap between the data write and the publish (an append's too),
+  * and an UPDATE whose assignments are invalid.
   */
 class DmlFailureSpec extends SparkSpec {
   import spark.implicits._
@@ -141,7 +141,8 @@ class DmlFailureSpec extends SparkSpec {
           matched = Seq(TxLog.MergeUpdate(Map("v" -> expr("s.sv")))),
           notMatched = Seq(TxLog.MergeInsert(Map("k" -> expr("s.k"), "v" -> expr("s.sv")))),
           deletionVectors = dv, changeFeed = true)))
-    }
+    } :+ ("append" -> ((t: String) =>
+      TxLog.append(Seq((50L, "a", 500L)).toDF("k", "v", "n"), t)))
     statements.foreach { case (name, run) =>
       val t = tmpTable(); val twin = tmpTable()
       Seq(t, twin).foreach { x =>
@@ -151,6 +152,7 @@ class DmlFailureSpec extends SparkSpec {
       val v0 = TxLog.latestVersion(spark, t)
       val rows0 = rows(t)
       val feed0 = feed(t)
+      val dirs0 = dataDirs(t)
       TxLog.casRaceHook = () => {
         TxLog.casRaceHook = () => ()
         throw new IllegalStateException("crash before publish")
@@ -162,6 +164,8 @@ class DmlFailureSpec extends SparkSpec {
       assert(TxLog.latestVersion(spark, t) == v0, s"$name: a version was published")
       assert(rows(t) == rows0, name)
       assert(feed(t) == feed0, name)
+      // the attempt's data, change-feed and DV files went with its dir
+      assert(dataDirs(t) == dirs0, s"$name: the failed attempt left ${dataDirs(t) -- dirs0}")
       // the next statement on the table commits as if nothing had failed
       assert(run(t) == v0.get + 1, name)
       run(twin)

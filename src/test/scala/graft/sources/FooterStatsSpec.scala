@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.SparkSpec
 
@@ -10,10 +12,10 @@ import graft.SparkSpec
   * provably exact, falling back to the original aggregate scan
   * otherwise. The footer strings must be BYTE-IDENTICAL to the
   * aggregate-cast strings — they feed the oracle-checked q105/q106
-  * outputs and the min/max skipping comparisons — so this spec writes
-  * the same data under both collectors (spark.graft.stats.footer=false
-  * forces the scan) and compares the manifests' stats maps exactly,
-  * across the adversarial shapes: negative/exponent doubles, unicode
+  * outputs and the min/max skipping comparisons — so this spec runs the
+  * aggregate collector directly over the files a commit's footer
+  * collector read and compares the stats maps exactly, across the
+  * adversarial shapes: negative/exponent doubles, unicode
   * and empty strings, timestamps, dates, decimals, null mixes, an
   * all-null column, NaN and ±0.0 doubles (fallback territory), and a
   * heterogeneous convert (absent column = all-null).
@@ -23,28 +25,28 @@ class FooterStatsSpec extends SparkSpec {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-$tag").toString + "/t"
 
-  /** Write `df` as a fresh table under both collectors; return the two
-    * manifests' (rows, stats) per file path-suffix-normalized.
+  /** The (rows, stats) per file that `table`'s last commit stored, and
+    * the aggregate collector's over the same files, both in path order.
     */
-  private def bothWays(df: DataFrame): (Seq[(Long, Map[String, TxLog.ColStats])],
+  private def bothCollectors(table: String): (Seq[(Long, Map[String, TxLog.ColStats])],
       Seq[(Long, Map[String, TxLog.ColStats])]) = {
-    val a = tmp("fstats-on")
-    TxLog.overwrite(df, a)
-    val withFooter = TxLog.manifest(spark, a).stats.getOrElse(Seq.empty)
-      .sortBy(_.path).map(e => (e.rows, e.stats))
-    spark.conf.set("spark.graft.stats.footer", "false")
-    val b = try {
-      val p = tmp("fstats-off")
-      TxLog.overwrite(df, p)
-      TxLog.manifest(spark, p).stats.getOrElse(Seq.empty)
-        .sortBy(_.path).map(e => (e.rows, e.stats))
-    } finally spark.conf.unset("spark.graft.stats.footer")
-    (withFooter, b)
+    val m = TxLog.manifest(spark, table)
+    val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+    def relOf(scanned: String): String = {
+      val p = java.net.URLDecoder.decode(scanned, "UTF-8")
+      m.files.find(f => p.endsWith("/" + f)).getOrElse(sys.error(s"unlisted $scanned"))
+    }
+    val scanned = TxLog.aggregateStats(spark, schema,
+      m.files.map(f => new Path(table, f).toString), relOf)
+    def byPath(es: Seq[TxLog.FileEntry]) = es.sortBy(_.path).map(e => (e.rows, e.stats))
+    (byPath(m.stats.getOrElse(Seq.empty)), byPath(scanned))
   }
 
   private def assertSame(df: DataFrame): Unit = {
-    val (on, off) = bothWays(df)
-    assert(on == off, s"\nfooter: $on\n  scan: $off")
+    val t = tmp("fstats")
+    TxLog.overwrite(df, t)
+    val (footer, scan) = bothCollectors(t)
+    assert(footer == scan, s"\nfooter: $footer\n  scan: $scan")
   }
 
   test("numerics, strings, dates, timestamps, decimals: byte-equal") {
@@ -125,21 +127,16 @@ class FooterStatsSpec extends SparkSpec {
 
   test("convert with absent columns: all-null stats match the scan") {
     import spark.implicits._
-    def convertStats(dir: String): Seq[(Long, Map[String, TxLog.ColStats])] = {
-      Seq((1L, "x"), (2L, "y")).toDF("id", "s")
-        .write.parquet(dir + "/p1")
-      // second file lacks `s` entirely
-      Seq(Tuple1(9L), Tuple1(10L)).toDF("id")
-        .write.parquet(dir + "/p2")
-      TxLog.convert(spark, dir)
-      TxLog.manifest(spark, dir).stats.getOrElse(Seq.empty)
-        .map(e => (e.rows, e.stats))
-        .sortBy(_._2.get("id").flatMap(_.min))
-    }
-    val on = convertStats(tmp("fstats-cv-on"))
-    spark.conf.set("spark.graft.stats.footer", "false")
-    val off = try convertStats(tmp("fstats-cv-off"))
-      finally spark.conf.unset("spark.graft.stats.footer")
-    assert(on == off, s"\nfooter: $on\n  scan: $off")
+    val dir = tmp("fstats-cv")
+    Seq((1L, "x"), (2L, "y")).toDF("id", "s")
+      .write.parquet(dir + "/p1")
+    // second file lacks `s` entirely
+    Seq(Tuple1(9L), Tuple1(10L)).toDF("id")
+      .write.parquet(dir + "/p2")
+    TxLog.convert(spark, dir)
+    val (footer, scan) = bothCollectors(dir)
+    assert(footer.exists { case (rows, st) =>
+      st.get("s").exists(c => c.min.isEmpty && c.nulls == rows) }, footer)
+    assert(footer == scan, s"\nfooter: $footer\n  scan: $scan")
   }
 }

@@ -198,7 +198,8 @@ class TxCheckpointSpec extends SparkSpec {
 
   test("parquet checkpoint census: distributed file facts ≡ the manifest") {
     withInterval(2) {
-      spark.conf.set("spark.graft.checkpointCensus.minFiles", "1")
+      val saved = TxLog.censusMinFiles
+      TxLog.censusMinFiles = 1
       try {
         val t = tmpTable()
         TxLog.overwrite((0 until 40).map(i => (i.toLong, s"v$i"))
@@ -240,7 +241,7 @@ class TxCheckpointSpec extends SparkSpec {
         assert(!Files.exists(java.nio.file.Paths.get(
           s"$t/_txlog/" + f"${2L}%020d" + ".checkpoint.parquet")))
         assert(TxLog.fileCensus(spark, t).count() == m.files.size.toLong)
-      } finally spark.conf.unset("spark.graft.checkpointCensus.minFiles")
+      } finally TxLog.censusMinFiles = saved
     }
   }
 
