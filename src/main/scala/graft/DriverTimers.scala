@@ -2,9 +2,11 @@ package graft
 
 /** Driver-phase wall-clock accumulators (measurement tooling, like
   * [[Profile]]): attribute a lifecycle query's "outside jobs" time to
-  * the driver phase that spent it (write, stats, publish, find, SQL
-  * parse/plan). Always on: one `nanoTime` pair and one map merge per
-  * timed phase.
+  * the driver phase that spent it (write, stats, publish, post-commit
+  * hooks, find, SQL parse/plan). A dotted name is a part of the phase
+  * it extends (`writeData.job` runs inside `writeData`); `publishHooks`
+  * runs after `publish` and is not in it. Always on: one `nanoTime`
+  * pair and one map merge per timed phase.
   */
 object DriverTimers {
   private val acc = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]

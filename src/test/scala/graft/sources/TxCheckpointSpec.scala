@@ -13,8 +13,9 @@ import graft.SparkSpec
   * These specs pin (1) the on-disk cadence, (2) bit-exact resolution
   * across a mixed DML lifecycle by differential against an
   * every-version-checkpointed twin, (3) vacuum re-anchoring the kept
-  * range on a materialized checkpoint, and (4) the flat-commit-bytes
-  * property that is the point of the feature.
+  * range on a materialized checkpoint, (4) the flat-commit-bytes
+  * property that is the point of the feature, and (5) the
+  * `_last_checkpoint` pointer moving on the cadence only.
   */
 class TxCheckpointSpec extends SparkSpec {
   import spark.implicits._
@@ -279,6 +280,64 @@ class TxCheckpointSpec extends SparkSpec {
       TxLog.append(Seq((13L, "y")).toDF("k", "v"), t)
       assert(TxLog.read(spark, t).count() == 13L)
     }
+  }
+
+  test("_last_checkpoint moves on the cadence only, not on size-forced snapshots") {
+    assert(TxLog.checkpointInterval == 10, "this spec pins the default interval")
+    val t = tmpTable()
+    val lc = java.nio.file.Paths.get(s"$t/_txlog/_last_checkpoint")
+    val aside = Files.createTempDirectory("graft-ckpt-lc").resolve("lc")
+    // the pointer's bytes and mtime, or None while it is absent
+    def pointer(): Option[(String, java.nio.file.attribute.FileTime)] =
+      if (!Files.exists(lc)) None
+      else Some((new String(Files.readAllBytes(lc), "UTF-8"),
+        Files.getLastModifiedTime(lc)))
+    def latestIsExact(v: Long): Unit = {
+      assert(TxLog.latestVersion(spark, t).contains(v), s"v$v, pointer as left")
+      TxLog.clearSnapshotCache()
+      assert(TxLog.latestVersion(spark, t).contains(v), s"v$v, cold cache")
+      // a move keeps the pointer's mtime, so the next step still sees it
+      // exactly as the commits left it
+      val had = Files.exists(lc)
+      if (had) Files.move(lc, aside)
+      try assert(TxLog.latestVersion(spark, t).contains(v), s"v$v, no pointer")
+      finally if (had) Files.move(aside, lc)
+    }
+    // a 2-file table: rewriting one file (remove 1 + add 1) is no
+    // smaller than the 2-file snapshot, so every copy-on-write DML and
+    // compact below writes a full snapshot; appends stay deltas
+    TxLog.overwrite((1L to 20L).map(i => (i, s"r$i")).toDF("k", "v")
+      .repartition(2), t)
+    assert(TxLog.manifest(spark, t).files.size == 2)
+    latestIsExact(1L)
+    // v2..v13: delete, update, compact, append, three times over; each
+    // DML statement hits the base row keyed by its own version
+    def step(v: Long): (String, Long) = (v - 2) % 4 match {
+      case 0 => "delete" -> TxLog.delete(spark, t, col("k") === v)
+      case 1 => "update" -> TxLog.update(spark, t, col("k") === v,
+        Seq("v" -> org.apache.spark.sql.functions.lit("u")))
+      case 2 => "compact" -> TxLog.compact(spark, t)
+      case _ =>
+        TxLog.append(Seq((100L + v, "a")).toDF("k", "v"), t)
+        "append" -> TxLog.latestVersion(spark, t).get
+    }
+    (2L to 13L).foreach { v =>
+      val before = pointer()
+      val (op, landed) = step(v)
+      assert(landed == v, s"$op should commit v$v")
+      latestIsExact(v)
+      if (op == "append") assert(!TxLog.isCheckpointOnDisk(spark, t, v))
+      else assert(TxLog.isCheckpointOnDisk(spark, t, v),
+        s"$op at v$v should be a size-forced full snapshot")
+      if (v == 10L)
+        assert(pointer().map(_._1).contains("""{"version":10}"""),
+          s"$op at v10 is on the cadence and moves the pointer")
+      else assert(pointer() == before,
+        s"$op at v$v is off the cadence and must leave the pointer as it was")
+    }
+    // three deletes, three appends
+    TxLog.clearSnapshotCache()
+    assert(TxLog.read(spark, t).count() == 20L)
   }
 
   test("pre-checkpointing logs (all-full records, no pointer) read unchanged") {
